@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * query — joins included — runs unchanged against a 10×-scaled
   * dataset via `SPARK_GRAFT_SF_DIR=/tmp/bench10x runMain graft.Bench`.
   *
-  * Shift rules (the same realism reasoning as [[Sweep]]):
+  * Shift rules:
   *  - every per-copy id shifts by `i × 5e6` — fact/dim joins
   *    (orders⋈customer, lineitem⋈part/supplier) stay 1:1 within a
   *    copy, so join fan-outs grow 10×, not 100×;

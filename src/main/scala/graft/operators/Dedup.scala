@@ -479,11 +479,12 @@ object Dedup {
     * where one page exists as 10⁵ crawl mirrors therefore costs the
     * LSH + verify stages exactly one row, and the only
     * multiplicity-quadratic term left is the OUTPUT pair set itself
-    * (24-byte rows — and capped: see below). Measured (Sweep100, 500k
-    * docs where every text exists as 100 exact copies): the pre-r8
-    * per-copy form spilled >80 GB in the verify join at the default
-    * cap; this form runs the same corpus at the default cap with the
-    * verify join seeing 5 000 distinct contents.
+    * (24-byte rows — and capped: see below). Measured
+    * (SWEEP100_r11/r12, 500k docs where every text exists as 100
+    * exact copies): the pre-r8 per-copy form spilled >80 GB in the
+    * verify join at the default cap; this form runs the same corpus
+    * at the default cap with the verify join seeing 5 000 distinct
+    * contents.
     *
     * Hot guard, now purely a PAIR-COUNT knob: a (band, band_hash)
     * bucket with w distinct contents still yields w²/2 rep pairs, and
@@ -789,24 +790,6 @@ object Dedup {
         graft.GraftFunctions.simhash_sig(col("th")).as("simhash"))
   }
 
-  /** Storage level for the clustering loop's cached frames (the
-    * oriented-pair / edge / label frames — the dedup family's big
-    * in-memory residents). Default MEMORY_AND_DISK; the system
-    * property `graft.dedup.cacheLevel=DISK_ONLY` flips the family to
-    * disk-resident caching — the r16 finding is that this chain is
-    * materialization-BOUND: under executor memory pressure (an
-    * everyday state at 100 TB, and what a throttled bench host
-    * simulates) MEMORY_AND_DISK caches of fact-scale frames compete
-    * with shuffle/exec memory, while DISK_ONLY turns every re-read
-    * into one sequential local-disk scan and leaves execution memory
-    * alone. STORAGEAUDIT_r17 records the A/B under a constrained
-    * heap; read per property, so a probe can flip arms in one JVM. */
-  private[graft] def clusterCacheLevel: org.apache.spark.storage.StorageLevel =
-    sys.props.get("graft.dedup.cacheLevel") match {
-      case Some("DISK_ONLY") => org.apache.spark.storage.StorageLevel.DISK_ONLY
-      case _ => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    }
-
   /** Connected components over near-dup pairs → (doc, canonical)
     * where canonical is the component's minimum id — the keep/drop
     * decision for near-dup groups (A~B, B~C ⇒ one survivor of
@@ -833,8 +816,9 @@ object Dedup {
     // The pair plan is evaluated ONCE (cached one-orientation frame,
     // mirrored from the cache) — the near-dup pair computation above
     // this is the expensive subtree, and the naive two-subtree union
-    // would run it twice before the edge cache fills.
-    val lvl = clusterCacheLevel
+    // would run it twice before the edge cache fills. The caches are
+    // MEMORY_AND_DISK: pair-map-sized frames, STORAGEAUDIT_r17.
+    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val oriented = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .persist(lvl)
     val edges = oriented
@@ -879,10 +863,8 @@ object Dedup {
       // dir get durability too via spark.checkpoint; local blocks are
       // enough for plan-depth control).
       val next =
-        if (iter % 5 == 0) {
-          if (reliableCheckpoint) nextPlan.checkpoint()
-          else nextPlan.localCheckpoint()
-        } else nextPlan.persist(lvl)
+        if (iter % 5 == 0) Ckpt(nextPlan, reliableCheckpoint)
+        else nextPlan.persist(lvl)
       live = next :: live
       labels = next.select(col("id"), col("label"))
       // r20 (guide §2.6 — fewer driver actions): the convergence probe

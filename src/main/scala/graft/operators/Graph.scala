@@ -12,18 +12,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Round-lineage truncation for the iterative operators. Default
-    * (`reliable = false`) is `localCheckpoint` — executor-local blocks,
-    * right for plan-depth control but lost with an executor, which on a
-    * 1000-executor cluster would kill a multi-round lineage mid-run.
-    * `reliable = true` switches every per-round materialization to
-    * `checkpoint()` (written to `spark.sparkContext.setCheckpointDir`,
-    * survives executor loss) — the same escape hatch as
-    * [[Dedup.clusterPairs]], output-identical (GraphSpec pins parity
-    * per operator). */
-  private def ckpt(df: DataFrame, reliable: Boolean): DataFrame =
-    if (reliable) df.checkpoint() else df.localCheckpoint()
-
   /** Fixed-iteration weighted PageRank in integer micro-units — the
     * importance ranking for link/transition graphs (crawl frontier
     * prioritization, event-flow hub detection), engine-exact: ranks
@@ -97,7 +85,7 @@ object Graph {
           case _ => 0L // no dangling nodes -> sum over empty = NULL
         }
       val obs0 = org.apache.spark.sql.Observation()
-      var pr = ckpt(nodesF.select(col("node"), lit(init).as("pr"),
+      var pr = Ckpt(nodesF.select(col("node"), lit(init).as("pr"),
           col("__has_out"))
         .observe(obs0, sum(when(!col("__has_out"), col("pr"))).as("dsum")),
         reliableCheckpoint)
@@ -107,7 +95,7 @@ object Graph {
           .select(col("dst").as("node"), expr("(pr * w) div w_out").as("c"))
           .groupBy(col("node")).agg(sum(col("c")).as("s"))
         val obs = org.apache.spark.sql.Observation()
-        pr = ckpt(nodesF.join(contrib, Seq("node"), "left")
+        pr = Ckpt(nodesF.join(contrib, Seq("node"), "left")
           .select(col("node"),
             expr(s"CAST($base AS BIGINT) + (CAST($dampBp AS BIGINT) * " +
               s"(coalesce(s, CAST(0 AS BIGINT)) + CAST($dsum AS BIGINT) " +
@@ -128,7 +116,7 @@ object Graph {
         val contrib = pr.join(ew, pr("node") === ew("src"))
           .select(col("dst").as("node"), expr("(pr * w) div w_out").as("c"))
           .groupBy(col("node")).agg(sum(col("c")).as("s"))
-        pr = ckpt(nodes.join(contrib, Seq("node"), "left")
+        pr = Ckpt(nodes.join(contrib, Seq("node"), "left")
           .select(col("node"),
             expr(s"CAST($base AS BIGINT) + (CAST($dampBp AS BIGINT) * " +
               "coalesce(s, CAST(0 AS BIGINT))) div 10000").as("pr")),
@@ -220,14 +208,14 @@ object Graph {
                           reliableCheckpoint: Boolean = false): DataFrame = {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct().cache()
-    var dist = ckpt(seeds.select(col(seeds.columns.head).as("node")).distinct()
+    var dist = Ckpt(seeds.select(col(seeds.columns.head).as("node")).distinct()
       .withColumn("hops", lit(0L)), reliableCheckpoint)
     var frontier = dist
     var hop = 0
     var frontierRows = frontier.count()
     while (hop < maxHops && frontierRows > 0) {
       hop += 1
-      val fresh = ckpt(frontier.join(e, frontier("node") === e("src"))
+      val fresh = Ckpt(frontier.join(e, frontier("node") === e("src"))
         .select(col("dst").as("node")).distinct()
         .join(dist.select("node"), Seq("node"), "left_anti")
         .withColumn("hops", lit(hop.toLong)), reliableCheckpoint)
@@ -335,7 +323,7 @@ object Graph {
   def kcore(edges: DataFrame, srcCol: String, dstCol: String,
             k: Int = 3, rounds: Int = 4,
             reliableCheckpoint: Boolean = false): DataFrame = {
-    var cur = ckpt(edges
+    var cur = Ckpt(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
@@ -349,7 +337,7 @@ object Graph {
         .unionByName(cur.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
       val keep = deg.filter(col("deg") >= k).select(col("node"))
-      val next = ckpt(cur
+      val next = Ckpt(cur
         .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi"),
         reliableCheckpoint)
@@ -439,7 +427,7 @@ object Graph {
         .groupBy(col("node"))
         .agg(min(struct((-col("c")).as("k"), col("label").as("label"))).as("m"))
         .select(col("node"), col("m.label").as("label"))
-      lab = ckpt(lab, reliableCheckpoint)
+      lab = Ckpt(lab, reliableCheckpoint)
       trace += lab
     }
     nbr.unpersist()
@@ -731,7 +719,7 @@ object Graph {
     var auth = nodes.select(col("node"), lit(0L).as("auth"))
     for (_ <- 1 to iters) {
       val aobs = org.apache.spark.sql.Observation()
-      val araw = ckpt(hub.join(e, hub("node") === e("src"))
+      val araw = Ckpt(hub.join(e, hub("node") === e("src"))
         .select(col("dst").as("node"), (col("hub") * col("w")).as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("raw"))
         .observe(aobs, sum(col("raw")).as("tot")), reliableCheckpoint)
@@ -741,7 +729,7 @@ object Graph {
           expr(s"coalesce(raw, CAST(0 AS BIGINT)) * 1000000 " +
             s"div CAST($atot AS BIGINT)").as("auth"))
       val hobs = org.apache.spark.sql.Observation()
-      val hraw = ckpt(auth.join(e, auth("node") === e("dst"))
+      val hraw = Ckpt(auth.join(e, auth("node") === e("dst"))
         .select(col("src").as("node"), (col("auth") * col("w")).as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("raw"))
         .observe(hobs, sum(col("raw")).as("tot")), reliableCheckpoint)
@@ -751,7 +739,7 @@ object Graph {
           expr(s"coalesce(raw, CAST(0 AS BIGINT)) * 1000000 " +
             s"div CAST($htot AS BIGINT)").as("hub"))
     }
-    val out = ckpt(hub.join(auth, Seq("node")), reliableCheckpoint)
+    val out = Ckpt(hub.join(auth, Seq("node")), reliableCheckpoint)
     nodes.unpersist()
     e.unpersist()
     out

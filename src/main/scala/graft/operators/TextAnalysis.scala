@@ -735,7 +735,7 @@ object TextAnalysis {
     * PLAN SHAPE (r16, SPARSEPROBE r15→r16 adjudication): the pre-r15
     * form consumed the weighted-postings chain twice (probe +
     * candidate side) with the df-filter chain inside each — FOUR full
-    * tokenize scans per run (SparsePlan: reusedExchange=0, the classic
+    * tokenize scans per run (SPARSEPROBE_r15: reusedExchange=0, the classic
     * multi-consumer non-reuse). r15 eagerly localCheckpoint'd the df
     * table, which cut isolated scans 4 → 2 but (a) ran a full
     * tokenize+agg Spark job at PLAN-BUILD time as a side effect,

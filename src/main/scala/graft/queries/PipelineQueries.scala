@@ -1826,8 +1826,7 @@ object PipelineQueries {
     // 10× oracle corpus — the hash would diverge). Fixed-8 is the
     // VERIFICATION shape; production callers take the operator's
     // AutoPlanes default (SWEEPSTR_r13: fixed-8 = 31× for 100×
-    // corpus, occupancy-scaled = 15×), swept each round at the scaled
-    // operating points in SweepStretch.
+    // corpus, occupancy-scaled = 15×).
     "mutual_nn" -> { (s, d) =>
       val emb = Tables.embeddings(s, d)
       Similarity.mutualNearest(

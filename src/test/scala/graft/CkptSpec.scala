@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Ckpt, Dedup}
+import graft.operators.{Ckpt, Dedup, Graph}
 
 /** r20 pin for the session-conf-driven lineage-truncation helper
   * (r19 verdict item 2): the query-builder call sites that hardcoded
@@ -11,13 +11,14 @@ import graft.operators.{Ckpt, Dedup}
 class CkptSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def withReliable[T](body: String => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
+  private def reliableConf[T](body: => T): T = {
     spark.conf.set("graft.reliableCheckpoint", "true")
-    try body(dir)
+    try body
     finally spark.conf.unset("graft.reliableCheckpoint")
   }
+
+  private def withReliable[T](body: String => T): T =
+    withCheckpointDir(dir => reliableConf(body(dir)))
 
   test("Ckpt: default localCheckpoint and reliable checkpoint are " +
        "output-identical; reliable mode writes to the checkpoint dir") {
@@ -35,6 +36,21 @@ class CkptSpec extends SparkTestBase {
       out.collect().map(_.toSeq).toSet
     }
     assert(local == reliable && local.size == 50)
+  }
+
+  test("reliable mode with no checkpoint dir fails fast, naming the " +
+       "setting and the fix") {
+    val df = spark.range(5).toDF("id")
+    def check(e: IllegalStateException): Unit =
+      Seq("graft.reliableCheckpoint", "reliableCheckpoint = true",
+        "setCheckpointDir").foreach(w => assert(e.getMessage.contains(w), e))
+    // kcore's first act is a checkpoint, so its failure caches nothing
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
+    withoutCheckpointDir {
+      check(intercept[IllegalStateException](reliableConf(Ckpt(df))))
+      check(intercept[IllegalStateException](
+        Graph.kcore(edges, "src", "dst", reliableCheckpoint = true)))
+    }
   }
 
   test("reliable mode: bestRepresentative and the mmr/abc/peak keys " +

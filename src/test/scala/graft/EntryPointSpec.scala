@@ -1,0 +1,53 @@
+package graft
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Structural pin for the set of runnable entry points: the driver
+  * contract (Verify, Bench, StreamBench), the targeted bench and plan
+  * tools (BenchSubset, PlanDump, PlanShape) and the 10× mirror builder
+  * `tools/oracle10x.py` reads (TenX). A new one-shot measurement main
+  * has to replace one of these or live outside the tree; its committed
+  * artifact is the record. Pure file parse — no SparkSession.
+  */
+class EntryPointSpec extends AnyFunSuite {
+
+  private val Mods = """(?:(?:private|protected|final|case)(?:\[\w+\])?\s+)*"""
+  private val ObjectRe = s"^${Mods}object (\\w+)".r.unanchored
+  private val AppRe = s"^${Mods}object (\\w+)\\b.*\\bextends App\\b".r.unanchored
+
+  /** (file, object) for every top-level object declaring `def main`
+    * or extending `App` under src/main/scala. */
+  private lazy val mains: Seq[(String, String)] = {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    require(java.nio.file.Files.isDirectory(root), s"$root not found")
+    val files = {
+      val s = java.nio.file.Files.walk(root)
+      try s.iterator().asScala.map(_.toString).filter(_.endsWith(".scala")).toVector
+      finally s.close()
+    }
+    files.sorted.flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try {
+        var current: Option[String] = None
+        src.getLines().flatMap {
+          case AppRe(name) => current = Some(name); Some(f -> name)
+          case ObjectRe(name) => current = Some(name); None
+          case l if l.contains("def main(") => current.map(f -> _)
+          case _ => None
+        }.toVector
+      } finally src.close()
+    }
+  }
+
+  test("the entry points are exactly the seven kept mains") {
+    val want = Set("Bench", "BenchSubset", "StreamBench", "Verify", "TenX",
+      "PlanDump", "PlanShape")
+    val got = mains.map(_._2)
+    assert(got.distinct.size == got.size, s"duplicate mains: $mains")
+    assert(got.toSet == want,
+      s"unexpected: ${mains.filterNot(m => want(m._2)).mkString(", ")}; " +
+        s"missing: ${(want -- got).toSeq.sorted.mkString(", ")}")
+  }
+}

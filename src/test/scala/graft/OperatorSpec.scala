@@ -818,35 +818,35 @@ class OperatorSpec extends SparkTestBase {
     "(pageRank, hits, hopDistanceFrontier, kcore, labelProp)") {
     import spark.implicits._
     val G = graft.operators.Graph
-    val dir = java.nio.file.Files.createTempDirectory("graft_graph_ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    // one graph exercising every shape: two bridged triangles plus a
-    // weighted chain with a dangling sink and a pendant leaf
-    val edges = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 2L), (3L, 5L, 1L),
-      (5L, 6L, 4L), (6L, 7L, 1L), (7L, 5L, 2L), (7L, 9L, 1L), (9L, 10L, 1L))
-      .toDF("src", "dst", "w")
-    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.collect().map(_.toString).toSet
-    assert(rows(G.pageRank(edges, "src", "dst", "w", iters = 3,
-        reliableCheckpoint = true)) ==
-      rows(G.pageRank(edges, "src", "dst", "w", iters = 3)), "pageRank parity")
-    assert(rows(G.hits(edges, "src", "dst", "w", iters = 2,
-        reliableCheckpoint = true)) ==
-      rows(G.hits(edges, "src", "dst", "w", iters = 2)), "hits parity")
-    val seeds = Seq(1L).toDF("node")
-    assert(rows(G.hopDistanceFrontier(edges, "src", "dst", seeds, maxHops = 10,
-        reliableCheckpoint = true)) ==
-      rows(G.hopDistanceFrontier(edges, "src", "dst", seeds, maxHops = 10)),
-      "hopDistanceFrontier parity")
-    assert(rows(G.kcore(edges, "src", "dst", k = 2, rounds = 10,
-        reliableCheckpoint = true)) ==
-      rows(G.kcore(edges, "src", "dst", k = 2, rounds = 10)), "kcore parity")
-    assert(rows(G.labelProp(edges, "src", "dst", iters = 2,
-        reliableCheckpoint = true)) ==
-      rows(G.labelProp(edges, "src", "dst", iters = 2)), "labelProp parity")
-    // the reliable path actually wrote RDD checkpoints to the dir
-    val wrote = new java.io.File(dir).listFiles()
-    assert(wrote != null && wrote.nonEmpty, "no reliable checkpoint written")
+    withCheckpointDir { dir =>
+      // one graph exercising every shape: two bridged triangles plus a
+      // weighted chain with a dangling sink and a pendant leaf
+      val edges = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 2L), (3L, 5L, 1L),
+        (5L, 6L, 4L), (6L, 7L, 1L), (7L, 5L, 2L), (7L, 9L, 1L), (9L, 10L, 1L))
+        .toDF("src", "dst", "w")
+      def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+        df.collect().map(_.toString).toSet
+      assert(rows(G.pageRank(edges, "src", "dst", "w", iters = 3,
+          reliableCheckpoint = true)) ==
+        rows(G.pageRank(edges, "src", "dst", "w", iters = 3)), "pageRank parity")
+      assert(rows(G.hits(edges, "src", "dst", "w", iters = 2,
+          reliableCheckpoint = true)) ==
+        rows(G.hits(edges, "src", "dst", "w", iters = 2)), "hits parity")
+      val seeds = Seq(1L).toDF("node")
+      assert(rows(G.hopDistanceFrontier(edges, "src", "dst", seeds, maxHops = 10,
+          reliableCheckpoint = true)) ==
+        rows(G.hopDistanceFrontier(edges, "src", "dst", seeds, maxHops = 10)),
+        "hopDistanceFrontier parity")
+      assert(rows(G.kcore(edges, "src", "dst", k = 2, rounds = 10,
+          reliableCheckpoint = true)) ==
+        rows(G.kcore(edges, "src", "dst", k = 2, rounds = 10)), "kcore parity")
+      assert(rows(G.labelProp(edges, "src", "dst", iters = 2,
+          reliableCheckpoint = true)) ==
+        rows(G.labelProp(edges, "src", "dst", iters = 2)), "labelProp parity")
+      // the reliable path actually wrote RDD checkpoints to the dir
+      val wrote = new java.io.File(dir).listFiles()
+      assert(wrote != null && wrote.nonEmpty, "no reliable checkpoint written")
+    }
   }
 
   test("pareto_front equals the O(n²) dominance definition; front non-empty") {

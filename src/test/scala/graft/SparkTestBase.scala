@@ -8,6 +8,27 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   def sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `body` with the shared session's checkpoint dir pointed at a
+    * fresh temp dir (passed to `body`), then restores the previous
+    * setting and deletes the temp dir, so no spec leaks either. */
+  def withCheckpointDir[T](body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    try swapCheckpointDir(dir.toString)(body(dir.toString))
+    finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  /** Runs `body` with no checkpoint dir set, restoring it afterwards. */
+  def withoutCheckpointDir[T](body: => T): T = swapCheckpointDir(null)(body)
+
+  // setCheckpointDir(null) unsets the dir; a restored dir gets a fresh
+  // subdirectory of the old one, which is all callers depend on
+  private def swapCheckpointDir[T](dir: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getCheckpointDir
+    sc.setCheckpointDir(dir)
+    try body finally sc.setCheckpointDir(prev.orNull)
+  }
 }
 
 object SparkTestBase {
