@@ -800,18 +800,13 @@ object Dedup {
     * distributed); the min label travels one hop per round, so rounds
     * ≈ component diameter — near-dup components are small and dense
     * (stars/cliques of copies), so this converges in a handful of
-    * rounds at any corpus size, and lineage is truncated every 5
-    * rounds so even adversarial long-chain components keep bounded
-    * plan depth. The driver only checks a per-round convergence
-    * COUNT, never collects data.
-    *
-    * `reliableCheckpoint = true` switches the periodic lineage
-    * truncation from `localCheckpoint` (executor-local blocks — fine
-    * for plan-depth control, lost with an executor) to `checkpoint`
-    * (written to `spark.sparkContext.setCheckpointDir`, survives
-    * executor loss — the right mode for long cluster runs). */
+    * rounds at any corpus size. Each round is one [[Iterate]] job whose
+    * observed changed-row count is the convergence test, and every
+    * round truncates lineage, so even adversarial long-chain
+    * components keep bounded plan depth. The driver never collects
+    * data. */
   def clusterPairs(pairs: DataFrame, aCol: String, bCol: String,
-                   maxIter: Int = 20, reliableCheckpoint: Boolean = false): DataFrame = {
+                   maxIter: Int = 20): DataFrame = {
     // undirected edges + self-loops keep isolated propagation stable.
     // The pair plan is evaluated ONCE (cached one-orientation frame,
     // mirrored from the cache) — the near-dup pair computation above
@@ -827,83 +822,30 @@ object Dedup {
     // init = identity labels with the FIRST propagation round fused in
     // (label = min(self, neighbors)): star/pair components — the common
     // near-dup shape — then converge after a single verification round
-    var labels = edges.groupBy(col("src").as("id"))
+    val init = edges.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("nbr"))
       .select(col("id"), least(col("id"), col("nbr")).as("label"))
-      .persist(lvl)
-    var converged = false
-    var iter = 1
-    // every cached round frame not yet unpersisted — unpersist must
-    // target the frames actually persisted/checkpointed (unpersist on
-    // a projection of a cached plan is a cache-manager no-op and would
-    // leak one entry per round)
-    var live: List[DataFrame] = List(labels)
-    while (!converged && iter < maxIter) {
-      val neighborMin = edges
-        .join(labels.select(col("id").as("dst"), col("label").as("dst_label")),
-          "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("dst_label")).as("nbr_label"))
-      // `changed` rides INSIDE the round frame (r19, guide §2.4): the
-      // old form re-joined `next` against `labels` just to compare new
-      // vs old label — one extra id-keyed join (two exchanges + sorts)
-      // per round whose inputs the round join had ALREADY co-located.
-      // The labels join here carries the old label anyway, so the
-      // comparison is a free projected column.
-      val nextPlan = labels.join(neighborMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"),
-          (least(col("label"), coalesce(col("nbr_label"), col("label")))
-            =!= col("label")).as("__changed"))
-      // Lineage truncation: each round's plan chains the last round's
-      // joins, so a long-diameter component (rounds ≈ diameter) would
-      // stack O(rounds) joins of planning + lineage. localCheckpoint
-      // every 5 rounds materializes labels and restarts the plan from
-      // the stored partitions (cluster-mode callers with a checkpoint
-      // dir get durability too via spark.checkpoint; local blocks are
-      // enough for plan-depth control).
-      val next =
-        if (iter % 5 == 0) Ckpt(nextPlan, reliableCheckpoint)
-        else nextPlan.persist(lvl)
-      live = next :: live
-      labels = next.select(col("id"), col("label"))
-      // r20 (guide §2.6 — fewer driver actions): the convergence probe
-      // runs on ODD rounds (1, 3, 5, …) and on the budget's last
-      // round, not every round. Round 1 is probed because near-dup
-      // components are stars/cliques whose init (round 1 fused into
-      // the seed labels) already converged — probing it first keeps
-      // the common case at ONE action exactly like the probe-every-
-      // round form (an even cadence measured ~30% worse on the dedup
-      // family: it always executed one redundant round). Unprobed even
-      // rounds stay LAZY-persisted — the next probe's count
-      // materializes the two-round chain in ONE action, and the block
-      // manager's per-partition locks make the twice-consumed cached
-      // round compute once. Semantics preserved: min-label propagation
-      // is idempotent past its fixpoint, so "round r changed nothing"
-      // still exactly means converged, and a batched probe at worst
-      // executes one redundant (no-op) round. The probe is a FULL
-      // count over the changed rows (not the r19 filter+limit(1),
-      // whose executeTake could leave cache partitions unmaterialized
-      // behind an already-unpersisted lineage).
-      if (iter % 2 == 1 || iter == maxIter - 1) {
-        val changed = next.filter(col("__changed")).count()
-        live.tail.foreach(_.unpersist())
-        live = List(next)
-        converged = changed == 0
-      }
-      iter += 1
+    // the init counts as round 1; min-label propagation is idempotent
+    // past its fixpoint, so "a round changed nothing" means converged
+    val last = Iterate(Iterate.Round(init, 0L), maxIter - 1,
+        Some(count(when(col("__changed"), true))), (_, changed) => changed == 0) {
+      (prev, _) =>
+        val labels = prev.df.select(col("id"), col("label"))
+        val neighborMin = edges
+          .join(labels.select(col("id").as("dst"), col("label").as("dst_label")),
+            "dst")
+          .groupBy(col("src").as("id"))
+          .agg(min(col("dst_label")).as("nbr_label"))
+        // `changed` rides INSIDE the round frame: the labels join here
+        // carries the old label anyway, so the comparison is a free
+        // projected column, not a second id-keyed join
+        val label = least(col("label"), coalesce(col("nbr_label"), col("label")))
+        labels.join(neighborMin, Seq("id"), "left")
+          .select(col("id"), label.as("label"), (label =!= col("label")).as("__changed"))
     }
     oriented.unpersist()
     edges.unpersist()
-    // eagerly materialize the result and release the terminal round's
-    // cache entry (r19 ADVICE: the final cachedRound leaked one
-    // MEMORY_AND_DISK entry per invocation — the caller only sees this
-    // projection and could never unpersist it). One tiny job over
-    // blocks the probe count already materialized.
-    val out = Ckpt(labels.select(col("id").as("doc_id"),
-      col("label").as("canonical_id")))
-    live.foreach(_.unpersist())
-    out
+    last.df.select(col("id").as("doc_id"), col("label").as("canonical_id"))
   }
 
   /** Split-integrity AUDIT: how many near-dup pairs straddle folds of

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * propagation, so everything said there about distribution applies:
   * each round is one join shuffled on the source key plus one
   * aggregation shuffled on the destination key, no driver-side graph
-  * state beyond single scalars.
+  * state beyond single scalars. Every round loop runs on [[Iterate]]:
+  * one eager checkpoint job per round, its scalar observed on that job.
   */
 object Graph {
 
@@ -21,211 +22,108 @@ object Graph {
     * and a SQL oracle can replay the unrolled iterations.
     *
     * DANGLING MASS: nodes with no out-edges would leak their rank
-    * each round (the textbook simplification); with
-    * `conserveDangling` (default) their summed rank is redistributed
-    * uniformly — every node's inflow gains `dsum div n` before
-    * damping, so total mass is conserved up to integer-floor dust
-    * (≤ a few units per node per round; GraphSpec pins the
-    * conservation bound). The dangling sum is a one-row aggregate
-    * broadcast back — a scalar, never a driver-side collect. Set
-    * `conserveDangling = false` for the leaky classic form.
+    * each round (the textbook simplification); here their summed rank
+    * is redistributed uniformly — every node's inflow gains
+    * `dsum div n` before damping, so total mass is conserved up to
+    * integer-floor dust (≤ a few units per node per round; GraphSpec
+    * pins the conservation bound). The dangling sum is a scalar, never
+    * a driver-side collect.
     *
     * Fixed iteration count (not convergence-tested): rank mass moves
     * one hop per round exactly like the label propagation, and
     * production PageRank runs a fixed small round budget anyway.
     *
     * Scale: per round, ONE join of the rank frame against the
-    * edge+out-weight frame (shuffle on src), ONE dst-keyed
-    * aggregation with map-side combine, and (if conserving) one
-    * anti-join aggregate producing a single scalar row. The rank
-    * frame is nodes × 16 bytes. Zipf-headed in-degree (every real
-    * link graph) is the aggregation skew case — AQE's skew handling
-    * or pre-salting the hottest dst keys applies unchanged; plan
-    * depth grows linearly in rounds, so long budgets would checkpoint
-    * every ~5 rounds like clusterPairs (unnecessary at the fixed
-    * default of 3). The result is eagerly materialized
-    * (localCheckpoint) so the internal node/edge caches can be
-    * unpersisted before returning — callers of repeated invocations
-    * in a long-lived session don't accumulate dead cached blocks. */
+    * edge+out-weight frame (shuffle on src) and ONE dst-keyed
+    * aggregation with map-side combine. The rank frame is nodes × 16
+    * bytes. Zipf-headed in-degree (every real link graph) is the
+    * aggregation skew case — AQE's skew handling or pre-salting the
+    * hottest dst keys applies unchanged. Rounds run on [[Iterate]];
+    * the internal node/edge caches are unpersisted before returning,
+    * so repeated invocations in a long-lived session don't accumulate
+    * dead cached blocks. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               wCol: String, iters: Int = 3, dampBp: Int = 8500,
-               conserveDangling: Boolean = true,
-               reliableCheckpoint: Boolean = false): DataFrame = {
+               wCol: String, iters: Int = 3, dampBp: Int = 8500): DataFrame = {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
       col(wCol).cast("long").as("w"))
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct().cache()
-    val n = math.max(1L, nodes.count())
     val outW = e.groupBy(col("src")).agg(sum(col("w")).as("w_out"))
     val ew = e.join(outW, "src").cache()
+    // the flag `__has_out` rides the rank frame, so each round's
+    // Σ pr(dangling) is the observed metric of the round's own job and
+    // enters the next round's expression as an exact 64-bit literal
+    val nodes = e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node"))).distinct()
+      .join(ew.select(col("src").as("node")).distinct()
+        .withColumn("__has_out", lit(true)), Seq("node"), "left")
+      .select(col("node"), coalesce(col("__has_out"), lit(false))
+        .as("__has_out")).cache()
+    val n = math.max(1L, nodes.count())
     val init = 1000000L / n
     val base = ((10000L - dampBp) * init) / 10000L
-    // per-round lineage truncation (the hits() lesson, retrofitted):
-    // un-truncated lineage re-executes earlier rounds once per later
-    // consumer; also keeps plan depth constant in iters. The rank
-    // frame is nodes × 16 bytes.
-    if (conserveDangling) {
-      // r19 hoisted the round-invariant dangling SET out of the loop;
-      // r20 (guide §2.6 — fewer actions) folds the per-round dangling
-      // SUM into the round's own checkpoint action: the flag
-      // `__has_out` rides the rank frame, and each round's
-      // Σ pr(dangling) is an OBSERVED metric of the checkpoint job —
-      // the per-round broadcast-build job and its semi-join are gone.
-      // The sum is an exact 64-bit integer either way, so injecting it
-      // as a literal into the next round's expression is
-      // value-identical to the old broadcast column.
-      val nodesF = nodes.join(
-          ew.select(col("src").as("node")).distinct()
-            .withColumn("__has_out", lit(true)), Seq("node"), "left")
-        .select(col("node"), coalesce(col("__has_out"), lit(false))
-          .as("__has_out")).cache()
-      def dsumOf(o: org.apache.spark.sql.Observation): Long =
-        o.get.get("dsum") match {
-          case Some(v: Long) => v
-          case _ => 0L // no dangling nodes -> sum over empty = NULL
-        }
-      val obs0 = org.apache.spark.sql.Observation()
-      var pr = Ckpt(nodesF.select(col("node"), lit(init).as("pr"),
+    val dangling = Some(sum(when(!col("__has_out"), col("pr"))))
+    val first = Iterate.round(
+      nodes.select(col("node"), lit(init).as("pr"), col("__has_out")), dangling)
+    val last = Iterate(first, iters, dangling) { (prev, _) =>
+      val contrib = prev.df.join(ew, col("node") === col("src"))
+        .select(col("dst").as("node"), expr("(pr * w) div w_out").as("c"))
+        .groupBy(col("node")).agg(sum(col("c")).as("s"))
+      nodes.join(contrib, Seq("node"), "left")
+        .select(col("node"),
+          expr(s"CAST($base AS BIGINT) + (CAST($dampBp AS BIGINT) * " +
+            s"(coalesce(s, CAST(0 AS BIGINT)) + CAST(${prev.metric} AS BIGINT) " +
+            s"div $n)) div 10000").as("pr"),
           col("__has_out"))
-        .observe(obs0, sum(when(!col("__has_out"), col("pr"))).as("dsum")),
-        reliableCheckpoint)
-      var dsum = dsumOf(obs0)
-      for (_ <- 1 to iters) {
-        val contrib = pr.join(ew, pr("node") === ew("src"))
-          .select(col("dst").as("node"), expr("(pr * w) div w_out").as("c"))
-          .groupBy(col("node")).agg(sum(col("c")).as("s"))
-        val obs = org.apache.spark.sql.Observation()
-        pr = Ckpt(nodesF.join(contrib, Seq("node"), "left")
-          .select(col("node"),
-            expr(s"CAST($base AS BIGINT) + (CAST($dampBp AS BIGINT) * " +
-              s"(coalesce(s, CAST(0 AS BIGINT)) + CAST($dsum AS BIGINT) " +
-              s"div $n)) div 10000").as("pr"),
-            col("__has_out"))
-          .observe(obs, sum(when(!col("__has_out"), col("pr"))).as("dsum")),
-          reliableCheckpoint)
-        dsum = dsumOf(obs)
-      }
-      // the returned frame is the final checkpoint minus the flag — a
-      // lazy projection over checkpoint blocks, safe after unpersist
-      val out = pr.select(col("node"), col("pr"))
-      nodes.unpersist(); ew.unpersist(); nodesF.unpersist()
-      out
-    } else {
-      var pr = nodes.select(col("node"), lit(init).as("pr"))
-      for (_ <- 1 to iters) {
-        val contrib = pr.join(ew, pr("node") === ew("src"))
-          .select(col("dst").as("node"), expr("(pr * w) div w_out").as("c"))
-          .groupBy(col("node")).agg(sum(col("c")).as("s"))
-        pr = Ckpt(nodes.join(contrib, Seq("node"), "left")
-          .select(col("node"),
-            expr(s"CAST($base AS BIGINT) + (CAST($dampBp AS BIGINT) * " +
-              "coalesce(s, CAST(0 AS BIGINT))) div 10000").as("pr")),
-          reliableCheckpoint)
-      }
-      nodes.unpersist()
-      ew.unpersist()
-      pr
     }
+    nodes.unpersist()
+    ew.unpersist()
+    last.df.select(col("node"), col("pr"))
   }
 
   /** Bounded-hop BFS: minimum hop distance from any seed node within
     * `maxHops`, unreached nodes absent from the output — reachability
     * labeling for link graphs (crawl-depth from seed hosts, blast
-    * radius from a flagged source).
+    * radius from a flagged source). Seeds is any single-column frame.
     *
-    * Each round joins the distance frame against the edge list and
-    * folds with a min-aggregation, so the label set stays exact under
-    * any execution order. The WHOLE discovered set re-expands every
-    * round — the simplest exact form, right for small fixed hop
-    * budgets over bounded alphabets (the B51 shape: hops ≤ 3, nodes =
-    * an event-type vocabulary). For deep traversals over open graphs
-    * use [[hopDistanceFrontier]], which joins only the
-    * newly-discovered shell per round. Seeds is any single-column
-    * frame. */
+    * Each round's join input is ONLY the frontier — the nodes first
+    * discovered in the previous round — so per-round edge work is
+    * O(frontier out-edges), not O(discovered set), and a 100-hop
+    * traversal over a 100 TB link graph does not re-expand hop-1
+    * nodes 99 times. BFS invariant: any node reachable through an
+    * already-discovered node was discovered at an earlier-or-equal
+    * hop, so expanding non-frontier nodes can never improve a
+    * distance — dropping them changes cost, not results.
+    *
+    * Each round is one [[Iterate]] job materializing the discovered
+    * set plus the fresh shell (the anti-join reads the whole set
+    * anyway, and the last round alone is then the result); the set's
+    * row count, observed on that job, grows by the shell size — so the
+    * loop EXITS EARLY when a round discovers nothing, and `maxHops` is
+    * a budget, not a forced cost. `onRound(hop, freshRows)` observes
+    * each round (specs assert frontier-only inputs through it;
+    * production callers can log traversal progress). */
   def hopDistance(edges: DataFrame, srcCol: String, dstCol: String,
-                  seeds: DataFrame, maxHops: Int = 3): DataFrame = {
+                  seeds: DataFrame, maxHops: Int = 20,
+                  onRound: (Int, Long) => Unit = (_, _) => ()): DataFrame = {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct().cache()
-    var dist = seeds.select(col(seeds.columns.head).as("node")).distinct()
-      .withColumn("hops", lit(0L))
-    val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    for (h <- 1 to maxHops) {
-      val next = dist.join(e, dist("node") === e("src"))
-        .select(col("dst").as("node"), (col("hops") + lit(1L)).as("hops"))
-      // r19 truncated each round eagerly (localCheckpoint — `dist`
-      // feeds the round twice, so untruncated lineage re-executed
-      // round r-1's subtree ~2× per later round). r20 (guide §2.6 —
-      // fewer actions): only every SECOND round is an eager
-      // checkpoint; the odd rounds in between are persisted LAZILY and
-      // materialize inside the next checkpoint's job (the block
-      // manager's per-partition locks make the twice-consumed cached
-      // round compute once). The cadence must stay bounded: because
-      // `dist` feeds each round twice, every un-truncated round
-      // DOUBLES the logical tree — an early r20 form that lazy-
-      // persisted all rounds built a 2^maxHops-node plan whose mere
-      // analysis/explain OOMed at maxHops=10. Depth ≤ 2 keeps ≤ 4
-      // subtree copies while halving the per-round actions. Same
-      // min-fold per round.
-      val folded = dist.unionByName(next)
-        .groupBy(col("node")).agg(min(col("hops")).as("hops"))
-      dist =
-        if (h % 2 == 0 || h == maxHops) folded.localCheckpoint()
-        else {
-          val p = folded
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          cached += p
-          p
-        }
-    }
-    cached.foreach(_.unpersist())
-    e.unpersist()
-    dist
-  }
-
-  /** Deep-traversal BFS: identical output contract to
-    * [[hopDistance]], but each round's join input is ONLY the
-    * frontier — the nodes first discovered in the previous round —
-    * so per-round work is O(frontier out-edges), not O(discovered
-    * set), and a 100-hop traversal over a 100 TB link graph does not
-    * re-expand hop-1 nodes 99 times. BFS invariant: any node
-    * reachable through an already-discovered node was discovered at
-    * an earlier-or-equal hop, so expanding non-frontier nodes can
-    * never improve a distance — dropping them changes cost, not
-    * results (GraphSpec pins equality with [[hopDistance]]).
-    *
-    * Each round's fresh shell is eagerly materialized
-    * (localCheckpoint — the lineage checkpoint; cluster callers
-    * needing durability swap in `checkpoint()` semantics upstream),
-    * which both truncates the per-round plan and yields the frontier
-    * size for free — the loop EXITS EARLY when a round discovers
-    * nothing, so `maxHops` is a budget, not a forced cost.
-    * `onRound(hop, frontierRows)` observes each round (specs assert
-    * frontier-only inputs through it; production callers can log
-    * traversal progress). */
-  def hopDistanceFrontier(edges: DataFrame, srcCol: String, dstCol: String,
-                          seeds: DataFrame, maxHops: Int = 20,
-                          onRound: (Int, Long) => Unit = (_, _) => (),
-                          reliableCheckpoint: Boolean = false): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().cache()
-    var dist = Ckpt(seeds.select(col(seeds.columns.head).as("node")).distinct()
-      .withColumn("hops", lit(0L)), reliableCheckpoint)
-    var frontier = dist
-    var hop = 0
-    var frontierRows = frontier.count()
-    while (hop < maxHops && frontierRows > 0) {
-      hop += 1
-      val fresh = Ckpt(frontier.join(e, frontier("node") === e("src"))
+    val rows = Some(count(lit(1)))
+    val first = Iterate.round(seeds.select(col(seeds.columns.head).as("node"))
+      .distinct().withColumn("hops", lit(0L)), rows)
+    var rounds = 0
+    val last = Iterate(first, maxHops, rows, { (n, n2) =>
+      rounds += 1
+      onRound(rounds, n2 - n)
+      n2 == n
+    }) { (prev, hop) =>
+      val fresh = prev.df.filter(col("hops") === hop - 1)
+        .join(e, col("node") === col("src"))
         .select(col("dst").as("node")).distinct()
-        .join(dist.select("node"), Seq("node"), "left_anti")
-        .withColumn("hops", lit(hop.toLong)), reliableCheckpoint)
-      frontierRows = fresh.count()
-      onRound(hop, frontierRows)
-      if (frontierRows > 0) dist = dist.unionByName(fresh)
-      frontier = fresh
+        .join(prev.df.select("node"), Seq("node"), "left_anti")
+        .withColumn("hops", lit(hop.toLong))
+      prev.df.unionByName(fresh)
     }
     e.unpersist()
-    dist
+    last.df
   }
 
   /** Per-node triangle participation counts on the UNDIRECTED simple
@@ -267,9 +165,7 @@ object Graph {
     * triangle counts against the degree frame) derives and shuffles
     * the edge-set distinct ONCE instead of once per operator. */
   def triangleCountsUnd(und: DataFrame): DataFrame = {
-    val deg = und.select(col("a").as("node"))
-      .unionByName(und.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+    val deg = degrees(und)
     // orient {a,b} from (deg,node)-smaller to larger; join the bounded
     // degree frame twice (node-keyed; broadcast when the vocabulary is
     // small, shuffle-keyed otherwise — Catalyst's call)
@@ -290,10 +186,9 @@ object Graph {
     val tri = o1.join(o2, Seq("f")).filter(col("v") < col("w"))
       .join(und, col("v") === und("a") && col("w") === und("b"))
       .select(col("f"), col("v"), col("w"))
-    tri
+    Ckpt(tri
       .select(explode(array(col("f"), col("v"), col("w"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
-      .localCheckpoint()
+      .groupBy(col("node")).agg(count(lit(1)).as("n_tri")))
   }
 
   /** Bounded-round k-core peeling on the undirected simple graph:
@@ -315,44 +210,26 @@ object Graph {
     * combined, node-keyed) and TWO semi-joins of the edge frame
     * against the surviving-node frame — all shuffles keyed on node
     * ids, the node frame is nodes × 8 bytes. Each round's survivor
-    * edge frame is eagerly materialized (localCheckpoint — the
-    * iterative-lineage convention of [[pageRank]]/[[hits]]), which
-    * also makes the early-exit edge count free. Real graphs shed the
-    * leaf tail in the first 1–2 rounds, so small budgets converge;
-    * the budget is a cost cap, not a correctness knob. */
+    * edge frame is one [[Iterate]] job whose observed edge count
+    * drives the early exit. Real graphs shed the leaf tail in the
+    * first 1–2 rounds, so small budgets converge; the budget is a
+    * cost cap, not a correctness knob. */
   def kcore(edges: DataFrame, srcCol: String, dstCol: String,
-            k: Int = 3, rounds: Int = 4,
-            reliableCheckpoint: Boolean = false): DataFrame = {
-    var cur = Ckpt(edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct(), reliableCheckpoint)
-    var m = cur.count()
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged && m > 0) {
-      r += 1
-      val deg = cur.select(col("a").as("node"))
-        .unionByName(cur.select(col("b").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      val keep = deg.filter(col("deg") >= k).select(col("node"))
-      val next = Ckpt(cur
-        .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
-        .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi"),
-        reliableCheckpoint)
-      val m2 = next.count()
-      converged = m2 == m
-      m = m2
-      cur = next
+            k: Int = 3, rounds: Int = 4): DataFrame = {
+    val edgeCount = Some(count(lit(1)))
+    val first = Iterate.round(undirect(edges, srcCol, dstCol), edgeCount)
+    val last = Iterate(first, rounds, edgeCount, (m, m2) => m2 == m || m2 == 0) {
+      (prev, _) =>
+        val keep = degrees(prev.df).filter(col("deg") >= k).select(col("node"))
+        prev.df
+          .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
+          .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
     }
     // output = degrees over the post-peel edge frame, no extra filter:
     // this is exactly what `rounds` unrolled peels yield, so the
     // early-exited engine and the fully-unrolled oracle agree whether
     // or not the budget converged
-    cur.select(col("a").as("node"))
-      .unionByName(cur.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+    degrees(last.df)
   }
 
   /** Fixed-round SYNCHRONOUS label propagation on the undirected
@@ -372,26 +249,25 @@ object Graph {
     * combined aggregations keyed on (node, label) then node, plus one
     * join of the 2-column label frame against the neighbor list
     * (shuffled on the neighbor key). No windows, no driver state;
-    * per-round frames are eagerly materialized (localCheckpoint — the
-    * iterative-lineage convention of [[pageRank]]/[[hits]]). Skewed
-    * degree is the usual aggregation-skew case (AQE/salting).
+    * each round is one [[Iterate]] job. Skewed degree is the usual
+    * aggregation-skew case (AQE/salting).
     * Fixed small round budget: label mass moves one hop per round,
     * and synchronous LPA is known to oscillate rather than converge —
     * production runs cap rounds anyway. */
   def labelProp(edges: DataFrame, srcCol: String, dstCol: String,
-                iters: Int = 2,
-                reliableCheckpoint: Boolean = false): DataFrame =
-    labelPropTrace(edges, srcCol, dstCol, iters, reliableCheckpoint).last
+                iters: Int = 2): DataFrame = {
+    val trace = labelPropTrace(edges, srcCol, dstCol, iters)
+    trace.init.foreach(Ckpt.release)
+    trace.last
+  }
 
   /** [[labelProp]] with every round's label frame returned (index 0 =
-    * round 1) — each round computed ONCE and localCheckpointed, so a
-    * caller comparing partitions across rounds (the modularity audit)
-    * pays no recomputation. */
+    * round 1) — each round computed ONCE, so a caller comparing
+    * partitions across rounds (the modularity audit) pays no
+    * recomputation. */
   def labelPropTrace(edges: DataFrame, srcCol: String, dstCol: String,
-                     iters: Int,
-                     reliableCheckpoint: Boolean = false): Seq[DataFrame] =
-    labelPropTraceUnd(undirect(edges, srcCol, dstCol), iters,
-      reliableCheckpoint)
+                     iters: Int): Seq[DataFrame] =
+    labelPropTraceUnd(undirect(edges, srcCol, dstCol), iters)
 
   /** The UNDIRECTED SIMPLE edge frame (a < b, no self-loops, distinct)
     * every graph operator here starts from — exposed so a caller
@@ -408,30 +284,34 @@ object Graph {
       .filter(col("a") =!= col("b"))
       .distinct()
 
+  /** (node, deg) over an [[undirect]] frame: both endpoints counted. */
+  private def degrees(und: DataFrame): DataFrame =
+    und.select(col("a").as("node"))
+      .unionByName(und.select(col("b").as("node")))
+      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+
   /** [[labelPropTrace]] over a PRE-BUILT undirected simple frame
     * (columns `a`, `b` — see [[undirect]]); persistence of `und` is
     * caller-owned. */
-  def labelPropTraceUnd(und: DataFrame, iters: Int,
-                        reliableCheckpoint: Boolean = false): Seq[DataFrame] = {
+  def labelPropTraceUnd(und: DataFrame, iters: Int): Seq[DataFrame] = {
     val nbr = und.select(col("a").as("node"), col("b").as("nbr"))
       .unionByName(und.select(col("b").as("node"), col("a").as("nbr")))
       .cache()
-    var lab = nbr.select(col("node")).distinct()
+    val init = nbr.select(col("node")).distinct()
       .select(col("node"), col("node").as("label"))
-    val trace = Vector.newBuilder[DataFrame]
-    for (_ <- 1 to iters) {
+    // each round's frame stays node-partitioned, so the next round and
+    // the modularity joins read it without a re-shuffle
+    val trace = Iterate.trace(init, iters) { (prev, _) =>
       // every node has >= 1 neighbor (it came from an edge), so the
       // inner join preserves the node set round to round
-      lab = nbr.join(lab.select(col("node").as("nbr"), col("label")), "nbr")
+      nbr.join(prev.select(col("node").as("nbr"), col("label")), "nbr")
         .groupBy(col("node"), col("label")).agg(count(lit(1)).as("c"))
         .groupBy(col("node"))
         .agg(min(struct((-col("c")).as("k"), col("label").as("label"))).as("m"))
         .select(col("node"), col("m.label").as("label"))
-      lab = Ckpt(lab, reliableCheckpoint)
-      trace += lab
     }
     nbr.unpersist()
-    trace.result()
+    trace
   }
 
   /** Per-community NEWMAN MODULARITY of a node-labeling over the
@@ -473,12 +353,12 @@ object Graph {
     * caller-owned, so a caller that already derived it for label
     * propagation shares ONE materialization across both operators
     * instead of re-shuffling the edge set into a second distinct. The
-    * output is eagerly materialized (localCheckpoint — it is the tiny
+    * output is eagerly materialized ([[Ckpt]] — it is the tiny
     * per-community result frame), so the caller may unpersist `und`
     * immediately after this returns. */
   def modularityRoundsUnd(und: DataFrame,
                           labelRounds: Seq[(Long, DataFrame)]): DataFrame =
-    modularityRoundsPlan(und, labelRounds).localCheckpoint()
+    Ckpt(modularityRoundsPlan(und, labelRounds))
 
   /** The un-materialized plan behind [[modularityRoundsUnd]] —
     * separate so PlanSpec can pin the shared-frame contract (every
@@ -487,9 +367,7 @@ object Graph {
   private[graft] def modularityRoundsPlan(und: DataFrame,
       labelRounds: Seq[(Long, DataFrame)]): DataFrame = {
     val mrow = und.agg(count(lit(1)).as("m"))
-    val deg = und.select(col("a").as("node"))
-      .unionByName(und.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+    val deg = degrees(und)
     labelRounds.map { case (round, labels) =>
       val lab = labels.select(col(labels.columns(0)).as("node"),
         col(labels.columns(1)).as("label"))
@@ -527,13 +405,8 @@ object Graph {
     * aggregation — no windows, nothing driver-side. */
   def assortativity(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    val deg = und.select(col("a").as("node"))
-      .unionByName(und.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+    val und = undirect(edges, srcCol, dstCol)
+    val deg = degrees(und)
     val pairs = und
       .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
       .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
@@ -579,19 +452,14 @@ object Graph {
     * nothing driver-side. */
   def commonNeighborJaccard(edges: DataFrame, srcCol: String, dstCol: String,
       maxApexDeg: Long, k: Int): DataFrame = {
-    // eager localCheckpoint (NOT cache+unpersist — a lazy cache that
-    // is unpersisted before the result materializes never populates,
-    // and the distinct recomputes for every consumer): the m×16-byte
-    // edge frame materializes once and feeds the degree agg plus both
-    // wedge sides, while the RESULT plan stays lazy so the top-k
-    // still plans as TakeOrderedAndProject (PlanSpec pins it)
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint()
-    val deg = und.select(col("a").as("node"))
-      .unionByName(und.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+    // eager checkpoint (NOT cache+unpersist — a lazy cache that is
+    // unpersisted before the result materializes never populates, and
+    // the distinct recomputes for every consumer): the m×16-byte edge
+    // frame materializes once and feeds the degree agg plus both wedge
+    // sides, while the RESULT plan stays lazy so the top-k still plans
+    // as TakeOrderedAndProject (PlanSpec pins it)
+    val und = Ckpt(undirect(edges, srcCol, dstCol))
+    val deg = degrees(und)
     // adjacency both directions, apexes over the cap dropped BEFORE
     // the self-join — the only stage whose cost is degree-quadratic
     val adj = und.select(col("a").as("w"), col("b").as("x"))
@@ -626,13 +494,8 @@ object Graph {
     * degrees. Deterministic top-k: (ra_ppm desc, common desc, u, v). */
   def resourceAllocation(edges: DataFrame, srcCol: String, dstCol: String,
       maxApexDeg: Long, k: Int): DataFrame = {
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint()
-    val deg = und.select(col("a").as("node"))
-      .unionByName(und.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+    val und = Ckpt(undirect(edges, srcCol, dstCol))
+    val deg = degrees(und)
     val adj = und.select(col("a").as("w"), col("b").as("x"))
       .unionByName(und.select(col("b").as("w"), col("a").as("x")))
       .join(deg.select(col("node").as("w"), col("deg")), "w")
@@ -678,70 +541,41 @@ object Graph {
     * Σ score·w ≤ 10⁶·Σw fits 63 bits for any real edge frame.
     *
     * Scale: per half-round, ONE join of the 16-byte score frame
-    * against the edge list (shuffle on the score key) and ONE
-    * map-side-combined aggregation on the opposite key; each L1 sum
-    * is a one-row aggregate broadcast back — never a driver collect.
-    * Skewed in-degree is the aggregation skew case (AQE / salting as
-    * with [[pageRank]]). Each half-round's score frame is eagerly
-    * materialized (localCheckpoint): the L1-sum broadcasts would
-    * otherwise each replay the ENTIRE upstream half-round chain when
-    * they materialize — four broadcasts deep, that is exponential-ish
-    * re-execution (measured 7s → sub-second on a 5-node graph) —
-    * and the checkpoint also keeps plan depth constant in `iters`.
-    * The score frames are nodes × 16 bytes, so the checkpoint cost
-    * is the half-round itself, paid exactly once. */
+    * against the edge list (shuffle on the score key), ONE
+    * map-side-combined aggregation on the opposite key and one
+    * node-keyed join back onto the previous scores. Skewed in-degree
+    * is the aggregation skew case (AQE / salting as with
+    * [[pageRank]]). Each half-round is one [[Iterate]] job whose
+    * observed Σraw renormalizes the next half-round as a literal —
+    * never a driver collect, and no half-round replays another. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-           wCol: String, iters: Int = 2,
-           reliableCheckpoint: Boolean = false): DataFrame = {
+           wCol: String, iters: Int = 2): DataFrame = {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
       col(wCol).cast("long").as("w")).cache()
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct().cache()
-    // r19 checkpointed each half-round's raw frame so its two
-    // consumers (L1-sum broadcast + renormalization join) read blocks
-    // instead of re-running the score⋈edges⋈agg pipeline. r20 (guide
-    // §2.6 — fewer actions): the L1 sum is now an OBSERVED metric of
-    // that same checkpoint job, injected as a literal into the
-    // renormalized frame — the per-half-round broadcast-build job is
-    // gone, and the renormalized auth/hub frames are cheap lazy
-    // projections over checkpoint blocks that no longer need their own
-    // checkpoints (each is consumed by at most the next half-round's
-    // checkpoint and the final join). Σraw is an exact 64-bit integer
-    // either way, so `div lit(tot)` is bit-identical to the old
-    // broadcast `div tot` column; the Σraw=0 floor (edgeless graph
-    // divides by 1, not 0) moves onto the driver literal unchanged.
-    def l1(o: org.apache.spark.sql.Observation): Long =
-      math.max(1L, o.get.get("tot") match {
-        case Some(v: Long) => v
-        case _ => 0L // empty raw frame -> sum = NULL
-      })
-    var hub = nodes.select(col("node"), lit(1000000L).as("hub"))
-    var auth = nodes.select(col("node"), lit(0L).as("auth"))
-    for (_ <- 1 to iters) {
-      val aobs = org.apache.spark.sql.Observation()
-      val araw = Ckpt(hub.join(e, hub("node") === e("src"))
-        .select(col("dst").as("node"), (col("hub") * col("w")).as("c"))
+    // a half-round frame is (node, raw, prev): this half-round's raw
+    // score and the previous half-round's renormalized score, so the
+    // last frame alone holds both final vectors
+    def score(r: Iterate.Round): Column =
+      expr(s"coalesce(raw, CAST(0 AS BIGINT)) * 1000000 " +
+        s"div CAST(${math.max(1L, r.metric)} AS BIGINT)")
+    val init = Iterate.Round(
+      nodes.select(col("node"), lit(1000000L).as("raw"), lit(0L).as("prev")),
+      1000000L)
+    val last = Iterate(init, 2 * iters, Some(sum(col("raw")))) { (prev, i) =>
+      // odd half-rounds push hub scores along edges into authorities,
+      // even ones pull authority scores back into hubs
+      val (from, to) = if (i % 2 == 1) ("src", "dst") else ("dst", "src")
+      val scored = prev.df.select(col("node"), score(prev).as("s"))
+      val raw = scored.join(e, col("node") === col(from))
+        .select(col(to).as("node"), (col("s") * col("w")).as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("raw"))
-        .observe(aobs, sum(col("raw")).as("tot")), reliableCheckpoint)
-      val atot = l1(aobs)
-      auth = nodes.join(araw, Seq("node"), "left")
-        .select(col("node"),
-          expr(s"coalesce(raw, CAST(0 AS BIGINT)) * 1000000 " +
-            s"div CAST($atot AS BIGINT)").as("auth"))
-      val hobs = org.apache.spark.sql.Observation()
-      val hraw = Ckpt(auth.join(e, auth("node") === e("dst"))
-        .select(col("src").as("node"), (col("auth") * col("w")).as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("raw"))
-        .observe(hobs, sum(col("raw")).as("tot")), reliableCheckpoint)
-      val htot = l1(hobs)
-      hub = nodes.join(hraw, Seq("node"), "left")
-        .select(col("node"),
-          expr(s"coalesce(raw, CAST(0 AS BIGINT)) * 1000000 " +
-            s"div CAST($htot AS BIGINT)").as("hub"))
+      scored.join(raw, Seq("node"), "left")
+        .select(col("node"), col("raw"), col("s").as("prev"))
     }
-    val out = Ckpt(hub.join(auth, Seq("node")), reliableCheckpoint)
     nodes.unpersist()
     e.unpersist()
-    out
+    last.df.select(col("node"), score(last).as("hub"), col("prev").as("auth"))
   }
 }

@@ -180,26 +180,22 @@ object Similarity {
         (dot(col("x.vv"), col("y.vv")) /
           (sqrt(dot(col("x.vv"), col("x.vv"))) *
             sqrt(dot(col("y.vv"), col("y.vv"))))).as("sim")))
-    // Per-round lineage truncation (r19, guide §1/§5 — the hits()
-    // lesson applied here): `next` references `picked` TWICE (the
-    // anti-join and the maxsim join), so without truncation round r's
-    // plan embeds ~2^(r-2) copies of round 2's join/window subtree and
-    // the final union re-executes the whole tower — measured 5.9 s
-    // FULL vs 0.5 s for the candidate pool at sf0.1 (OPTPROBE r19).
-    // Each round's output is a ≤ |queries|-row frame, so the eager
-    // localCheckpoint is a tiny job that keeps every later round's
-    // plan shallow; values are untouched (same deterministic
-    // row_number pick per round).
-    var picked = Ckpt(cand.filter(col("rn") === 1)
+    // Every round is one [[Iterate]] job: `next` reads the picked
+    // frame TWICE (the anti-join and the maxsim join), so without
+    // per-round truncation round r's plan embeds ~2^(r-2) copies of
+    // round 2's join/window subtree (measured 5.9 s FULL vs 0.5 s for
+    // the candidate pool at sf0.1, OPTPROBE r19). Each round adds
+    // ≤ |queries| rows, so its checkpoint is a tiny job.
+    val first = Iterate.round(cand.filter(col("rn") === 1)
       .select(col("query_id"), col("neighbor_id"), lit(1L).as("round")))
-    for (r <- 2 to pick) {
-      val prev = picked
+    val last = Iterate(first, pick - 1) { (prev, i) =>
+      val picked = prev.df
       val maxsim = ps
-        .join(prev.select(col("query_id"), col("neighbor_id").as("b")),
+        .join(picked.select(col("query_id"), col("neighbor_id").as("b")),
           Seq("query_id", "b"))
         .groupBy(col("query_id"), col("a")).agg(max(col("sim")).as("maxsim"))
       val next = cand
-        .join(prev.select(col("query_id"), col("neighbor_id")),
+        .join(picked.select(col("query_id"), col("neighbor_id")),
           Seq("query_id", "neighbor_id"), "left_anti")
         .join(maxsim.withColumnRenamed("a", "neighbor_id"),
           Seq("query_id", "neighbor_id"))
@@ -207,13 +203,14 @@ object Similarity {
         .withColumn("prn", row_number().over(Window.partitionBy(col("query_id"))
           .orderBy(col("score").desc, col("neighbor_id").asc)))
         .filter(col("prn") === 1)
-        .select(col("query_id"), col("neighbor_id"), lit(r.toLong).as("round"))
-      // picked (the next round's input) must contain ALL rounds so far:
-      // the anti-join excludes every already-picked id, not just the
-      // last round's
-      picked = Ckpt(picked.unionByName(next))
+        .select(col("query_id"), col("neighbor_id"), lit(i + 1L).as("round"))
+      // the round frame holds ALL picks so far: the anti-join excludes
+      // every already-picked id, not just the last round's
+      picked.unionByName(next)
     }
-    picked
+    Ckpt.release(cand)
+    Ckpt.release(ps)
+    last.df
   }
 
   /** Deterministic random hyperplanes: `planes(p)(i)` ~ U(-1, 1)

@@ -393,8 +393,8 @@ object AnalyticsQueries {
 
     // B51 — bounded-hop BFS on the same digraph: min hop distance
     // from the lexicographically-smallest event type within 3 hops
-    // (deterministic seed), unreached types absent. Min-fold per
-    // round → exact under any execution order.
+    // (deterministic seed), unreached types absent. Frontier-only
+    // rounds (Graph.hopDistance) → exact under any execution order.
     "graph_reach" -> { (s, d) =>
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts").asc, col("event_id").asc)
@@ -409,26 +409,24 @@ object AnalyticsQueries {
       graft.operators.Graph.hopDistance(edges, "src", "dst", seeds, maxHops = 3)
     },
 
-    // B53 — DEEP reachability via the frontier-delta BFS
-    // (Graph.hopDistanceFrontier) on a graph that actually has
-    // fan-out: the word-ADJACENCY graph of the documents corpus
-    // (distinct consecutive-token edges — thousands of nodes, not
-    // B51's event-type vocabulary), seeded at the lexicographically
+    // B53 — DEEP reachability via the same frontier-delta BFS
+    // (Graph.hopDistance) on a graph that actually has fan-out: the
+    // word-ADJACENCY graph of the documents corpus (distinct
+    // consecutive-token edges — thousands of nodes, not B51's
+    // event-type vocabulary), seeded at the lexicographically
     // smallest token. Each round joins ONLY the newly-discovered
-    // shell (localCheckpoint lineage, early exit on an empty
-    // frontier); output contract identical to hopDistance, so the
-    // oracle is the same unrolled min-fold SQL — value-verifying the
-    // frontier optimization end-to-end. Edges build in-scan
-    // (transform over the token array, no per-token shuffle);
-    // the only exchanges are the distinct and the per-round
-    // join+min-fold, all keyed on the term.
+    // shell (one checkpoint job per round, early exit on an empty
+    // frontier); the oracle is the unrolled whole-set min-fold SQL —
+    // value-verifying the frontier optimization end-to-end. Edges
+    // build in-scan (transform over the token array, no per-token
+    // shuffle); the only exchanges are the distinct and the per-round
+    // frontier join, distinct and anti-join, all keyed on the term.
     "graph_reach_deep" -> { (s, d) =>
       val edges = wordAdjacencyEdges(s, d)
       val nodes = edges.select(col("src").as("node"))
         .unionByName(edges.select(col("dst").as("node"))).distinct()
       val seeds = nodes.agg(min(col("node")).as("node"))
-      graft.operators.Graph.hopDistanceFrontier(edges, "src", "dst", seeds,
-        maxHops = 3)
+      graft.operators.Graph.hopDistance(edges, "src", "dst", seeds, maxHops = 3)
     },
 
     // B55 — per-node TRIANGLE participation on the (undirected view

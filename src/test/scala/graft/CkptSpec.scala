@@ -11,15 +11,6 @@ import graft.operators.{Ckpt, Dedup, Graph}
 class CkptSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def reliableConf[T](body: => T): T = {
-    spark.conf.set("graft.reliableCheckpoint", "true")
-    try body
-    finally spark.conf.unset("graft.reliableCheckpoint")
-  }
-
-  private def withReliable[T](body: String => T): T =
-    withCheckpointDir(dir => reliableConf(body(dir)))
-
   test("Ckpt: default localCheckpoint and reliable checkpoint are " +
        "output-identical; reliable mode writes to the checkpoint dir") {
     val df = spark.range(50).select(col("id"), (col("id") % 5).as("m"))
@@ -49,7 +40,7 @@ class CkptSpec extends SparkTestBase {
     withoutCheckpointDir {
       check(intercept[IllegalStateException](reliableConf(Ckpt(df))))
       check(intercept[IllegalStateException](
-        Graph.kcore(edges, "src", "dst", reliableCheckpoint = true)))
+        reliableConf(Graph.kcore(edges, "src", "dst"))))
     }
   }
 

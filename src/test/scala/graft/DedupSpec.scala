@@ -434,9 +434,8 @@ class DedupSpec extends SparkTestBase {
   test("clusterPairs reliable-checkpoint mode produces identical clusters") {
     import spark.implicits._
     val pairs = (0L until 20L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val reliable = withCheckpointDir { _ =>
-      Dedup.clusterPairs(pairs, "doc_a", "doc_b",
-          maxIter = 30, reliableCheckpoint = true)
+    val reliable = withReliable { _ =>
+      Dedup.clusterPairs(pairs, "doc_a", "doc_b", maxIter = 30)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
     assert(reliable.size == 21 && reliable.values.forall(_ == 0L))

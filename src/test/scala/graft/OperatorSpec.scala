@@ -608,7 +608,7 @@ class OperatorSpec extends SparkTestBase {
     assert(got(1L) > got(3L), "hub-fed node should outrank the leaf")
   }
 
-  test("pageRank conserves dangling mass; the leaky classic form loses it") {
+  test("pageRank conserves dangling mass") {
     import spark.implicits._
     // 2 and 3 have no out-edges: their rank would leak every round
     val edgeSeq = Seq((0L, 1L, 1L), (1L, 2L, 1L), (0L, 3L, 2L))
@@ -633,11 +633,6 @@ class OperatorSpec extends SparkTestBase {
     // conservation: total rank stays within integer-floor dust of 1e6
     val total = got.values.sum
     assert(total > 990000L && total <= 1000000L, s"mass not conserved: $total")
-    // the uncorrected form demonstrably leaks the dangling mass
-    val leakyTotal = graft.operators.Graph
-      .pageRank(df, "src", "dst", "w", iters = 3, conserveDangling = false)
-      .as[(Long, Long)].collect().map(_._2).sum
-    assert(leakyTotal < total - 100000L, s"leaky $leakyTotal vs conserved $total")
   }
 
   test("hits equals the driver-side integer recurrence; roles separate") {
@@ -746,20 +741,17 @@ class OperatorSpec extends SparkTestBase {
       .count() == 0L)
   }
 
-  test("hopDistanceFrontier equals hopDistance and joins only the frontier shell") {
+  test("hopDistance joins only the frontier shell and exits on an empty one") {
     import spark.implicits._
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (0L, 2L),
       (7L, 8L)).toDF("src", "dst")
     val seeds = Seq(0L).toDF("node")
     var shells = Vector.empty[(Int, Long)]
     val got = graft.operators.Graph
-      .hopDistanceFrontier(edges, "src", "dst", seeds, maxHops = 10,
+      .hopDistance(edges, "src", "dst", seeds, maxHops = 10,
         onRound = (h, c) => shells :+= (h, c))
       .as[(Long, Long)].collect().toMap
-    val want = graft.operators.Graph
-      .hopDistance(edges, "src", "dst", seeds, maxHops = 10)
-      .as[(Long, Long)].collect().toMap
-    assert(got == want && got == Map(0L -> 0L, 1L -> 1L, 2L -> 1L, 3L -> 2L, 4L -> 3L))
+    assert(got == Map(0L -> 0L, 1L -> 1L, 2L -> 1L, 3L -> 2L, 4L -> 3L), got)
     // frontier-only join inputs: per-round shells are {1,2}, {3}, {4},
     // then empty → early exit well before the 10-hop budget
     assert(shells == Vector((1, 2L), (2, 1L), (3, 1L), (4, 0L)), shells)
@@ -814,35 +806,33 @@ class OperatorSpec extends SparkTestBase {
     assert(r2 == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 3L, 7L -> 3L), r2)
   }
 
-  test("graph iteratives: reliable-checkpoint mode is output-identical " +
-    "(pageRank, hits, hopDistanceFrontier, kcore, labelProp)") {
+  test("graph operators: reliable-checkpoint mode is output-identical") {
     import spark.implicits._
     val G = graft.operators.Graph
-    withCheckpointDir { dir =>
-      // one graph exercising every shape: two bridged triangles plus a
-      // weighted chain with a dangling sink and a pendant leaf
-      val edges = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 2L), (3L, 5L, 1L),
-        (5L, 6L, 4L), (6L, 7L, 1L), (7L, 5L, 2L), (7L, 9L, 1L), (9L, 10L, 1L))
-        .toDF("src", "dst", "w")
-      def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-        df.collect().map(_.toString).toSet
-      assert(rows(G.pageRank(edges, "src", "dst", "w", iters = 3,
-          reliableCheckpoint = true)) ==
-        rows(G.pageRank(edges, "src", "dst", "w", iters = 3)), "pageRank parity")
-      assert(rows(G.hits(edges, "src", "dst", "w", iters = 2,
-          reliableCheckpoint = true)) ==
-        rows(G.hits(edges, "src", "dst", "w", iters = 2)), "hits parity")
-      val seeds = Seq(1L).toDF("node")
-      assert(rows(G.hopDistanceFrontier(edges, "src", "dst", seeds, maxHops = 10,
-          reliableCheckpoint = true)) ==
-        rows(G.hopDistanceFrontier(edges, "src", "dst", seeds, maxHops = 10)),
-        "hopDistanceFrontier parity")
-      assert(rows(G.kcore(edges, "src", "dst", k = 2, rounds = 10,
-          reliableCheckpoint = true)) ==
-        rows(G.kcore(edges, "src", "dst", k = 2, rounds = 10)), "kcore parity")
-      assert(rows(G.labelProp(edges, "src", "dst", iters = 2,
-          reliableCheckpoint = true)) ==
-        rows(G.labelProp(edges, "src", "dst", iters = 2)), "labelProp parity")
+    // one graph exercising every shape: two bridged triangles plus a
+    // weighted chain with a dangling sink and a pendant leaf
+    val edges = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 2L), (3L, 5L, 1L),
+      (5L, 6L, 4L), (6L, 7L, 1L), (7L, 5L, 2L), (7L, 9L, 1L), (9L, 10L, 1L))
+      .toDF("src", "dst", "w")
+    val seeds = Seq(1L).toDF("node")
+    val ops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "pageRank" -> (() => G.pageRank(edges, "src", "dst", "w", iters = 3)),
+      "hits" -> (() => G.hits(edges, "src", "dst", "w", iters = 2)),
+      "hopDistance" -> (() => G.hopDistance(edges, "src", "dst", seeds, maxHops = 10)),
+      "kcore" -> (() => G.kcore(edges, "src", "dst", k = 2, rounds = 10)),
+      "labelProp" -> (() => G.labelProp(edges, "src", "dst", iters = 2)),
+      "triangleCounts" -> (() => G.triangleCounts(edges, "src", "dst")),
+      "modularityRounds" -> (() => G.modularityRounds(edges, "src", "dst",
+        G.labelPropTrace(edges, "src", "dst", 2).zipWithIndex
+          .map { case (l, i) => (i + 1L) -> l })),
+      "commonNeighborJaccard" -> (() =>
+        G.commonNeighborJaccard(edges, "src", "dst", maxApexDeg = 3L, k = 5)))
+    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.collect().map(_.toString).toSet
+    val local = ops.map { case (name, op) => name -> rows(op()) }
+    withReliable { dir =>
+      for (((name, op), (_, want)) <- ops.zip(local))
+        assert(rows(op()) == want && want.nonEmpty, s"$name parity")
       // the reliable path actually wrote RDD checkpoints to the dir
       val wrote = new java.io.File(dir).listFiles()
       assert(wrote != null && wrote.nonEmpty, "no reliable checkpoint written")

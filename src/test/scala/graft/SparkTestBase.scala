@@ -18,6 +18,17 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
+  /** Runs `body` with `graft.reliableCheckpoint` on, then unsets it. */
+  def reliableConf[T](body: => T): T = {
+    spark.conf.set("graft.reliableCheckpoint", "true")
+    try body
+    finally spark.conf.unset("graft.reliableCheckpoint")
+  }
+
+  /** Runs `body` in reliable mode against a fresh checkpoint dir. */
+  def withReliable[T](body: String => T): T =
+    withCheckpointDir(dir => reliableConf(body(dir)))
+
   /** Runs `body` with no checkpoint dir set, restoring it afterwards. */
   def withoutCheckpointDir[T](body: => T): T = swapCheckpointDir(null)(body)
 
