@@ -4,13 +4,11 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import org.apache.spark.sql.catalyst.expressions.Literal
-
-import graft.functions.{Fingerprint64, MinHashSig, ParseSqdataTs, ReservoirSample, TopK}
-
 /** SparkSessionExtensions hook: injects graft's native functions into
   * the session's FunctionRegistry so they're available to pure-SQL
-  * users (`spark.sql("SELECT parse_sqdata_ts(...)")`).
+  * users (`spark.sql("SELECT parse_sqdata_ts(...)")`). The functions
+  * are [[GraftFunctions.natives]], the table [[GraftFunctions.register]]
+  * installs too.
   *
   * Wire up with:
   * {{{
@@ -20,37 +18,9 @@ import graft.functions.{Fingerprint64, MinHashSig, ParseSqdataTs, ReservoirSampl
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("parse_sqdata_ts"),
-      new ExpressionInfo(classOf[ParseSqdataTs].getName, "parse_sqdata_ts"),
-      exprs => ParseSqdataTs(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("fingerprint64"),
-      new ExpressionInfo(classOf[Fingerprint64].getName, "fingerprint64"),
-      exprs => Fingerprint64(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      exprs => MinHashSig(exprs.head,
-        exprs(1).asInstanceOf[Literal].value.asInstanceOf[Int])))
-    e.injectFunction((
-      FunctionIdentifier("reservoir_sample"),
-      new ExpressionInfo(classOf[ReservoirSample].getName, "reservoir_sample"),
-      exprs => ReservoirSample(exprs.head,
-        exprs(1).asInstanceOf[Literal].value.asInstanceOf[Int])))
-    e.injectFunction((
-      FunctionIdentifier("top_k"),
-      new ExpressionInfo(classOf[TopK].getName, "top_k"),
-      exprs => TopK(exprs.head,
-        exprs(1).asInstanceOf[Literal].value.asInstanceOf[Int])))
-    e.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[graft.functions.VecDot].getName, "vec_dot"),
-      exprs => graft.functions.VecDot(exprs.head, exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("vec_dist_sq"),
-      new ExpressionInfo(classOf[graft.functions.VecDistSq].getName, "vec_dist_sq"),
-      exprs => graft.functions.VecDistSq(exprs.head, exprs(1))))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftFunctions.natives.foreach { case (name, cls, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.call_function
 
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, Literal}
 
 import graft.functions.{Fingerprint64, GramMatrix, MinHashSig, MisraGries, ParseSqdataTs, ReservoirSample, SimHashSig, TopK, VecDistSq, VecDot}
 
@@ -15,38 +15,36 @@ import graft.functions.{Fingerprint64, GramMatrix, MinHashSig, MisraGries, Parse
   */
 object GraftFunctions {
 
+  /** The one native-function table: (name, expression class, builder).
+    * [[register]] installs it into a live session and
+    * [[GraftExtensions]] injects it at session build, so both surfaces
+    * resolve the same names. */
+  private[graft] val natives: Seq[(String, Class[_], Seq[Expression] => Expression)] = {
+    def intArg(e: Expression): Int = e.asInstanceOf[Literal].value.asInstanceOf[Int]
+    Seq(
+      ("parse_sqdata_ts", classOf[ParseSqdataTs], e => ParseSqdataTs(e.head)),
+      ("fingerprint64", classOf[Fingerprint64], e => Fingerprint64(e.head)),
+      ("minhash_sig", classOf[MinHashSig], e => MinHashSig(e.head, intArg(e(1)))),
+      ("simhash_sig", classOf[SimHashSig], e => SimHashSig(e.head)),
+      ("reservoir_sample", classOf[ReservoirSample],
+        e => ReservoirSample(e.head, intArg(e(1)))),
+      ("top_k", classOf[TopK], e => TopK(e.head, intArg(e(1)))),
+      ("gram_matrix", classOf[GramMatrix], e => GramMatrix(e.head)),
+      ("mg_sketch", classOf[MisraGries], e => MisraGries(e.head, intArg(e(1)))),
+      ("vec_dot", classOf[VecDot], e => VecDot(e.head, e(1))),
+      ("vec_dist_sq", classOf[VecDistSq], e => VecDistSq(e.head, e(1))),
+      // Spark's internal bloom-membership predicate (the one runtime
+      // row-level filtering plans), surfaced so a driver-built
+      // util.sketch.BloomFilter literal can prefilter a scan
+      ("bloom_might_contain", classOf[BloomFilterMightContain],
+        e => BloomFilterMightContain(e.head, e(1))))
+  }
+
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "parse_sqdata_ts", exprs => ParseSqdataTs(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "fingerprint64", exprs => Fingerprint64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "minhash_sig", exprs => MinHashSig(exprs.head,
-        exprs(1).asInstanceOf[Literal].value.asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash_sig", exprs => SimHashSig(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "reservoir_sample", exprs => ReservoirSample(exprs.head,
-        exprs(1).asInstanceOf[Literal].value.asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction(
-      "top_k", exprs => TopK(exprs.head,
-        exprs(1).asInstanceOf[Literal].value.asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction(
-      "gram_matrix", exprs => GramMatrix(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "mg_sketch", exprs => MisraGries(exprs.head,
-        exprs(1).asInstanceOf[Literal].value.asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "vec_dist_sq", exprs => VecDistSq(exprs.head, exprs(1)), "built-in")
-    // Spark's internal bloom-membership predicate (the one runtime
-    // row-level filtering plans), surfaced so a driver-built
-    // util.sketch.BloomFilter literal can prefilter a scan
-    reg.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      exprs => BloomFilterMightContain(exprs.head, exprs(1)), "built-in")
+    natives.foreach { case (name, _, build) =>
+      reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 
   /** `yyyyMMddHHmmss[f...]` digit string → timestamp (ref DateParser). */

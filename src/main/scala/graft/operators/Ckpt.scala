@@ -13,10 +13,13 @@ import org.apache.spark.sql.execution.LogicalRDD
   * Reliable mode switches to `checkpoint()` (written to
   * `spark.sparkContext.setCheckpointDir`, survives executor loss).
   * The SESSION conf `graft.reliableCheckpoint` (default false) is the
-  * one switch — no operator takes a per-call mode. Every [[Iterate]]
-  * round, every Graph operator and the query builders that call
-  * `Ckpt(df)` follow it. Output-identical either way — both forms
-  * eagerly materialize the same frame (CkptSpec pins it).
+  * one switch — no operator takes a per-call mode. Every eager
+  * checkpoint in the engine goes through here — each [[Iterate]]
+  * round, the Graph operators and all the query builders
+  * (EntryPointSpec pins it) — so all follow it; Similarity's lazy
+  * `localCheckpoint(false)` ANN stores are not eager and stay local.
+  * Output-identical either way — both forms eagerly materialize the
+  * same frame (CkptSpec pins it).
   */
 object Ckpt {
   /** Reliable mode with no checkpoint dir fails HERE, naming the

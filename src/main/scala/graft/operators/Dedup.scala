@@ -43,41 +43,22 @@ object Dedup {
     * afford w²/2 pairs for. */
   val DefaultMaxBucket: Int = 50
 
-  /** Policy for the exact-content collapse pre-pass of the MinHash
-    * LSH family ([[minhashLshFromSignatures]],
-    * [[minhashLshIncremental]]).
+  /** The one choice between the PLAIN and the COLLAPSED plan of the
+    * MinHash-LSH family ([[minhashLsh]], [[minhashLshFromSignatures]],
+    * [[minhashLshIncremental]], [[crossNearDupPairs]]): true when
+    * distinct-`key` count ≥ [[CopyFreeBp]] of rows, i.e. the frame is
+    * (nearly) copy-free and the plain plan runs.
     *
     * The collapse (see [[sigGroups]]) is what lets a mirror-heavy
     * corpus (one page × 10⁵ crawl copies) run the LSH + verify stages
     * over one row per DISTINCT content — but it costs two extra
     * id/content-keyed shuffles plus the member re-expansion joins,
     * pure overhead when duplicate multiplicity ≈ 1 (the common case
-    * outside mirror pathologies). `Auto` (the default) decides with a
-    * one-pass probe: `count` vs `approx_count_distinct` of a cheap
-    * content surrogate; below [[Collapse.autoThresholdBp]] distinct
-    * ratio the collapsed path runs, otherwise the plain path — the
-    * pre-collapse plan shape, zero extra shuffles. Both paths emit
-    * the same verified pair set below `maxBucket` (identical contents
-    * band identically, so the plain path still finds every copy
-    * pair); the collapse changes COST, not semantics. */
-  sealed trait Collapse
-  object Collapse {
-    /** Probe multiplicity, collapse only when copies abound. */
-    case object Auto extends Collapse
-    /** Always collapse (a corpus known to be mirror-heavy — skips the
-      * probe pass). */
-    case object Always extends Collapse
-    /** Never collapse (a corpus known copy-free — skips the probe). */
-    case object Never extends Collapse
-    /** Auto collapses when distinct-content/count < 90% — i.e. >~1.1
-      * mean copies per content. Below that the collapse's two extra
-      * shuffles cost more than the copies they would save, and the
-      * `approx_count_distinct` rsd (5%) stays well inside the margin. */
-    val autoThresholdBp: Int = 9000
-  }
-
-  /** One-pass multiplicity probe for [[Collapse.Auto]]: true when
-    * distinct-`key` count ≥ [[Collapse.autoThresholdBp]] of rows.
+    * outside mirror pathologies). Both plans emit the same verified
+    * pair set below `maxBucket` (identical contents band identically,
+    * so the plain plan still finds every copy pair); the choice changes
+    * COST, not semantics.
+    *
     * `key` is a cheap CONTENT SURROGATE, not the collapse key itself:
     * xxhash64(text) on the text path (no shingling), xxhash64(sig) on
     * the signature path (fixed numPerm×8 bytes — column-pruned from a
@@ -94,17 +75,8 @@ object Dedup {
     * reruns, the incremental loop, bench passes. Memoization is safe
     * precisely because the probe decides COST, never semantics: a
     * stale entry (same plan, mutated underlying files) can pick the
-    * slower path, not a wrong answer. Cache is bounded (cleared past
-    * [[ProbeCacheMax]] plans) and resettable via
-    * [[clearCollapseProbeCache]]. */
-  private val ProbeCacheMax = 10000
-  private val probeCache =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, java.lang.Boolean]()
-
-  /** Drop memoized Auto-probe decisions (e.g. after overwriting a
-    * signature store in place). */
-  def clearCollapseProbeCache(): Unit = probeCache.clear()
-
+    * slower plan, not a wrong answer. The cache is bounded (cleared
+    * past [[ProbeCacheMax]] plans). */
   private def multiplicityIsLow(frame: DataFrame, key: org.apache.spark.sql.Column): Boolean = {
     val probed = frame.select(key.as("k"))
     val planKey = probed.queryExecution.analyzed.canonicalized
@@ -112,17 +84,18 @@ object Dedup {
     probeCache.computeIfAbsent(planKey, { _ =>
       val r = probed.agg(count(lit(1)).as("n"), approx_count_distinct(col("k")).as("d")).head()
       val n = r.getLong(0)
-      n == 0 || r.getLong(1) * 10000L >= Collapse.autoThresholdBp.toLong * n
+      n == 0 || r.getLong(1) * 10000L >= CopyFreeBp.toLong * n
     }).booleanValue()
   }
 
-  /** Resolve a [[Collapse]] policy to collapse-or-not for one frame. */
-  private def shouldCollapse(mode: Collapse, frame: => DataFrame,
-                             key: => org.apache.spark.sql.Column): Boolean = mode match {
-    case Collapse.Always => true
-    case Collapse.Never  => false
-    case Collapse.Auto   => !multiplicityIsLow(frame, key)
-  }
+  /** The collapsed plan runs when distinct-content/count < 90% — i.e.
+    * > ~1.1 mean copies per content. Above 90% distinct the collapse's
+    * two extra shuffles cost more than the copies they would save, and
+    * the `approx_count_distinct` rsd (5%) stays well inside the margin. */
+  private val CopyFreeBp = 9000
+  private val ProbeCacheMax = 10000
+  private val probeCache =
+    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, java.lang.Boolean]()
 
   /** Exact dedup: keep the smallest id per distinct content. Grouping
     * key is xxhash64(text) so the shuffle moves hashes, not bodies; a
@@ -134,12 +107,24 @@ object Dedup {
       .select(idCol)
 
   /** All pairs (a < b) with character-`k`-gram Jaccard similarity >=
-    * `minBp` basis points. Exact (no sketching): explode distinct
-    * shingle HASHES, self-join on the hash, count common, join back
-    * per-doc set sizes. Intended for bounded corpora / verification —
-    * the sketched path for open corpora is [[minhashLsh]]. */
+    * `minBp` basis points. Exact (no sketching, [[shingleOverlap]]).
+    * Intended for bounded corpora / verification — the sketched path
+    * for open corpora is [[minhashLsh]]. */
   def ngramJaccardPairs(docs: DataFrame, textCol: String, idCol: String,
-                        k: Int, minBp: Int): DataFrame = {
+                        k: Int, minBp: Int): DataFrame =
+    shingleOverlap(docs, textCol, idCol, k)
+      .withColumn("jaccard_bp",
+        floor(lit(10000.0) * col("common") / (col("n_a") + col("n_b") - col("common")))
+          .cast("long"))
+      .filter(col("jaccard_bp") >= minBp)
+      .select("doc_a", "doc_b", "common", "n_a", "n_b", "jaccard_bp")
+
+  /** Exact character-`k`-gram overlap of every doc pair (a < b)
+    * sharing a shingle: explode distinct shingle HASHES, self-join on
+    * the hash, count common, join back per-doc set sizes. Columns
+    * `doc_a, doc_b, common, n_a, n_b`. */
+  private def shingleOverlap(docs: DataFrame, textCol: String, idCol: String,
+                             k: Int): DataFrame = {
     val sh = docs.select(col(idCol).as("id"),
       explode(TextFunctions.shingleHashes(textCol, k)).as("g"))
     val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("n"))
@@ -153,11 +138,6 @@ object Dedup {
     common
       .join(sizes.withColumnRenamed("id", "doc_a").withColumnRenamed("n", "n_a"), "doc_a")
       .join(sizes.withColumnRenamed("id", "doc_b").withColumnRenamed("n", "n_b"), "doc_b")
-      .withColumn("jaccard_bp",
-        floor(lit(10000.0) * col("common") / (col("n_a") + col("n_b") - col("common")))
-          .cast("long"))
-      .filter(col("jaccard_bp") >= minBp)
-      .select("doc_a", "doc_b", "common", "n_a", "n_b", "jaccard_bp")
   }
 
   /** MinHash signature (numPerm permutations via seeded xxhash64 over
@@ -184,43 +164,30 @@ object Dedup {
     * recall contract. */
   def minhashLsh(docs: DataFrame, textCol: String, idCol: String,
                  k: Int = 5, numPerm: Int = 64, bands: Int = 16,
-                 minBp: Int = 5000, maxBucket: Int = DefaultMaxBucket,
-                 collapse: Collapse = Collapse.Auto): DataFrame = {
-    // Resolve Auto HERE, where text is still in hand: the probe hashes
-    // the raw text column (one scan, no shingling) instead of the
-    // derived signature frame, which would re-run the shingle pass.
-    val resolved =
-      if (shouldCollapse(collapse, docs, xxhash64(col(textCol))))
-        Collapse.Always else Collapse.Never
-    minhashLshFromSignatures(
-      withMinHashSignatures(docs, textCol, idCol, k, numPerm),
-      bands, minBp, numPerm, maxBucket, resolved)
+                 minBp: Int = 5000, maxBucket: Int = DefaultMaxBucket): DataFrame = {
+    // Probe HERE, where text is still in hand: the probe hashes the raw
+    // text column (one scan, no shingling) instead of the derived
+    // signature frame, which would re-run the shingle pass.
+    val copyFree = multiplicityIsLow(docs, xxhash64(col(textCol)))
+    lshPairs(withMinHashSignatures(docs, textCol, idCol, k, numPerm), copyFree,
+      bands, minBp, numPerm, maxBucket)
   }
 
   /** Near-CONTAINMENT pairs: (a, b) where the smaller shingle set is
     * mostly inside the larger — containment_bp = 10000·|A∩B|/min(|A|,|B|).
     * Catches the quote/excerpt/aggregation dups Jaccard MISSES: a
     * 100-word excerpt inside a 10k-word page has Jaccard ≈ 0.01 but
-    * containment ≈ 1.0. Exact formulation (same candidate equi-join on
-    * shingle hashes as [[ngramJaccardPairs]]); intended for bounded
-    * corpora / verification — at open-corpus scale, generate candidates
-    * with [[minhashLsh]] banding (a contained excerpt still collides on
-    * bands whose rows hash from its shingles) and verify containment on
-    * the persisted `hs` sets exactly as here. */
+    * containment ≈ 1.0. Exact formulation (the [[shingleOverlap]]
+    * equi-join on shingle hashes [[ngramJaccardPairs]] runs); intended
+    * for bounded corpora / verification — at open-corpus scale,
+    * generate candidates with [[minhashLsh]] banding (a contained
+    * excerpt still collides on bands whose rows hash from its shingles)
+    * and verify containment on the persisted `hs` sets exactly as here. */
   def containmentPairs(docs: DataFrame, textCol: String, idCol: String,
                        k: Int, minBp: Int): DataFrame = {
     require(k >= 1 && minBp >= 0 && minBp <= 10000,
       s"k ($k) must be >= 1 and minBp ($minBp) in [0, 10000]")
-    val sh = docs.select(col(idCol).as("id"),
-      explode(TextFunctions.shingleHashes(textCol, k)).as("g"))
-    val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val common = sh.as("x").join(sh.as("y"),
-        col("x.g") === col("y.g") && col("x.id") < col("y.id"))
-      .groupBy(col("x.id").as("doc_a"), col("y.id").as("doc_b"))
-      .agg(count(lit(1)).as("common"))
-    common
-      .join(sizes.withColumnRenamed("id", "doc_a").withColumnRenamed("n", "n_a"), "doc_a")
-      .join(sizes.withColumnRenamed("id", "doc_b").withColumnRenamed("n", "n_b"), "doc_b")
+    shingleOverlap(docs, textCol, idCol, k)
       .withColumn("containment_bp",
         floor(lit(10000.0) * col("common") / least(col("n_a"), col("n_b"))).cast("long"))
       .filter(col("containment_bp") >= minBp)
@@ -353,16 +320,31 @@ object Dedup {
         expr("(x.w * (x.w - 1) * 1000) div (x.s * (x.s - 1))")
           .as("weight_milli"))
     val sets = sigs.select(col("id"), col("hs"))
-    pairs
+    verifyJaccard(pairs
       .join(sets.withColumnRenamed("id", "doc_a").withColumnRenamed("hs", "hs_a"), "doc_a")
-      .join(sets.withColumnRenamed("id", "doc_b").withColumnRenamed("hs", "hs_b"), "doc_b")
+      .join(sets.withColumnRenamed("id", "doc_b").withColumnRenamed("hs", "hs_b"), "doc_b"),
+      minBp, "band", "bh", "w", "doc_a", "doc_b", "jaccard_bp", "weight_milli")
+  }
+
+  /** The exact verify of every MinHash-LSH path, batch and streaming:
+    * `jaccard_bp` = floor(10000·|A∩B|/|A∪B|) over the shingle-hash
+    * sets `hs_a`/`hs_b` each candidate pair carries, pairs below
+    * `minBp` dropped, then `cols` projected. The verify is exact, so
+    * the family's only approximation is candidate RECALL (banding). */
+  private[graft] def verifyJaccard(joined: DataFrame, minBp: Int,
+                                   cols: String*): DataFrame =
+    joined
       .withColumn("common", size(array_intersect(col("hs_a"), col("hs_b"))))
       .withColumn("jaccard_bp",
         floor(lit(10000.0) * col("common") /
           (size(col("hs_a")) + size(col("hs_b")) - col("common"))).cast("long"))
       .filter(col("jaccard_bp") >= minBp)
-      .select("band", "bh", "w", "doc_a", "doc_b", "jaccard_bp", "weight_milli")
-  }
+      .select(cols.head, cols.tail: _*)
+
+  /** (id, hs, sig, sk): `sigs` keyed by exact content, `sk =
+    * xxhash64(hs)` — the key [[sigGroups]] collapses on. */
+  private def contentKeyed(sigs: DataFrame): DataFrame =
+    sigs.select(col("id"), col("hs"), col("sig"), xxhash64(col("hs")).as("sk"))
 
   /** Exact-content collapse of a (id, hs, sig) frame: content key
     * `sk = xxhash64(hs)`, one `groupBy(sk)` whose partial (map-side)
@@ -429,20 +411,26 @@ object Dedup {
     within.select("doc_a", "doc_b", "jaccard_bp").unionByName(cross)
   }
 
-  /** Rep-level banded LSH candidates + exact-on-signature-set verify
-    * — the inner engine of [[minhashLshFromSignatures]], run AFTER
-    * exact-content collapse, so `sigs` here holds one row per
-    * distinct content and the verify join's array payload is
-    * O(distinct near-dup pairs), never O(copy pairs). */
-  private def verifiedRepPairs(sigs: DataFrame, bands: Int, minBp: Int,
-                               numPerm: Int, maxBucket: Int): DataFrame = {
-    val buckets = minhashBuckets(sigs, bands, numPerm)
-    // Bucket width + min-id rep in ONE window shuffle on the bucket key
-    // (both functions share the window spec → a single Window operator).
+  /** (w, rep) — bucket width and min-id member — on every (id, band,
+    * bh) row, in ONE window shuffle on the bucket key (both functions
+    * share the window spec → a single Window operator). The hot-bucket
+    * guard of every LSH path reads these two columns. */
+  private def withBucketWidth(buckets: DataFrame): DataFrame = {
     val byBucket = Window.partitionBy(col("band"), col("bh"))
-    val wb = buckets
+    buckets
       .withColumn("w", count(lit(1)).over(byBucket))
       .withColumn("rep", min(col("id")).over(byBucket))
+  }
+
+  /** The PLAIN plan of [[minhashLshFromSignatures]]: banded LSH
+    * candidates + exact verify over every row of `sigs`. The collapsed
+    * plan ([[minhashLshCollapsed]]) runs it over one representative per
+    * distinct content, so there the verify join's array payload is
+    * O(distinct near-dup pairs), never O(copy pairs). */
+  private[graft] def minhashLshPlain(sigs: DataFrame, bands: Int, minBp: Int,
+                                     numPerm: Int, maxBucket: Int): DataFrame = {
+    val rows = sigs.select("id", "hs", "sig")
+    val wb = withBucketWidth(minhashBuckets(rows, bands, numPerm))
     val small = wb.filter(col("w") <= maxBucket).select("id", "band", "bh")
     val smallPairs = small.as("x").join(small.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
@@ -453,17 +441,21 @@ object Dedup {
     val hotPairs = wb.filter(col("w") > maxBucket && col("id") =!= col("rep"))
       .select(col("rep").as("doc_a"), col("id").as("doc_b"))
     val cands = smallPairs.unionByName(hotPairs).distinct()
-    // Verify candidates with exact Jaccard over the shingle-hash sets.
-    val sets = sigs.select(col("id"), col("hs"))
-    cands
+    val sets = rows.select(col("id"), col("hs"))
+    verifyJaccard(cands
       .join(sets.withColumnRenamed("id", "doc_a").withColumnRenamed("hs", "hs_a"), "doc_a")
-      .join(sets.withColumnRenamed("id", "doc_b").withColumnRenamed("hs", "hs_b"), "doc_b")
-      .withColumn("common", size(array_intersect(col("hs_a"), col("hs_b"))))
-      .withColumn("jaccard_bp",
-        floor(lit(10000.0) * col("common") /
-          (size(col("hs_a")) + size(col("hs_b")) - col("common"))).cast("long"))
-      .filter(col("jaccard_bp") >= minBp)
-      .select("doc_a", "doc_b", "jaccard_bp")
+      .join(sets.withColumnRenamed("id", "doc_b").withColumnRenamed("hs", "hs_b"), "doc_b"),
+      minBp, "doc_a", "doc_b", "jaccard_bp")
+  }
+
+  /** The COLLAPSED plan of [[minhashLshFromSignatures]] (see there). */
+  private[graft] def minhashLshCollapsed(sigs: DataFrame, bands: Int, minBp: Int,
+                                         numPerm: Int, maxBucket: Int): DataFrame = {
+    val keyed = contentKeyed(sigs)
+    val groups = sigGroups(keyed)
+    expandGroupPairs(minhashLshPlain(groups, bands, minBp, numPerm, maxBucket),
+      keyed.select("sk", "id"),
+      groups.select(col("sk"), col("id").as("rep"), col("w")), minBp, maxBucket)
   }
 
   /** Banded LSH candidates + exact-on-signature-set verification from
@@ -497,42 +489,39 @@ object Dedup {
     * BUCKETS (a non-rep pair of distinct contents co-bucketed only
     * there) is logged per run via [[hotBucketStats]].
     *
-    * ADAPTIVE ([[Collapse]]): the collapse/re-expand passes above are
-    * two extra content-keyed shuffles that buy nothing at duplicate
-    * multiplicity ≈ 1 — the common case outside mirror pathologies.
-    * Under `Collapse.Auto` (default) a one-pass probe (count vs
-    * approx-distinct xxhash64(sig)) picks: copy-free frames run the
-    * PLAIN path — [[verifiedRepPairs]] directly over every row, the
-    * exact pre-collapse plan with zero extra shuffles — and only
-    * mirror-heavy frames pay the collapse. Both paths produce the
-    * same verified pair set below `maxBucket` (exact copies share all
-    * band hashes, so the plain path co-buckets and verifies them at
-    * jaccard 10000); above the cap the star fallback is keyed on
-    * bucket width in COPIES (plain) vs DISTINCT CONTENTS (collapsed)
-    * — the probe guarantees those coincide on the path that runs.
+    * ADAPTIVE ([[multiplicityIsLow]]): the collapse/re-expand passes
+    * above are two extra content-keyed shuffles that buy nothing at
+    * duplicate multiplicity ≈ 1 — the common case outside mirror
+    * pathologies. A one-pass probe (count vs approx-distinct
+    * xxhash64(sig)) picks: copy-free frames run the PLAIN plan
+    * ([[minhashLshPlain]] directly over every row, zero extra
+    * shuffles) and only mirror-heavy frames pay the collapse
+    * ([[minhashLshCollapsed]]). Both plans produce the same verified
+    * pair set below `maxBucket` (exact copies share all band hashes,
+    * so the plain plan co-buckets and verifies them at jaccard 10000);
+    * above the cap the star fallback is keyed on bucket width in
+    * COPIES (plain) vs DISTINCT CONTENTS (collapsed) — the probe
+    * guarantees those coincide on the plan that runs.
     *
     * Input contract: `hs` non-empty per row (what
     * [[withMinHashSignatures]] emits — it drops empty shingle sets).
-    * The collapsed path reads `sigs` twice (groups + membership), the
-    * Auto probe once more; with a persisted signature store — the
+    * The collapsed plan reads `sigs` twice (groups + membership), the
+    * probe once more; with a persisted signature store — the
     * production shape — all are column-pruned parquet scans. */
   def minhashLshFromSignatures(sigs: DataFrame, bands: Int = 16,
                                minBp: Int = 5000, numPerm: Int = 64,
-                               maxBucket: Int = DefaultMaxBucket,
-                               collapse: Collapse = Collapse.Auto): DataFrame = {
+                               maxBucket: Int = DefaultMaxBucket): DataFrame =
+    lshPairs(sigs, multiplicityIsLow(sigs, xxhash64(col("sig"))),
+      bands, minBp, numPerm, maxBucket)
+
+  /** Validates the banding, then runs the plan `copyFree` picks; the
+    * probe behind `copyFree` runs only once the banding is valid. */
+  private def lshPairs(sigs: DataFrame, copyFree: => Boolean, bands: Int,
+                       minBp: Int, numPerm: Int, maxBucket: Int): DataFrame = {
     require(numPerm % bands == 0 && numPerm > 0,
       s"numPerm ($numPerm) must be a positive multiple of bands ($bands)")
-    if (!shouldCollapse(collapse, sigs, xxhash64(col("sig")))) {
-      verifiedRepPairs(sigs.select("id", "hs", "sig"), bands, minBp, numPerm, maxBucket)
-    } else {
-      val keyed = sigs.select(col("id"), col("hs"), col("sig"),
-        xxhash64(col("hs")).as("sk"))
-      val groups = sigGroups(keyed)
-      val repPairs = verifiedRepPairs(
-        groups.select("id", "hs", "sig"), bands, minBp, numPerm, maxBucket)
-      expandGroupPairs(repPairs, keyed.select("sk", "id"),
-        groups.select(col("sk"), col("id").as("rep"), col("w")), minBp, maxBucket)
-    }
+    if (copyFree) minhashLshPlain(sigs, bands, minBp, numPerm, maxBucket)
+    else minhashLshCollapsed(sigs, bands, minBp, numPerm, maxBucket)
   }
 
   /** Incremental near-dup detection: a NEW batch of documents (a crawl
@@ -550,26 +539,29 @@ object Dedup {
     * wider than `maxBucket` is represented by its min-id doc only. */
   def minhashLshIncremental(newSigs: DataFrame, corpusSigs: DataFrame,
                             bands: Int = 16, minBp: Int = 5000,
-                            numPerm: Int = 64, maxBucket: Int = DefaultMaxBucket,
-                            collapse: Collapse = Collapse.Auto): DataFrame = {
+                            numPerm: Int = 64,
+                            maxBucket: Int = DefaultMaxBucket): DataFrame =
     // Adaptive as in [[minhashLshFromSignatures]]: when BOTH sides
-    // probe copy-free the plain pre-collapse plan runs (zero extra
-    // shuffles, no re-expansion); if EITHER side is mirror-heavy both
-    // collapse — the collapsed path is correct regardless of
-    // multiplicity, and a heavy side's copies would otherwise ride
-    // the bucket join.
-    if (!shouldCollapse(collapse, newSigs, xxhash64(col("sig"))) &&
-        !shouldCollapse(collapse, corpusSigs, xxhash64(col("sig"))))
-      return minhashLshIncrementalPlain(newSigs, corpusSigs, bands, minBp,
-        numPerm, maxBucket)
-    // Same exact-content collapse as [[minhashLshFromSignatures]], per
-    // side: LSH and verify run over distinct contents only, so mirror
-    // multiplicity (in the corpus OR the increment) never rides the
-    // bucket join or carries signature arrays per pair.
-    val nKeyed = newSigs.select(col("id"), col("hs"), col("sig"),
-      xxhash64(col("hs")).as("sk"))
-    val cKeyed = corpusSigs.select(col("id"), col("hs"), col("sig"),
-      xxhash64(col("hs")).as("sk"))
+    // probe copy-free the plain plan runs (zero extra shuffles, no
+    // re-expansion); if EITHER side is mirror-heavy both collapse —
+    // the collapsed plan is correct regardless of multiplicity, and a
+    // heavy side's copies would otherwise ride the bucket join.
+    if (multiplicityIsLow(newSigs, xxhash64(col("sig"))) &&
+        multiplicityIsLow(corpusSigs, xxhash64(col("sig"))))
+      incrementalPairs(newSigs, corpusSigs, bands, minBp, numPerm, maxBucket)
+    else minhashLshIncrementalCollapsed(newSigs, corpusSigs, bands, minBp,
+      numPerm, maxBucket)
+
+  /** The COLLAPSED plan of [[minhashLshIncremental]]: the same
+    * exact-content collapse as [[minhashLshCollapsed]], per side — LSH
+    * and verify run over distinct contents only, so mirror
+    * multiplicity (in the corpus OR the increment) never rides the
+    * bucket join or carries signature arrays per pair. */
+  private[graft] def minhashLshIncrementalCollapsed(newSigs: DataFrame,
+      corpusSigs: DataFrame, bands: Int, minBp: Int, numPerm: Int,
+      maxBucket: Int): DataFrame = {
+    val nKeyed = contentKeyed(newSigs)
+    val cKeyed = contentKeyed(corpusSigs)
     incrementalCollapsedBody(nKeyed.select("sk", "id"), sigGroups(nKeyed),
       cKeyed.select("sk", "id"), sigGroups(cKeyed),
       bands, minBp, numPerm, maxBucket)
@@ -585,8 +577,7 @@ object Dedup {
     * the whole r13 ratio drift). At 100 TB the collapse runs once, at
     * ingest, where it belongs. */
   def contentGroups(sigs: DataFrame): DataFrame =
-    sigGroups(sigs.select(col("id"), col("hs"), col("sig"),
-      xxhash64(col("hs")).as("sk")))
+    sigGroups(contentKeyed(sigs))
 
   /** The (sk, id) member map twin of [[contentGroups]] — array-free,
     * so expansion joins at probe time move bare ids only. */
@@ -605,53 +596,53 @@ object Dedup {
       corpusGroups: DataFrame, corpusMembers: DataFrame,
       bands: Int = 16, minBp: Int = 5000, numPerm: Int = 64,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val nKeyed = newSigs.select(col("id"), col("hs"), col("sig"),
-      xxhash64(col("hs")).as("sk"))
+    val nKeyed = contentKeyed(newSigs)
     incrementalCollapsedBody(nKeyed.select("sk", "id"), sigGroups(nKeyed),
       corpusMembers.select("sk", "id"), corpusGroups,
       bands, minBp, numPerm, maxBucket)
   }
 
-  /** The shared collapsed-increment body: group-level banding + verify
-    * + member expansion. `nMembers`/`cMembers` are (sk, id) maps;
-    * `nGroups`/`cGroups` are [[sigGroups]]-shaped (sk, id, hs, sig,
-    * w). Factored out so the persisted-grouped-store path and the
-    * self-collapsing path run ONE implementation. */
-  private def incrementalCollapsedBody(
-      nMembers: DataFrame, nGroups: DataFrame,
-      cMembers: DataFrame, cGroups: DataFrame,
-      bands: Int, minBp: Int, numPerm: Int, maxBucket: Int): DataFrame = {
-    val nb = minhashBuckets(nGroups.select("id", "hs", "sig"), bands, numPerm)
-    val cb = minhashBuckets(cGroups.select("id", "hs", "sig"), bands, numPerm)
-    val byBucket = Window.partitionBy(col("band"), col("bh"))
-    val cbGuarded = cb
-      .withColumn("w", count(lit(1)).over(byBucket))
-      .withColumn("rep", min(col("id")).over(byBucket))
+  /** The band-join-and-verify half of every incremental plan, and on
+    * its own the PLAIN plan of [[minhashLshIncremental]]: (new ×
+    * guarded corpus) + (new × new) bucket matches over every row of the
+    * two (id, hs, sig) frames, verified exactly → (new_id, match_id,
+    * jaccard_bp). The collapsed plans run it over content groups. */
+  private[graft] def incrementalPairs(newSigs: DataFrame, corpusSigs: DataFrame,
+                                      bands: Int, minBp: Int, numPerm: Int,
+                                      maxBucket: Int): DataFrame = {
+    val nb = minhashBuckets(newSigs.select("id", "hs", "sig"), bands, numPerm)
+    val cb = minhashBuckets(corpusSigs.select("id", "hs", "sig"), bands, numPerm)
+    val cbGuarded = withBucketWidth(cb)
       .filter(col("w") <= maxBucket || col("id") === col("rep"))
       .select("id", "band", "bh")
     val crossCands = nb.as("x").join(cbGuarded.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh"))
       .select(col("x.id").as("new_id"), col("y.id").as("match_id"))
-    // the increment's distinct contents are bounded → plain all-pairs
-    // banding within it
+    // the increment is bounded → plain all-pairs banding within it
     val newCands = nb.as("x").join(nb.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
         col("x.id") < col("y.id"))
       .select(col("x.id").as("new_id"), col("y.id").as("match_id"))
     val cands = crossCands.unionByName(newCands).distinct()
-    val newRepSets = nGroups.select(col("id").as("new_id"), col("hs").as("hs_a"))
-    val allRepSets = cGroups.select(col("id"), col("hs"))
-      .unionByName(nGroups.select(col("id"), col("hs")))
+    val newSets = newSigs.select(col("id").as("new_id"), col("hs").as("hs_a"))
+    val allSets = corpusSigs.select(col("id"), col("hs"))
+      .unionByName(newSigs.select(col("id"), col("hs")))
       .select(col("id").as("match_id"), col("hs").as("hs_b"))
-    val repVerified = cands
-      .join(newRepSets, "new_id")
-      .join(allRepSets, "match_id")
-      .withColumn("common", size(array_intersect(col("hs_a"), col("hs_b"))))
-      .withColumn("jaccard_bp",
-        floor(lit(10000.0) * col("common") /
-          (size(col("hs_a")) + size(col("hs_b")) - col("common"))).cast("long"))
-      .filter(col("jaccard_bp") >= minBp)
-      .select("new_id", "match_id", "jaccard_bp")
+    verifyJaccard(cands.join(newSets, "new_id").join(allSets, "match_id"),
+      minBp, "new_id", "match_id", "jaccard_bp")
+  }
+
+  /** The shared collapsed-increment body: group-level banding + verify
+    * ([[incrementalPairs]] over the groups), then member expansion.
+    * `nMembers`/`cMembers` are (sk, id) maps; `nGroups`/`cGroups` are
+    * [[sigGroups]]-shaped (sk, id, hs, sig, w). Factored out so the
+    * persisted-grouped-store path and the self-collapsing path run ONE
+    * implementation. */
+  private def incrementalCollapsedBody(
+      nMembers: DataFrame, nGroups: DataFrame,
+      cMembers: DataFrame, cGroups: DataFrame,
+      bands: Int, minBp: Int, numPerm: Int, maxBucket: Int): DataFrame = {
+    val repVerified = incrementalPairs(nGroups, cGroups, bands, minBp, numPerm, maxBucket)
     // Expansion back to member pairs (bare ids, guard = rep-only /
     // star above maxBucket). Within-increment exact copies pair at
     // jaccard 10000, oriented new_id < match_id (rep = min id).
@@ -687,46 +678,6 @@ object Dedup {
         when(col("nn"), greatest(col("ea"), col("eb"))).otherwise(col("eb")).as("match_id"),
         col("jaccard_bp"))
     withinNew.select("new_id", "match_id", "jaccard_bp").unionByName(cross)
-  }
-
-  /** The copy-free plan of [[minhashLshIncremental]] — per-member
-    * banding with no collapse/re-expansion, selected by the Auto
-    * probe when neither side carries exact-content copies. Identical
-    * output to the collapsed path at multiplicity 1 (every row is its
-    * own content group). */
-  private def minhashLshIncrementalPlain(newSigs: DataFrame, corpusSigs: DataFrame,
-                                         bands: Int, minBp: Int,
-                                         numPerm: Int, maxBucket: Int): DataFrame = {
-    val nb = minhashBuckets(newSigs.select("id", "hs", "sig"), bands, numPerm)
-    val cb = minhashBuckets(corpusSigs.select("id", "hs", "sig"), bands, numPerm)
-    val byBucket = Window.partitionBy(col("band"), col("bh"))
-    val cbGuarded = cb
-      .withColumn("w", count(lit(1)).over(byBucket))
-      .withColumn("rep", min(col("id")).over(byBucket))
-      .filter(col("w") <= maxBucket || col("id") === col("rep"))
-      .select("id", "band", "bh")
-    val crossCands = nb.as("x").join(cbGuarded.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh"))
-      .select(col("x.id").as("new_id"), col("y.id").as("match_id"))
-    // the increment is bounded → plain all-pairs banding within it
-    val newCands = nb.as("x").join(nb.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-        col("x.id") < col("y.id"))
-      .select(col("x.id").as("new_id"), col("y.id").as("match_id"))
-    val cands = crossCands.unionByName(newCands).distinct()
-    val newSets = newSigs.select(col("id").as("new_id"), col("hs").as("hs_a"))
-    val allSets = corpusSigs.select(col("id"), col("hs"))
-      .unionByName(newSigs.select(col("id"), col("hs")))
-      .select(col("id").as("match_id"), col("hs").as("hs_b"))
-    cands
-      .join(newSets, "new_id")
-      .join(allSets, "match_id")
-      .withColumn("common", size(array_intersect(col("hs_a"), col("hs_b"))))
-      .withColumn("jaccard_bp",
-        floor(lit(10000.0) * col("common") /
-          (size(col("hs_a")) + size(col("hs_b")) - col("common"))).cast("long"))
-      .filter(col("jaccard_bp") >= minBp)
-      .select("new_id", "match_id", "jaccard_bp")
   }
 
   /** Apply [[dupSpanIntervals]] output back to the corpus: drop every
@@ -1012,29 +963,29 @@ object Dedup {
     *
     * Scale posture: this is [[minhashLshIncremental]] with the probe
     * suite cast as the increment — the CORPUS is never self-joined,
-    * both sides get the exact-content collapse and hot-bucket guard,
-    * and the benchmark side is suite-sized, so a 100 TB corpus pays
-    * one signature scan plus a probe-sized bucket join. Probe-probe
-    * pairs are dropped by a semi join against the corpus id set
-    * (id spaces must be disjoint, the incremental contract). */
+    * both sides get the exact-content collapse (when either carries
+    * copies) and the family's hot-bucket guard at
+    * [[DefaultMaxBucket]], and the benchmark side is suite-sized, so
+    * a 100 TB corpus pays one signature scan plus a probe-sized bucket
+    * join. Probe-probe pairs are dropped by a semi join against the
+    * corpus id set (id spaces must be disjoint, the incremental
+    * contract). */
   def crossNearDupPairs(corpus: DataFrame, probe: DataFrame,
                         textCol: String, idCol: String, k: Int = 5,
                         numPerm: Int = 64, bands: Int = 16,
-                        minBp: Int = 5000, maxBucket: Int = 1000,
-                        collapse: Collapse = Collapse.Auto): DataFrame = {
-    // Resolve Auto on the RAW text columns (one hash scan per side) —
-    // probing the derived signature frames would re-run the shingle
-    // pass just to count.
-    val resolved = collapse match {
-      case Collapse.Auto =>
-        if (!shouldCollapse(Collapse.Auto, probe, xxhash64(col(textCol))) &&
-            !shouldCollapse(Collapse.Auto, corpus, xxhash64(col(textCol))))
-          Collapse.Never else Collapse.Always
-      case m => m
-    }
+                        minBp: Int = 5000,
+                        maxBucket: Int = DefaultMaxBucket): DataFrame = {
+    // Probe the RAW text columns (one hash scan per side) — probing the
+    // derived signature frames would re-run the shingle pass just to
+    // count.
+    val copyFree = multiplicityIsLow(probe, xxhash64(col(textCol))) &&
+      multiplicityIsLow(corpus, xxhash64(col(textCol)))
     val pSigs = withMinHashSignatures(probe, textCol, idCol, k, numPerm)
     val cSigs = withMinHashSignatures(corpus, textCol, idCol, k, numPerm)
-    minhashLshIncremental(pSigs, cSigs, bands, minBp, numPerm, maxBucket, resolved)
+    val pairs =
+      if (copyFree) incrementalPairs(pSigs, cSigs, bands, minBp, numPerm, maxBucket)
+      else minhashLshIncrementalCollapsed(pSigs, cSigs, bands, minBp, numPerm, maxBucket)
+    pairs
       .join(corpus.select(col(idCol).as("match_id")), Seq("match_id"), "left_semi")
       .select(col("match_id").as("doc_id"), col("new_id").as("probe_id"),
         col("jaccard_bp"))

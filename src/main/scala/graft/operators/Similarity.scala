@@ -841,7 +841,7 @@ object Similarity {
     // candidate pairs, so FIXED planes at a grown corpus is the
     // measured anti-pattern (SWEEPSTR_r13: fixed 8 planes = 31× time
     // for 100× data; occupancy-scaled = 15×). The preflight is two
-    // column-pruned counts — control-plane, like the Collapse probe.
+    // column-pruned counts — control-plane, like Dedup's multiplicity probe.
     val p =
       if (numPlanes == AutoPlanes) planesForCorpus(a.count() + b.count())
       else numPlanes

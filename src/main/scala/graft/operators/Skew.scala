@@ -75,10 +75,9 @@ object Skew {
     * corpus pass. */
   def distributionDrift(items: DataFrame, groupCol: String,
                         bucketCol: String): DataFrame = {
-    val b = items
+    val b = Ckpt(items
       .groupBy(col(groupCol), col(bucketCol))
-      .agg(count(lit(1)).as("c_s"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("c_s")))
     val grpTot = b.groupBy(col(groupCol)).agg(sum(col("c_s")).as("n_s"))
     val ref = b.groupBy(col(bucketCol)).agg(sum(col("c_s")).as("c_r"))
     val tot = ref.agg(sum(col("c_r")).as("n_r"))

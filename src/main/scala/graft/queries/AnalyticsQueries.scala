@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.operators.{AsOfJoin, TextAnalysis, Windows}
+import graft.operators.{AsOfJoin, Ckpt, TextAnalysis, Windows}
 import graft.sources.Tables
 
 /** §2.B extension — analytic/time-series operators (B15–B19): CUBE,
@@ -795,10 +795,9 @@ object AnalyticsQueries {
       val spine = counts.groupBy(col("event_type"))
         .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
         .select(col("event_type"), explode(expr("sequence(h0, h1)")).as("h"))
-      val series = spine.join(counts, Seq("event_type", "h"), "left")
+      val series = Ckpt(spine.join(counts, Seq("event_type", "h"), "left")
         .select(col("event_type"), col("h"),
-          coalesce(col("cnt"), lit(0L)).as("x"))
-        .localCheckpoint()
+          coalesce(col("cnt"), lit(0L)).as("x")))
       val tot = series.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("x")).as("s"))
       val byType = Window.partitionBy(col("event_type")).orderBy(col("h").asc)
@@ -930,11 +929,10 @@ object AnalyticsQueries {
         .unionByName(und.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
       val tri = graft.operators.Graph.triangleCountsUnd(und)
-      val out = tri
+      val out = Ckpt(tri
         .join(deg, "node")
         .select(col("node"), col("n_tri"), col("deg"),
-          expr("(2 * n_tri * 1000000) div (deg * (deg - 1))").as("cc_ppm"))
-        .localCheckpoint()
+          expr("(2 * n_tri * 1000000) div (deg * (deg - 1))").as("cc_ppm")))
       und.unpersist()
       out
     },
@@ -1125,7 +1123,7 @@ object AnalyticsQueries {
       // times. The frame is part-granular (a dimension, not the
       // fact); one eager localCheckpoint makes every consumer a
       // block read. Values untouched.
-      val pr = graft.operators.Ckpt(Tables.lineitem(s, d)
+      val pr = Ckpt(Tables.lineitem(s, d)
         .groupBy(col("l_partkey"))
         .agg(sum((dec2(col("l_extendedprice")) *
           (lit(1) - dec2(col("l_discount"))) * 10000).cast("long"))
@@ -1457,14 +1455,13 @@ object AnalyticsQueries {
         .select(col("event_type"), explode(expr("sequence(d0, d1)")).as("day"))
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val dd = spine.join(counts, Seq("event_type", "day"), "left")
+      val dd = Ckpt(spine.join(counts, Seq("event_type", "day"), "left")
         .select(col("event_type"), col("day"),
           coalesce(col("cnt"), lit(0L)).as("y"))
         .withColumn("runmax", max(col("y")).over(w))
         .filter(col("runmax") > 0)
         .withColumn("dd_bp",
-          expr("(runmax - y) * 10000 div runmax"))
-        .localCheckpoint()
+          expr("(runmax - y) * 10000 div runmax")))
       val worst = dd.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_days"), max(col("runmax")).as("peak"),
           max(col("dd_bp")).as("max_dd_bp"))
@@ -1493,12 +1490,11 @@ object AnalyticsQueries {
         .agg(count(lit(1)).as("cnt"))
       val cal = counts.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
       val types = counts.select(col("event_type")).distinct()
-      val series = types.crossJoin(broadcast(cal))
+      val series = Ckpt(types.crossJoin(broadcast(cal))
         .select(col("event_type"), explode(expr("sequence(d0, d1)")).as("day"))
         .join(counts, Seq("event_type", "day"), "left")
         .select(col("event_type"), col("day"),
-          coalesce(col("cnt"), lit(0L)).as("x"))
-        .localCheckpoint()
+          coalesce(col("cnt"), lit(0L)).as("x")))
       val lags = s.range(0, 4).select(col("id").as("lag"))
       val a = series.select(col("event_type").as("type_a"),
         col("day"), col("x"))
@@ -1540,10 +1536,9 @@ object AnalyticsQueries {
       val spine = counts.groupBy(col("event_type"))
         .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
         .select(col("event_type"), explode(expr("sequence(h0, h1)")).as("h"))
-      val series = spine.join(counts, Seq("event_type", "h"), "left")
+      val series = Ckpt(spine.join(counts, Seq("event_type", "h"), "left")
         .select(col("event_type"), col("h"),
-          coalesce(col("cnt"), lit(0L)).as("y"))
-        .localCheckpoint()
+          coalesce(col("cnt"), lit(0L)).as("y")))
       val agg = series.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_hours"), sum(col("y")).as("total"),
           max(col("y")).as("peak"))
@@ -1572,7 +1567,7 @@ object AnalyticsQueries {
         .join(broadcast(dims), "o_custkey")
         .groupBy(col("n_name"), col("o_custkey"))
         .agg(sum((dec2(col("o_totalprice")) * 100).cast("long")).as("cents"))
-      val ranked = custRev.localCheckpoint()
+      val ranked = Ckpt(custRev)
       val byNation = Window.partitionBy(col("n_name"))
         .orderBy(col("cents").desc, col("o_custkey").asc)
       val stats = ranked.groupBy(col("n_name"))
@@ -1598,7 +1593,7 @@ object AnalyticsQueries {
     // both read it; medians via the B34 cum-count pick over the tiny
     // (threshold × depth) vocabulary, partitioned by gap_s.
     "session_threshold_sensitivity" -> { (s, d) =>
-      val sess = sessionThresholdSessions(s, d).localCheckpoint()
+      val sess = Ckpt(sessionThresholdSessions(s, d))
       val stats = sess.groupBy(col("gap_s"))
         .agg(count(lit(1)).as("n_sessions"),
           count_distinct(col("user_id")).as("n_users"))
@@ -2056,7 +2051,7 @@ object AnalyticsQueries {
       // the events fact (one row per session / per active second), so
       // one eager localCheckpoint each turns the recomputes into
       // block reads; values untouched (same frames, same folds).
-      val sess = graft.operators.Ckpt(Tables.events(s, d)
+      val sess = Ckpt(Tables.events(s, d)
         .select(col("user_id"), col("ts").cast("long").as("t"))
         .withColumn("gap",
           when(col("t") - lag(col("t"), 1).over(
@@ -2067,7 +2062,7 @@ object AnalyticsQueries {
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
         .groupBy(col("user_id"), col("session_id"))
         .agg(min(col("t")).as("t0"), max(col("t")).as("t1")))
-      val deltas = graft.operators.Ckpt(
+      val deltas = Ckpt(
         sess.select(col("t0").as("t"), lit(1L).as("delta"))
           .unionByName(sess.select((col("t1") + 1).as("t"), lit(-1L).as("delta")))
           .groupBy(col("t")).agg(sum(col("delta")).as("delta"))
@@ -2108,11 +2103,10 @@ object AnalyticsQueries {
       // eager localCheckpoint: twelve downstream consumers (4 k's ×
       // {2 semi joins, degree}) must not re-tokenize the corpus (the
       // B83 commonNeighborJaccard convention)
-      val und = wordAdjacencyEdges(s, d)
+      val und = Ckpt(wordAdjacencyEdges(s, d)
         .select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct()
-        .localCheckpoint()
+        .filter(col("a") =!= col("b")).distinct())
       val deg = und.select(col("a").as("node"))
         .unionByName(und.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -2148,7 +2142,10 @@ object AnalyticsQueries {
       val mx = Tables.orders(s, d)
         .agg(max(expr("CAST(CAST(o_orderdate AS TIMESTAMP) AS BIGINT) div 86400"))
           .as("maxday"))
-      val cust = Tables.orders(s, d)
+      // eager checkpoint: four consumers (three quartile profiles + the
+      // bucketing pass) must not re-aggregate the orders fact — cust is
+      // customer-sized, the scan is not
+      val cust = Ckpt(Tables.orders(s, d)
         .groupBy(col("o_custkey"))
         .agg(max(expr("CAST(CAST(o_orderdate AS TIMESTAMP) AS BIGINT) div 86400"))
           .as("lastday"),
@@ -2156,11 +2153,7 @@ object AnalyticsQueries {
           sum((dec2(col("o_totalprice")) * 100).cast("long")).as("cents"))
         .crossJoin(broadcast(mx)) // guarded: one-row aggregate
         .select(col("o_custkey"), (col("maxday") - col("lastday")).as("rec"),
-          col("freq"), col("cents"), expr("cents div 10000").as("mgrid"))
-        // eager localCheckpoint: four consumers (three quartile
-        // profiles + the bucketing pass) must not re-aggregate the
-        // orders fact — cust is customer-sized, the scan is not
-        .localCheckpoint()
+          col("freq"), col("cents"), expr("cents div 10000").as("mgrid")))
       def quartiles(metric: String): DataFrame = {
         val counts = cust.groupBy(col(metric).as("v"))
           .agg(count(lit(1)).as("c"))
@@ -2564,11 +2557,10 @@ object AnalyticsQueries {
     // type totals re-aggregate that bounded frame (broadcast back,
     // guarded-crossJoin convention — zero second scans).
     "seasonality_profile" -> { (s, d) =>
-      val hod = Tables.events(s, d)
+      val hod = Ckpt(Tables.events(s, d)
         .groupBy(col("event_type"),
           expr("(CAST(ts AS BIGINT) div 3600) % 24").as("hod"))
-        .agg(count(lit(1)).as("n"))
-        .localCheckpoint()
+        .agg(count(lit(1)).as("n")))
       val tot = hod.groupBy(col("event_type")).agg(sum(col("n")).as("total"))
       hod.join(broadcast(tot), "event_type")
         .select(col("event_type"), col("hod"), col("n"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.GraftFunctions
-import graft.operators.{Clustering, Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.operators.{Ckpt, Clustering, Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.sources.Tables
 
 /** §2.C — LLM-training-data pipeline operators over `documents` /
@@ -240,8 +240,8 @@ object PipelineQueries {
         import scala.reflect.io.Directory
         new Directory(p.toFile).deleteRecursively()
       }
-      val sigs = Dedup.withMinHashSignatures(fuzzyCorpus(s, d)._1,
-        "text", "doc_id").localCheckpoint()
+      val sigs = Ckpt(Dedup.withMinHashSignatures(fuzzyCorpus(s, d)._1,
+        "text", "doc_id"))
       graft.sources.Sinks.writeClustered(Dedup.contentGroups(sigs),
         s"$p/groups", "id", numRanges = 4)
       Dedup.contentMembers(sigs).write.mode("overwrite")
@@ -390,10 +390,9 @@ object PipelineQueries {
     // Dedup.minhashLshSampledPairs estimate instead (C108 contract;
     // bias magnitude recorded in GUARDBIAS_r15).
     "dedup_threshold_sensitivity" -> { (s, d) =>
-      val pairs = Dedup.ngramJaccardPairs(corpus(s, d), "text", "doc_id",
-          k = 5, minBp = 7000)
-        .select(col("doc_a"), col("doc_b"), col("jaccard_bp"))
-        .localCheckpoint()
+      val pairs = Ckpt(Dedup.ngramJaccardPairs(corpus(s, d), "text",
+          "doc_id", k = 5, minBp = 7000)
+        .select(col("doc_a"), col("doc_b"), col("jaccard_bp")))
       // r19 (guide §2.6 — overlap independent jobs): the three
       // per-threshold clusterPairs runs are driver-loop-driven
       // (eager per-round convergence counts over the SHARED
@@ -469,9 +468,9 @@ object PipelineQueries {
     // input IS the pair frame), membership from the C18 closure, one
     // canonical-keyed fold.
     "cluster_density_audit" -> { (s, d) =>
-      val pairs = Dedup.ngramJaccardPairs(corpus(s, d), "text", "doc_id",
-          k = 5, minBp = 8000)
-        .select(col("doc_a"), col("doc_b")).localCheckpoint()
+      val pairs = Ckpt(Dedup.ngramJaccardPairs(corpus(s, d), "text",
+          "doc_id", k = 5, minBp = 8000)
+        .select(col("doc_a"), col("doc_b")))
       val cl = Dedup.clusterPairs(pairs, "doc_a", "doc_b")
       val m = cl.groupBy(col("canonical_id")).agg(count(lit(1)).as("n_members"))
       val p = pairs.join(cl.withColumnRenamed("doc_id", "doc_a"), "doc_a")
@@ -814,11 +813,13 @@ object PipelineQueries {
     // probes the collapsed groups with member expansion; a STRICTLY
     // copy-free corpus — where groups ARE the per-member rows and
     // collapse machinery would be pure overhead (FUZZYPROBE_r14:
-    // +0.4 s at 1×) — keeps the plain incremental path over the same
-    // store. Signatures are deterministic and both paths share the
-    // collapsed/plain equivalence, so the pair set — and the oracle —
-    // is identical to the self-contained crossNearDupPairs form
-    // (DedupSpec pins both equalities).
+    // +0.4 s at 1×) — keeps the plain incremental plan over the same
+    // store (minhashLshIncremental's multiplicity probe picks it).
+    // Signatures are deterministic, both plans share the
+    // collapsed/plain equivalence, and both this key and the
+    // self-contained crossNearDupPairs form run the family's
+    // DefaultMaxBucket cap, so the pair set — and the oracle — is
+    // identical to crossNearDupPairs (DedupSpec pins both equalities).
     "fuzzy_decontaminate" -> { (s, d) =>
       val (corpus, probe) = fuzzyCorpus(s, d)
       val pSigs = Dedup.withMinHashSignatures(probe, "text", "doc_id")

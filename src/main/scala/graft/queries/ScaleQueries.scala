@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Skew, TextAnalysis}
+import graft.operators.{Ckpt, Dedup, Skew, TextAnalysis}
 import graft.sources.Tables
 
 /** §2.C45–C49, C52 — retrieval ranking, the skew-diagnostic/mitigation
@@ -45,9 +45,8 @@ object ScaleQueries {
         .groupBy(col("user_id")).agg(count(lit(1)).as("n_left"))
       val r = ev.filter(col("event_type") === "purchase")
         .groupBy(col("user_id")).agg(count(lit(1)).as("n_right"))
-      val per = l.join(r, "user_id")
-        .withColumn("out_rows", col("n_left") * col("n_right"))
-        .localCheckpoint()
+      val per = Ckpt(l.join(r, "user_id")
+        .withColumn("out_rows", col("n_left") * col("n_right")))
       val tot = per.agg(sum(col("out_rows")).as("total_rows"))
       per
         .withColumn("rank", row_number().over(
@@ -231,12 +230,11 @@ object ScaleQueries {
     // sources×buckets, the spine is that same cross (broadcast), cum
     // sums run per source over ≤ buckets rows.
     "ks_drift" -> { (s, d) =>
-      val counts = Tables.documents(s, d)
+      val counts = Ckpt(Tables.documents(s, d)
         .select(col("source"),
           (length(bin(greatest(size(split(col("text"), " ")).cast("long"),
             lit(1L)))) - 1).cast("long").as("len_bucket"))
-        .groupBy(col("source"), col("len_bucket")).agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+        .groupBy(col("source"), col("len_bucket")).agg(count(lit(1)).as("c")))
       val tot = counts.groupBy(col("len_bucket")).agg(sum(col("c")).as("ct"))
       val spine = counts.select(col("source")).distinct()
         .crossJoin(broadcast(tot))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Clustering, TextAnalysis}
+import graft.operators.{Ckpt, Clustering, TextAnalysis}
 import graft.sources.Tables
 
 /** C32–C38 — training-set assembly on top of the curation stack:
@@ -212,20 +212,18 @@ object TrainingQueries {
       // dominates): small languages bind at their size, the dominant
       // one takes the remaining level; budget = 80% of the corpus so
       // both branches exercise
-      val caps = Tables.documents(s, d)
-        .groupBy(col("lang")).agg(count(lit(1)).as("cap"))
-        .localCheckpoint()
+      val caps = Ckpt(Tables.documents(s, d)
+        .groupBy(col("lang")).agg(count(lit(1)).as("cap")))
       val tot = caps.agg(sum(col("cap")).as("total"), count(lit(1)).as("n"))
       val byCap = Window.orderBy(col("cap").asc, col("lang").asc)
-      val cum = caps.crossJoin(broadcast(tot))
+      val cum = Ckpt(caps.crossJoin(broadcast(tot))
         .withColumn("budget", expr("total * 4 div 5"))
         .withColumn("k", row_number().over(byCap).cast("long"))
         .withColumn("cum_before", coalesce(
           sum(col("cap")).over(byCap.rowsBetween(Window.unboundedPreceding, -1)),
           lit(0L)))
         .withColumn("level_k", expr("(budget - cum_before) div (n - k + 1)"))
-        .withColumn("fail", col("cap") > col("level_k"))
-        .localCheckpoint()
+        .withColumn("fail", col("cap") > col("level_k")))
       val ks = cum.agg(min(when(col("fail"), col("k"))).as("kstar"))
       val cum2 = cum.crossJoin(broadcast(ks))
       val lvl = cum2

@@ -4,10 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Ckpt, Dedup, Graph}
 
-/** r20 pin for the session-conf-driven lineage-truncation helper
-  * (r19 verdict item 2): the query-builder call sites that hardcoded
-  * localCheckpoint now honor `graft.reliableCheckpoint`, switching to
-  * cluster-durable `checkpoint()` with identical output. */
+/** Pin for the session-conf-driven lineage-truncation helper: every
+  * query-builder and operator checkpoint goes through `Ckpt`, so all
+  * honor `graft.reliableCheckpoint`, switching to cluster-durable
+  * `checkpoint()` with identical output. */
 class CkptSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -56,10 +56,14 @@ class CkptSpec extends SparkTestBase {
       rows(Dedup.bestRepresentative(docs, pairs, "doc_id", "score"))
     }
     assert(got == want && want.nonEmpty)
-    // a full query-builder path through the helper (peak_concurrency)
-    val key = SparkEntry.queries("peak_concurrency")
-    val w0 = rows(key(spark, sfDir))
-    val w1 = withReliable { _ => rows(key(spark, sfDir)) }
-    assert(w0 == w1 && w0.nonEmpty)
+    // full query-builder paths through the helper: peak_concurrency,
+    // and two keys whose builders checkpointed locally before routing
+    // through Ckpt (a near-dup pair frame, an event-series frame)
+    for (name <- Seq("peak_concurrency", "cluster_density_audit", "max_drawdown")) {
+      val key = SparkEntry.queries(name)
+      val w0 = rows(key(spark, sfDir))
+      val w1 = withReliable { _ => rows(key(spark, sfDir)) }
+      assert(w0 == w1 && w0.nonEmpty, name)
+    }
   }
 }

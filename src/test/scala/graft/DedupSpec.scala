@@ -74,10 +74,12 @@ class DedupSpec extends SparkTestBase {
     def hasCollapse(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.optimizedPlan.toString.contains("sk#")
     val sigs = Dedup.withMinHashSignatures(corpus(), "text", "doc_id")
-    val plain = Dedup.minhashLshFromSignatures(sigs, minBp = 8000,
-      collapse = Dedup.Collapse.Never)
-    val collapsed = Dedup.minhashLshFromSignatures(sigs, minBp = 8000,
-      collapse = Dedup.Collapse.Always)
+    // the two plans the probe picks between, each the other's reference
+    def plainOf(s: org.apache.spark.sql.DataFrame) =
+      Dedup.minhashLshPlain(s, 16, 8000, 64, Dedup.DefaultMaxBucket)
+    val plain = plainOf(sigs)
+    val collapsed = Dedup.minhashLshCollapsed(sigs, 16, 8000, 64,
+      Dedup.DefaultMaxBucket)
     assert(!hasCollapse(plain) && hasCollapse(collapsed))
     assert(pairSet(plain) == pairSet(collapsed))
     assert(pairSet(plain).nonEmpty)
@@ -94,8 +96,7 @@ class DedupSpec extends SparkTestBase {
     val mSigs = Dedup.withMinHashSignatures(mirror, "text", "doc_id")
     val mAuto = Dedup.minhashLshFromSignatures(mSigs, minBp = 8000)
     assert(hasCollapse(mAuto))
-    assert(pairSet(mAuto) == pairSet(Dedup.minhashLshFromSignatures(mSigs,
-      minBp = 8000, collapse = Dedup.Collapse.Never)))
+    assert(pairSet(mAuto) == pairSet(plainOf(mSigs)))
   }
 
   test("minhashLshIncrementalGrouped over a persisted collapsed store " +
@@ -103,7 +104,7 @@ class DedupSpec extends SparkTestBase {
     import spark.implicits._
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    // corpus: 10×-mirrored docs (the Auto-collapse regime); increment:
+    // corpus: 10×-mirrored docs (the probe picks the collapse); increment:
     // truncated near-dup probes of some of them, disjoint id space
     val mirror = corpus().filter(col("doc_id") < 100)
       .crossJoin(spark.range(10).select(col("id").as("copy")))

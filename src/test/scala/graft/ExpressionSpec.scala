@@ -30,6 +30,26 @@ class ExpressionSpec extends SparkTestBase {
     assert(v.getDouble(0) == 11.0 && v.getDouble(1) == 8.0)
   }
 
+  test("every function register installs also resolves through the " +
+       "session extensions alone") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    def names(s: org.apache.spark.sql.SparkSession): Set[String] =
+      s.sessionState.functionRegistry.listFunction().map(_.funcName).toSet
+    // a new session's registry holds the built-ins plus what the
+    // session's extensions inject — nothing register() added elsewhere
+    val viaExtensions = spark.newSession()
+    val viaRegister = spark.newSession()
+    GraftFunctions.register(viaRegister)
+    val registered = names(viaRegister) --
+      FunctionRegistry.builtin.listFunction().map(_.funcName)
+    assert(registered.contains("simhash_sig") && registered.size >= 11,
+      registered)
+    val missing = registered.filterNot(n => viaExtensions.sessionState
+      .functionRegistry.functionExists(FunctionIdentifier(n)))
+    assert(missing.isEmpty, s"not injected by GraftExtensions: $missing")
+  }
+
   private def parse(s: String): java.sql.Timestamp =
     spark.sql(s"SELECT parse_sqdata_ts('$s') AS t").collect()(0)
       .getTimestamp(0)

@@ -918,9 +918,9 @@ class PlanSpec extends SparkTestBase {
       "keys=\\[sk#\\d+L?\\], functions=\\[(partial_)?min\\("
         .r.findAllIn(p).size
     val grouped = skGroups(planOf(df))
-    val raw = skGroups(planOf(graft.operators.Dedup.minhashLshIncremental(
-      probe, sigs, minBp = 8000,
-      collapse = graft.operators.Dedup.Collapse.Always)))
+    val raw = skGroups(planOf(
+      graft.operators.Dedup.minhashLshIncrementalCollapsed(probe, sigs,
+        16, 8000, 64, graft.operators.Dedup.DefaultMaxBucket)))
     assert(grouped < raw,
       s"grouped-store probe must drop the corpus-side re-grouping " +
         s"(grouped=$grouped raw=$raw)")

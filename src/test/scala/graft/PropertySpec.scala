@@ -425,14 +425,7 @@ class PropertySpec extends SparkTestBase {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     // RocksDB provider + tiny shuffle width, as the TwsCep parity tests
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val shufKey = "spark.sql.shuffle.partitions"
-    val prevProv = spark.conf.getOption(provKey)
-    val prevShuf = spark.conf.get(shufKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(shufKey, "2")
-    try {
+    withRocksDb { ckpt =>
       // 100 independent random schedules (state is per-key, so one
       // streaming query over 100 keys IS 100 schedules): 5-30 events
       // per key, multiple view triggers with overlapping windows,
@@ -477,7 +470,6 @@ class PropertySpec extends SparkTestBase {
         .filter(_.nonEmpty)
       assert(slices.size >= 5, s"degenerate slicing: ${slices.size} batches")
       val input = MemoryStream[(Long, Long, Long, String)]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_cep_prop").toString
       val q = graft.streaming.TwsCep.episodes(
           input.toDS().toDF("event_id", "user_id", "ms", "event_type")
             .withColumn("ts", timestamp_millis(col("ms"))),
@@ -515,12 +507,6 @@ class PropertySpec extends SparkTestBase {
         assert(streamCompleted.nonEmpty && streamExpired.nonEmpty,
           "degenerate run: one of the outcome classes is empty")
       } finally q.stop()
-    } finally {
-      prevProv match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
-      spark.conf.set(shufKey, prevShuf)
     }
   }
 

@@ -29,6 +29,33 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   def withReliable[T](body: String => T): T =
     withCheckpointDir(dir => reliableConf(body(dir)))
 
+  /** Runs `body` on the RocksDB state store (transformWithState needs
+    * it) with a fresh temp dir for its checkpoints and sinks, passed to
+    * `body`, then restores the provider and the partition count and
+    * deletes the dir. The state partition count binds at query start:
+    * one RocksDB instance per shuffle partition checkpoints every
+    * micro-batch, so 2 partitions keep local-FS churn small while
+    * exercising the same semantics. */
+  def withRocksDb[T](body: String => T): T = {
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val shuffle = "spark.sql.shuffle.partitions"
+    val prevProvider = spark.conf.getOption(provider)
+    val prevShuffle = spark.conf.get(shuffle)
+    val dir = java.nio.file.Files.createTempDirectory("graft_rocksdb")
+    spark.conf.set(provider,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    spark.conf.set(shuffle, "2")
+    try body(dir.toString)
+    finally {
+      prevProvider match {
+        case Some(v) => spark.conf.set(provider, v)
+        case None => spark.conf.unset(provider)
+      }
+      spark.conf.set(shuffle, prevShuffle)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
   /** Runs `body` with no checkpoint dir set, restoring it afterwards. */
   def withoutCheckpointDir[T](body: => T): T = swapCheckpointDir(null)(body)
 

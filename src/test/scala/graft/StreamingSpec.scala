@@ -544,8 +544,7 @@ class StreamingSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     // at 100 TB keyed state outgrows the JVM heap — RocksDB keeps it
     // off-heap/on-disk; same query code, one provider switch
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    withRocksDb { _ =>
     val input = MemoryStream[Change]
     val q = CdcPipeline.enrichLatest(input.toDS())
       .writeStream.format("memory").queryName("rocksdb_out")
@@ -558,9 +557,7 @@ class StreamingSpec extends SparkTestBase {
       q.processAllAvailable()
       val got = spark.table("rocksdb_out").as[Enriched].collect().map(_.payload).toSet
       assert(got == Set("row1", "row2"))
-    } finally {
-      q.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    } finally q.stop()
     }
   }
 
@@ -594,14 +591,7 @@ class StreamingSpec extends SparkTestBase {
   test("TWS checkpoint recovery: typed state variables survive a restart") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val shufKey = "spark.sql.shuffle.partitions"
-    val prevShuf = spark.conf.get(shufKey)
-    spark.conf.set(shufKey, "2")
-    val base = java.nio.file.Files.createTempDirectory("graft_tws_ckpt").toString
+    withRocksDb { base =>
     val input = MemoryStream[Change]
     def start() = graft.streaming.TwsEnrichment.enrichLatestTws(input.toDS()).toDF()
       .writeStream.format("parquet")
@@ -627,13 +617,7 @@ class StreamingSpec extends SparkTestBase {
         .map(e => (e.payload, e.enrichPayload)).toSet
       assert(got == Set(("order-a", "dim-v1"), ("order-early", "dim-v2")),
         got.toString)
-    } finally {
-      q.stop()
-      spark.conf.set(shufKey, prevShuf)
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    } finally q.stop()
     }
   }
 
@@ -705,20 +689,14 @@ class StreamingSpec extends SparkTestBase {
   test("TWS domain cap: first maxDocs per domain admit; micro-batch split is invariant") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val shufKey = "spark.sql.shuffle.partitions"
-    val prevShuf = spark.conf.get(shufKey)
-    spark.conf.set(shufKey, "2")
+    withRocksDb { dir =>
     // 5 docs on a hot domain, 2 on a quiet one, ordered feed sliced
     // mid-domain by the micro-batch boundary
     val docs = Seq(("a.com", 1L), ("a.com", 2L), ("b.com", 3L),
       ("a.com", 4L), ("a.com", 5L), ("b.com", 6L), ("a.com", 7L))
     def run(split: Int, name: String): Map[(String, Long), Long] = {
       val input = MemoryStream[(String, Long)]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_domcap").toString
+      val ckpt = s"$dir/$name"
       val q = graft.streaming.TwsDomainCap.admit(
           input.toDF().toDF("domain", "doc_id"), "domain", "doc_id", maxDocs = 3)
         .writeStream.format("memory").queryName(name)
@@ -733,20 +711,13 @@ class StreamingSpec extends SparkTestBase {
           .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
       } finally q.stop()
     }
-    try {
-      val got = run(4, "domcap_a")
-      // a.com admits its first three ids by arrival (1,2,4 — id 5
-      // arrives in batch two after the cap), b.com is under cap
-      assert(got == Map(("a.com", 1L) -> 1L, ("a.com", 2L) -> 2L,
-        ("a.com", 4L) -> 3L, ("b.com", 3L) -> 1L, ("b.com", 6L) -> 2L), got.toString)
-      // the ordered feed sliced elsewhere admits the same set
-      assert(run(2, "domcap_b") == got)
-    } finally {
-      spark.conf.set(shufKey, prevShuf)
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    val got = run(4, "domcap_a")
+    // a.com admits its first three ids by arrival (1,2,4 — id 5
+    // arrives in batch two after the cap), b.com is under cap
+    assert(got == Map(("a.com", 1L) -> 1L, ("a.com", 2L) -> 2L,
+      ("a.com", 4L) -> 3L, ("b.com", 3L) -> 1L, ("b.com", 6L) -> 2L), got.toString)
+    // the ordered feed sliced elsewhere admits the same set
+    assert(run(2, "domcap_b") == got)
     }
   }
 
@@ -833,18 +804,8 @@ class StreamingSpec extends SparkTestBase {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     // transformWithState requires the RocksDB state store provider
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // state partition count binds at query start; 32 RocksDB instances
-    // checkpointing per micro-batch is minutes of local-FS churn in a
-    // test — 2 partitions exercise identical semantics
-    val shufKey = "spark.sql.shuffle.partitions"
-    val prevShuf = spark.conf.get(shufKey)
-    spark.conf.set(shufKey, "2")
+    withRocksDb { ckpt =>
     val input = MemoryStream[Change]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_tws").toString
     val q = graft.streaming.TwsEnrichment.enrichLatestTws(input.toDS())
       .writeStream.format("memory").queryName("tws_enriched")
       .option("checkpointLocation", ckpt)
@@ -881,28 +842,15 @@ class StreamingSpec extends SparkTestBase {
         .map(e => (e.payload, e.enrichPayload)).toSet
       assert(got == Set(
         ("order-a", "dim-v1"), ("order-b", "dim-v2"), ("order-c", "dim-b")))
-    } finally {
-      q.stop()
-      spark.conf.set(shufKey, prevShuf)
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    } finally q.stop()
     }
   }
 
   test("TWS native TTL: an expired enrichment image no longer joins") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val shufKey = "spark.sql.shuffle.partitions"
-    val prevShuf = spark.conf.get(shufKey)
-    spark.conf.set(shufKey, "2")
+    withRocksDb { ckpt =>
     val input = MemoryStream[Change]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_tws_ttl").toString
     // ProcessingTime mode (required for TTL) schedules continuous
     // batches — poll the sink instead of processAllAvailable
     val q = graft.streaming.TwsEnrichment.enrichLatestTws(input.toDS(),
@@ -935,13 +883,7 @@ class StreamingSpec extends SparkTestBase {
       val got = spark.table("tws_ttl").as[Enriched].collect()
         .map(e => (e.payload, e.enrichPayload)).toSet
       assert(got == Set(("order-a", "dim-v1"), ("order-b", "dim-v2")))
-    } finally {
-      q.stop()
-      spark.conf.set(shufKey, prevShuf)
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    } finally q.stop()
     }
   }
 
@@ -956,13 +898,7 @@ class StreamingSpec extends SparkTestBase {
     // three shapes.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val shufKey = "spark.sql.shuffle.partitions"
-    val prevShuf = spark.conf.get(shufKey)
-    spark.conf.set(shufKey, "2")
+    withRocksDb { ckpt =>
     val docs = Seq(
       1L -> "the quick brown fox jumps over the lazy dog again and again today",
       2L -> "the quick brown fox jumps over the lazy cat again and again today",
@@ -975,7 +911,6 @@ class StreamingSpec extends SparkTestBase {
     // re-pairs against the head and MUST be collapsed downstream
     val result = graft.streaming.TwsDedup
       .candidatePairs(streamSigs, maxBucket = 1)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_tws_redeliver").toString
     val q = result.writeStream.format("memory").queryName("tws_redeliver")
       .option("checkpointLocation", ckpt)
       .outputMode(OutputMode.Append).start()
@@ -993,26 +928,14 @@ class StreamingSpec extends SparkTestBase {
         .map(r => (r.getLong(0), r.getLong(1))).toSeq
       assert(got.size == 1 && got.head == ((1L, 2L)),
         s"redelivery changed output: $got")
-    } finally {
-      q.stop()
-      spark.conf.set(shufKey, prevShuf)
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    } finally q.stop()
     }
   }
 
   test("TWS streaming near-dup dedup matches the batch MinHash-LSH result") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val shufKey = "spark.sql.shuffle.partitions"
-    val prevShuf = spark.conf.get(shufKey)
-    spark.conf.set(shufKey, "2")
+    withRocksDb { ckpt =>
     // planted near-dups: (1,2) inside batch one, (2,6) across the
     // micro-batch boundary, (3,7) across it too; 4,5,8 are singletons
     val docs = Seq(
@@ -1041,7 +964,6 @@ class StreamingSpec extends SparkTestBase {
     val result = graft.streaming.TwsDedup.verifiedPairs(
       graft.streaming.TwsDedup.candidatePairs(streamSigs),
       batchSigs.select("id", "hs"))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_tws_dedup").toString
     val q = result.writeStream.format("memory").queryName("tws_dedup")
       .option("checkpointLocation", ckpt)
       .outputMode(OutputMode.Append).start()
@@ -1057,13 +979,7 @@ class StreamingSpec extends SparkTestBase {
       val got = spark.table("tws_dedup").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(got == want, s"streaming $got != batch $want")
-    } finally {
-      q.stop()
-      spark.conf.set(shufKey, prevShuf)
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    } finally q.stop()
     }
   }
 
@@ -1081,13 +997,7 @@ class StreamingSpec extends SparkTestBase {
     // all in play.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val shufKey = "spark.sql.shuffle.partitions"
-    val prevShuf = spark.conf.get(shufKey)
-    spark.conf.set(shufKey, "2")
+    withRocksDb { dir =>
     val tDog = "the quick brown fox jumps over the lazy dog again and again today"
     val tCat = "the quick brown fox jumps over the lazy cat again and again today"
     val tRox = "structured streaming keeps state in rocksdb across micro batches forever"
@@ -1110,8 +1020,7 @@ class StreamingSpec extends SparkTestBase {
       val result =
         if (collapsed) graft.streaming.TwsDedup.candidatePairsCollapsed(sigs)
         else graft.streaming.TwsDedup.candidatePairs(sigs)
-      val ckpt = java.nio.file.Files
-        .createTempDirectory(s"graft_tws_collapse_$tag").toString
+      val ckpt = s"$dir/$tag"
       val q = result.toDF().writeStream.format("memory").queryName(s"twsc_$tag")
         .option("checkpointLocation", ckpt)
         .outputMode(OutputMode.Append).start()
@@ -1124,31 +1033,24 @@ class StreamingSpec extends SparkTestBase {
           .map(r => (r.getLong(0), r.getLong(1))).toSet
       } finally q.stop()
     }
-    try {
-      val plain = run(collapsed = false, "plain")
-      val coll = run(collapsed = true, "coll")
-      // the plain set must actually exercise mirrors (same-content pairs)
-      assert(plain.contains((1L, 4L)), s"mirror pair missing from plain: $plain")
-      val plainModuloReps = plain
-        .map { case (a, b) => (repOf(a), repOf(b)) }
-        .filter { case (a, b) => a != b }
-        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-      assert(coll == plainModuloReps,
-        s"collapsed $coll != plain-modulo-reps $plainModuloReps")
-      // collapsed output touches representatives only — a mirror id
-      // (4, 5, 7) must never appear
-      val mirrorTouched = coll.flatMap(p => Seq(p._1, p._2))
-        .intersect(Set(4L, 5L, 7L))
-      assert(mirrorTouched.isEmpty, s"mirror ids in collapsed: $mirrorTouched")
-      // and the near-dup content pairs themselves are present
-      assert(coll.contains((1L, 2L)) && coll.contains((1L, 6L)),
-        s"expected rep-level near-dup pairs in $coll")
-    } finally {
-      spark.conf.set(shufKey, prevShuf)
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    val plain = run(collapsed = false, "plain")
+    val coll = run(collapsed = true, "coll")
+    // the plain set must actually exercise mirrors (same-content pairs)
+    assert(plain.contains((1L, 4L)), s"mirror pair missing from plain: $plain")
+    val plainModuloReps = plain
+      .map { case (a, b) => (repOf(a), repOf(b)) }
+      .filter { case (a, b) => a != b }
+      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+    assert(coll == plainModuloReps,
+      s"collapsed $coll != plain-modulo-reps $plainModuloReps")
+    // collapsed output touches representatives only — a mirror id
+    // (4, 5, 7) must never appear
+    val mirrorTouched = coll.flatMap(p => Seq(p._1, p._2))
+      .intersect(Set(4L, 5L, 7L))
+    assert(mirrorTouched.isEmpty, s"mirror ids in collapsed: $mirrorTouched")
+    // and the near-dup content pairs themselves are present
+    assert(coll.contains((1L, 2L)) && coll.contains((1L, 6L)),
+      s"expected rep-level near-dup pairs in $coll")
     }
   }
 
@@ -1156,20 +1058,13 @@ class StreamingSpec extends SparkTestBase {
        "micro-batch boundaries, later smaller ids, and redelivery") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val shufKey = "spark.sql.shuffle.partitions"
-    val prevShuf = spark.conf.get(shufKey)
-    spark.conf.set(shufKey, "2")
+    withRocksDb { ckpt =>
     val x = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda"
     val y = "completely different text about parquet files and column pruning at scale"
     val input = MemoryStream[(Long, String)]
     val sigs = graft.operators.Dedup.withMinHashSignatures(
       input.toDF().toDF("doc_id", "text"), "text", "doc_id")
     val result = graft.streaming.TwsDedup.contentReps(sigs)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_tws_reps").toString
     val q = result.toDF().writeStream.format("memory").queryName("tws_reps")
       .option("checkpointLocation", ckpt)
       .outputMode(OutputMode.Append).start()
@@ -1190,28 +1085,15 @@ class StreamingSpec extends SparkTestBase {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == Set((5L, 5L), (9L, 5L), (3L, 3L), (1L, 5L), (7L, 3L)),
         s"reps after batch 2: $got")
-    } finally {
-      q.stop()
-      spark.conf.set(shufKey, prevShuf)
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    } finally q.stop()
     }
   }
 
   test("TWS timers: an orphan buffered row dead-letters after the buffer timeout") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val shufKey = "spark.sql.shuffle.partitions"
-    val prevShuf = spark.conf.get(shufKey)
-    spark.conf.set(shufKey, "2")
+    withRocksDb { ckpt =>
     val input = MemoryStream[Change]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_tws_timer").toString
     val q = graft.streaming.TwsEnrichment.enrichLatestTwsWithTimeout(input.toDS(),
         bufferTimeout = java.time.Duration.ofSeconds(3))
       .writeStream.format("memory").queryName("tws_timer")
@@ -1248,13 +1130,7 @@ class StreamingSpec extends SparkTestBase {
         ("covered-order", Some("dim-b")), ("orphan-order", None),
         ("order-after", Some("dim-a-late"))),
         s"dead-lettered row re-emitted or lost: ${rows()}")
-    } finally {
-      q.stop()
-      spark.conf.set(shufKey, prevShuf)
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    } finally q.stop()
     }
   }
 
@@ -1262,15 +1138,8 @@ class StreamingSpec extends SparkTestBase {
       "still cannot resurrect a deleted key") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val shufKey = "spark.sql.shuffle.partitions"
-    val prevShuf = spark.conf.get(shufKey)
-    spark.conf.set(shufKey, "2")
+    withRocksDb { ckpt =>
     val input = MemoryStream[Change]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_tws_tomb").toString
     // the recommended configuration: tombstone window = 3× image TTL
     val q = graft.streaming.TwsEnrichment.enrichLatestTws(input.toDS(),
         ttl = Some(java.time.Duration.ofSeconds(5)),
@@ -1307,13 +1176,7 @@ class StreamingSpec extends SparkTestBase {
       val got = spark.table("tws_tomb").as[Enriched].collect()
         .map(e => (e.payload, e.enrichPayload)).toSet
       assert(got == Set(("order-a", "dim-v1"), ("order-b", "dim-v2")))
-    } finally {
-      q.stop()
-      spark.conf.set(shufKey, prevShuf)
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    } finally q.stop()
     }
   }
 
@@ -1357,30 +1220,12 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  private def withTwsConf[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val shufKey = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(key)
-    val prevShuf = spark.conf.get(shufKey)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(shufKey, "2")
-    try body finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-      spark.conf.set(shufKey, prevShuf)
-    }
-  }
-
   test("TwsTrending: per-group window top-k across micro-batches equals exact counts") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withTwsConf {
+    withRocksDb { ckpt =>
     val input = MemoryStream[(String, Long, String)] // (group, ms, text)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_trend").toString
     val q = graft.streaming.TwsTrending.trending(
         input.toDS().toDF("group", "ms", "text")
           .withColumn("ts", timestamp_millis(col("ms"))),
@@ -1415,7 +1260,7 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withTwsConf {
+    withRocksDb { ckpt =>
     val B = 1704067200L // 2024-01-01 UTC, seconds
     def ms(s: Long) = (B + s) * 1000L
     // the batch spec's stream: pre-trigger click, late binding click,
@@ -1441,7 +1286,6 @@ class StreamingSpec extends SparkTestBase {
         Seq(r.getLong(4), r.getLong(6)))).toSet
     val batchExpired = batch.filterNot(_.getBoolean(7)).map(_.getLong(0)).toSet
     val input = MemoryStream[(Long, Long, Long, String)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cep").toString
     val q = graft.streaming.TwsCep.episodes(
         input.toDS().toDF("event_id", "user_id", "ms", "event_type")
           .withColumn("ts", timestamp_millis(col("ms"))),
@@ -1493,7 +1337,7 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withTwsConf {
+    withRocksDb { ckpt =>
     val B = 1704067200L // 2024-01-01 UTC, seconds
     def ms(s: Long) = (B + s) * 1000L
     // TWO view triggers for user 1 whose windows overlap (0 and 50,
@@ -1517,7 +1361,6 @@ class StreamingSpec extends SparkTestBase {
     assert(batch == Set((1L, Seq(3L, 5L), true), (2L, Seq(4L, 5L), true)),
       s"batch truth moved: $batch")
     val input = MemoryStream[(Long, Long, Long, String)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cep2").toString
     val q = graft.streaming.TwsCep.episodes(
         input.toDS().toDF("event_id", "user_id", "ms", "event_type")
           .withColumn("ts", timestamp_millis(col("ms"))),
@@ -1546,7 +1389,7 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withTwsConf {
+    withRocksDb { ckpt =>
     val B = 1704067200L // 2024-01-01 UTC, seconds
     def ms(s: Long) = (B + s) * 1000L
     val Gap = 1800L
@@ -1576,7 +1419,6 @@ class StreamingSpec extends SparkTestBase {
         (col("e") * 1000).as("end_ms"), col("n"))
       .as[(Long, Long, Long, Long)].collect().toSet
     val input = MemoryStream[(Long, Long, Long)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sess").toString
     val q = graft.streaming.TwsSessionize.sessions(
         input.toDS().toDF("event_id", "user_id", "ms")
           .withColumn("ts", timestamp_millis(col("ms"))),
@@ -1618,7 +1460,7 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withTwsConf {
+    withRocksDb { ckpt =>
     val B = 1704067200L // 2024-01-01 UTC, seconds
     def ms(s: Long) = (B + s) * 1000L
     // user 1: 20 events 10s apart, cents steps 1000 → 10000 at idx 10
@@ -1644,7 +1486,6 @@ class StreamingSpec extends SparkTestBase {
       .as[(Long, Long, Long, Long, Long)].collect().toSet
     assert(batch.nonEmpty, "the planted step must flag in batch")
     val input = MemoryStream[(Long, Long, Long, Long)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_shift").toString
     val q = graft.streaming.TwsMeanShift.shifts(
         input.toDS().toDF("event_id", "user_id", "ms", "cents")
           .withColumn("ts", timestamp_millis(col("ms"))),
@@ -1690,7 +1531,7 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withTwsConf {
+    withRocksDb { ckpt =>
     val B = 1704067200L // 2024-01-01 UTC, seconds
     def ms(s: Long) = (B + s) * 1000L
     // ids 0..39 (blocks 0..3 at blockSize 10), ts = B + id seconds;
@@ -1703,7 +1544,6 @@ class StreamingSpec extends SparkTestBase {
     val truth = ids.groupBy(_ / 10).map { case (b, xs) =>
       (b, xs.size.toLong, 10L - xs.size) }.toSet
     val input = MemoryStream[(Long, Long)] // (event_id, eventTimeMs)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_seqgap").toString
     val q = graft.streaming.TwsSeqGap.audit(
         input.toDS().toDF("event_id", "ms")
           .withColumn("ts", timestamp_millis(col("ms"))),
@@ -1741,11 +1581,10 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withTwsConf {
+    withRocksDb { ckpt =>
     val B = 1704067200L
     def ms(s: Long) = (B + s) * 1000L
     val input = MemoryStream[(Long, Long)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_seqgap2").toString
     val q = graft.streaming.TwsSeqGap.audit(
         input.toDS().toDF("event_id", "ms")
           .withColumn("ts", timestamp_millis(col("ms"))),
@@ -1784,11 +1623,10 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withTwsConf {
+    withRocksDb { ckpt =>
     val B = 1704067200L
     def ms(s: Long) = (B + s) * 1000L
     val input = MemoryStream[(Long, Long)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_seqgap3").toString
     // short 600 s tombstone so the expiry path is reachable in-test
     val q = graft.streaming.TwsSeqGap.audit(
         input.toDS().toDF("event_id", "ms")
@@ -1829,10 +1667,9 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withTwsConf {
+    withRocksDb { base =>
     val B = 1704067200L
     def ms(s: Long) = (B + s) * 1000L
-    val base = java.nio.file.Files.createTempDirectory("graft_seqgap4").toString
     val input = MemoryStream[(Long, Long)]
     def start() = graft.streaming.TwsSeqGap.audit(
         input.toDS().toDF("event_id", "ms")
@@ -1872,7 +1709,7 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withTwsConf {
+    withRocksDb { ckpt =>
     val W = 7L
     val Day0 = 19723L // 2024-01-01 in epoch days
     def tsMs(day: Long, secInDay: Long) = (Day0 + day) * 86400000L + secInDay * 1000L
@@ -1898,7 +1735,6 @@ class StreamingSpec extends SparkTestBase {
       }
     }.toSet
     val input = MemoryStream[(Long, Long)] // (user_id, eventTimeMs)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_activeusers").toString
     val q = graft.streaming.TwsActiveUsers.coverage(
         input.toDS().toDF("user_id", "ms")
           .withColumn("ts", timestamp_millis(col("ms"))),
@@ -1944,9 +1780,8 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withTwsConf {
+    withRocksDb { ckpt =>
     val input = MemoryStream[(String, Long, String)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_trend_sh").toString
     // shards = 4 spreads group a's vocabulary over 4 state keys — the
     // hot-group fan-out; same data shape as the unsharded spec
     val q = graft.streaming.TwsTrending.trendingSharded(
@@ -1985,9 +1820,8 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withTwsConf {
+    withRocksDb { ckpt =>
     val input = MemoryStream[(String, Long, String)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_trend_mg").toString
     val q = graft.streaming.TwsTrending.trending(
         input.toDS().toDF("group", "ms", "text")
           .withColumn("ts", timestamp_millis(col("ms"))),
@@ -2055,10 +1889,7 @@ class StreamingSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.TwsScd2
     import graft.streaming.TwsScd2.ChgRow
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    withRocksDb { ckpt =>
     val chg = Seq(
       ChgRow(1L, 100L, 1, "I", "a1"),
       ChgRow(1L, 200L, 2, "U", "a2"), // closes a1 inside batch one
@@ -2078,7 +1909,6 @@ class StreamingSpec extends SparkTestBase {
     assert(want == Set((1L, "a1", 100L, 200L), (1L, "a2", 200L, 300L),
       (2L, "b1", 100L, 250L), (3L, "c1", 100L, 100L)), s"batch history $want")
     val input = MemoryStream[ChgRow]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_tws_scd2").toString
     val q = TwsScd2.closedVersions(input.toDS()).toDF()
       .writeStream.format("memory").queryName("tws_scd2")
       .option("checkpointLocation", ckpt)
@@ -2095,12 +1925,7 @@ class StreamingSpec extends SparkTestBase {
       val got = spark.table("tws_scd2").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
       assert(got == want, s"streaming $got != batch $want")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    } finally q.stop()
     }
   }
 
@@ -2115,14 +1940,7 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val shufKey = "spark.sql.shuffle.partitions"
-    val prevShuf = spark.conf.get(shufKey)
-    spark.conf.set(shufKey, "2")
-
+    withRocksDb { ckpt =>
     val bench = Seq((100L,
       "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
       .toDF("doc_id", "text")
@@ -2178,7 +1996,6 @@ class StreamingSpec extends SparkTestBase {
     val result = graft.streaming.TwsDedup.verifiedPairs(
       graft.streaming.TwsDedup.candidatePairs(streamSigs),
       store.select("id", "hs"))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_curation").toString
     val q = result.writeStream.format("memory").queryName("stream_curation")
       .option("checkpointLocation", ckpt)
       .outputMode(OutputMode.Append).start()
@@ -2198,13 +2015,7 @@ class StreamingSpec extends SparkTestBase {
       val droppedTouched = got.flatMap(p => Seq(p._1, p._2))
         .intersect(Set(4L, 5L, 9L, 10L))
       assert(droppedTouched.isEmpty, s"dropped docs in pairs: $droppedTouched")
-    } finally {
-      q.stop()
-      spark.conf.set(shufKey, prevShuf)
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    } finally q.stop()
     }
   }
 
@@ -2224,7 +2035,7 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withTwsConf {
+    withRocksDb { dir =>
     val bench = Seq((100L,
       "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
       .toDF("doc_id", "text")
@@ -2269,8 +2080,8 @@ class StreamingSpec extends SparkTestBase {
           graft.operators.Dedup.withMinHashSignatures(
             curate(input.toDF()), "text", "doc_id")),
         store)
-      val out = java.nio.file.Files.createTempDirectory("graft_crash_out").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_crash_ck").toString
+      val out = s"$dir/out_$kill"
+      val ckpt = s"$dir/ckpt_$kill"
       def start() = pairs.writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", ckpt)
         .outputMode(OutputMode.Append).start()
@@ -2409,10 +2220,9 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withTwsConf {
+    withRocksDb { base =>
     val Day0 = 19723L
     def sec(s: Long) = Day0 * 86400L + s
-    val base = java.nio.file.Files.createTempDirectory("graft_burst_ck").toString
     val input = MemoryStream[(String, Long)]
     def start() = graft.streaming.TwsBurstiness.moments(
         input.toDS().toDF("event_type", "s")
@@ -2452,7 +2262,7 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withTwsConf {
+    withRocksDb { ckpt =>
     val Day0 = 19723L // 2024-01-01 in epoch days
     def sec(day: Long, s: Long) = (Day0 + day) * 86400L + s
     // (type, day, second-in-day): same-second duplicates (zero gaps),
@@ -2468,7 +2278,6 @@ class StreamingSpec extends SparkTestBase {
         (t, d, xs.size.toLong, xs.size - 1L, gaps.sum, gaps.map(g => g * g).sum)
     }.toSet
     val input = MemoryStream[(String, Long)] // (event_type, eventTimeSec)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_burst").toString
     val q = graft.streaming.TwsBurstiness.moments(
         input.toDS().toDF("event_type", "s")
           .withColumn("ts", timestamp_seconds(col("s"))),
@@ -2514,7 +2323,7 @@ class StreamingSpec extends SparkTestBase {
     // the cap) -- pinned here as the documented residual.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withTwsConf {
+    withRocksDb { ckpt =>
     val tDog = "the quick brown fox jumps over the lazy dog again and again today"
     val tCat = "the quick brown fox jumps over the lazy cat again and again today"
     val input = MemoryStream[(Long, String)]
@@ -2523,8 +2332,6 @@ class StreamingSpec extends SparkTestBase {
     // cap 1: doc 1's content fills every one of its buckets
     val result = graft.streaming.TwsDedup
       .candidatePairsCollapsed(sigs, maxBucket = 1)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_tws_overcap").toString
     val q = result.toDF().writeStream.format("memory").queryName("tws_overcap")
       .option("checkpointLocation", ckpt)
       .outputMode(OutputMode.Append).start()
@@ -2564,7 +2371,7 @@ class StreamingSpec extends SparkTestBase {
     // -- old, expired reps never resurface in pairs.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withTwsConf {
+    withRocksDb { ckpt =>
     val tDog = "the quick brown fox jumps over the lazy dog again and again today"
     val tCat = "the quick brown fox jumps over the lazy cat again and again today"
     val input = MemoryStream[(Long, String)]
@@ -2572,8 +2379,6 @@ class StreamingSpec extends SparkTestBase {
       input.toDF().toDF("doc_id", "text"), "text", "doc_id")
     val result = graft.streaming.TwsDedup.candidatePairsCollapsed(
       sigs, ttl = Some(java.time.Duration.ofSeconds(4)))
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_tws_ttlcollapse").toString
     // ProcessingTime mode (required for TTL) schedules continuous
     // batches -- poll the sink instead of processAllAvailable
     val q = result.toDF().writeStream.format("memory").queryName("tws_ttlc")
