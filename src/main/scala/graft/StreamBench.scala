@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.streaming.{CdcPipeline, TwsActiveUsers, TwsBurstiness, TwsCep,
-  TwsDedup, TwsDomainCap, TwsEnrichment, TwsMeanShift, TwsScd2, TwsSeqGap,
+  TwsDedup, TwsDomainCap, TwsMeanShift, TwsScd2, TwsSeqGap,
   TwsSessionize, TwsTrending}
 
 /** Streaming performance posture (r15 item 5, extended r16 to the FULL
@@ -302,11 +302,11 @@ object StreamBench {
       TwsSessionize.sessions(ev, gapSecs = 1800L, delay = "10 minutes").toDF()
     }
 
-    // 3) TwsEnrichment: latest-image enrichment — events replayed as a
+    // 3) CdcEnrichment: latest-image enrichment — events replayed as a
     //    CDC change stream keyed by user (error rows act as enrichment
     //    images, the rest as stream rows buffering/flushing against
     //    them) — exercises image update + buffer + flush state paths.
-    bench("TwsEnrichment", "events", filesPerTrigger = 4) { ev =>
+    bench("CdcEnrichment", "events", filesPerTrigger = 4) { ev =>
       val changes = ev.select(
         col("user_id").as("key"),
         unix_millis(col("ts").cast("timestamp")).as("eventTimeMs"),
@@ -315,7 +315,7 @@ object StreamBench {
         lit("I").as("manip"),
         (col("event_id") % 1000000).cast("int").as("seq")
       ).as[CdcPipeline.Change]
-      TwsEnrichment.enrichLatestTws(changes).toDF()
+      CdcPipeline.enrichLatest(changes).toDF()
     }
 
     // 4) TwsSeqGap: per-block completeness audit over the event_id

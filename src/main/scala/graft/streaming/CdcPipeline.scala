@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.time.Duration
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -18,7 +20,9 @@ import graft.GraftFunctions
   * primitive is `flatMapGroupsWithState`: [[enrichLatest]] unions the
   * two streams, groups by key, and keeps (latest enrichment, buffered
   * rows) as the group state — same semantics, engine-managed state
-  * store (RocksDB/HDFS-checkpointed on a real cluster).
+  * store (RocksDB/HDFS-checkpointed on a real cluster). It is the one
+  * enrichment engine; its optional state lifetimes run on Spark's
+  * processing-time group timeout.
   */
 object CdcPipeline {
 
@@ -40,11 +44,51 @@ object CdcPipeline {
     * wire (op_ts, seq) so recency comparisons use the SAME total order
     * as the batch twin (`Cdc.latestImage` sorts by (op_ts, seq)) even
     * when records at one op timestamp arrive in different
-    * micro-batches. */
-  case class EnrichState(latest: Option[(Long, Int, String)],
-                         buffered: List[(Long, String)],
+    * micro-batches. Each part also keeps the processing time it was
+    * written at (`latestAt`, a buffered row's first field, `deleteAt`):
+    * [[enrichLatest]]'s optional lifetimes count from it. Buffered rows
+    * are (writtenAtMs, eventTimeMs, payload), newest first. */
+  case class EnrichState(latest: Option[(Long, Int, String)] = None,
+                         latestAt: Long = 0L,
+                         buffered: List[(Long, Long, String)] = Nil,
                          deleteTs: Long = Long.MinValue,
-                         deleteSeq: Int = Int.MinValue)
+                         deleteSeq: Int = Int.MinValue,
+                         deleteAt: Long = 0L) {
+    def hasTombstone: Boolean = deleteTs != Long.MinValue
+    def isEmpty: Boolean = latest.isEmpty && buffered.isEmpty && !hasTombstone
+  }
+
+  /** [[enrichLatest]]'s optional state lifetimes, in ms. A buffered
+    * row lives for the shorter of `ttl` and `bufferTimeout`. */
+  private case class Lifetimes(ttl: Option[Long], tombstoneTtl: Option[Long],
+                               bufferTimeout: Option[Long]) {
+    private val all = Seq(ttl, tombstoneTtl, bufferTimeout).flatten
+    require(all.forall(_ > 0), "state lifetimes must be positive")
+    private val buffer = (ttl ++ bufferTimeout).minOption
+
+    def any: Boolean = all.nonEmpty
+
+    /** `st` without the parts whose lifetime ran out by `now`, and the
+      * expired buffered rows as dead letters, oldest first. */
+    def expire(key: Long, st: EnrichState, now: Long): (EnrichState, List[Enriched]) =
+      if (!any) (st, Nil)
+      else {
+        def over(at: Long, life: Option[Long]) = life.exists(at + _ <= now)
+        val (dead, kept) = st.buffered.partition(b => over(b._1, buffer))
+        val live = st.copy(latest = st.latest.filterNot(_ => over(st.latestAt, ttl)),
+          buffered = kept)
+        (if (over(st.deleteAt, tombstoneTtl))
+           live.copy(deleteTs = Long.MinValue, deleteSeq = Int.MinValue)
+         else live,
+         dead.reverse.map(b => Enriched(key, b._2, b._3, null)))
+      }
+
+    /** The earliest time a part of `st` expires, if any part can. */
+    def deadline(st: EnrichState): Option[Long] =
+      (st.latest.flatMap(_ => ttl.map(st.latestAt + _)) ++
+        buffer.flatMap(life => st.buffered.map(_._1 + life).minOption) ++
+        tombstoneTtl.filter(_ => st.hasTombstone).map(st.deleteAt + _)).minOption
+  }
 
   /** The pruned envelope read schema (only the fields the pipeline
     * consumes — from_json skips converting the rest). */
@@ -102,20 +146,7 @@ object CdcPipeline {
     df.withWatermark(eventTimeCol, watermark)
       .dropDuplicatesWithinWatermark(idCols.head, idCols.tail: _*)
 
-  /** Latest-value enrichment join over two keyed change streams.
-    * Stream rows that arrive before their enrichment are buffered in
-    * state and flushed when it lands (ref EnrichmentJoin.java:64-95).
-    *
-    * State is per-key and BOUNDED: `maxBuffered` caps the early-row
-    * buffer (oldest dropped first) so a key whose enrichment never
-    * arrives cannot grow state without limit — at 100 TB the state
-    * store shards by key across executors and per-key state must stay
-    * O(1). The reference's ListState has no such bound; this is the
-    * production-hardened form. */
-  /** The per-key, per-micro-batch state fold shared by BOTH streaming
-    * engines ([[enrichLatest]] on flatMapGroupsWithState,
-    * [[TwsEnrichment.enrichLatestTws]] on transformWithState) — one
-    * definition, so the two operators cannot drift semantically.
+  /** The per-key, per-micro-batch state fold of [[enrichLatest]].
     *
     * Processes the key's batch slice in a total, DETERMINISTIC order:
     * event time, then side, then the wire transaction-row seq, then
@@ -127,10 +158,11 @@ object CdcPipeline {
     * materializing it (a one-pass fold would tie output to shuffle
     * arrival order); one ArrayBuffer + sortInPlace keeps that to a
     * single allocation, and the slice is bounded by the micro-batch
-    * (maxOffsetsPerTrigger & co. in production), not stream history. */
-  private[streaming] def foldChanges(key: Long, rows: Iterator[Change],
-                                     initial: EnrichState, maxBuffered: Int)
-      : (EnrichState, Seq[Enriched]) = {
+    * (maxOffsetsPerTrigger & co. in production), not stream history.
+    * Every part written here is stamped with the batch's processing
+    * time `nowMs`. */
+  private def foldChanges(key: Long, rows: Iterator[Change], initial: EnrichState,
+                          maxBuffered: Int, nowMs: Long): (EnrichState, Seq[Enriched]) = {
     var st = initial
     val out = scala.collection.mutable.ListBuffer[Enriched]()
     // the batch twin's total order over CDC records
@@ -152,7 +184,7 @@ object CdcPipeline {
           if (st.latest.forall { case (ts, sq, _) =>
             le(ts, sq, c.eventTimeMs, c.seq) }) st = st.copy(latest = None)
           if (!le(c.eventTimeMs, c.seq, st.deleteTs, st.deleteSeq))
-            st = st.copy(deleteTs = c.eventTimeMs, deleteSeq = c.seq)
+            st = st.copy(deleteTs = c.eventTimeMs, deleteSeq = c.seq, deleteAt = nowMs)
         } else if (le(st.deleteTs, st.deleteSeq, c.eventTimeMs, c.seq) &&
           st.latest.forall { case (ts, sq, _) =>
             le(ts, sq, c.eventTimeMs, c.seq) }) {
@@ -160,9 +192,9 @@ object CdcPipeline {
           // (op_ts, seq) order (image wins an exact delete/image
           // tie, matching the batch twin where the later record
           // of a transaction wins)
-          st = st.copy(latest = Some((c.eventTimeMs, c.seq, c.payload)))
+          st = st.copy(latest = Some((c.eventTimeMs, c.seq, c.payload)), latestAt = nowMs)
           if (st.buffered.nonEmpty) {
-            st.buffered.reverse.foreach { case (t, p) =>
+            st.buffered.reverse.foreach { case (_, t, p) =>
               out += Enriched(key, t, p, c.payload)
             }
             st = st.copy(buffered = Nil)
@@ -173,24 +205,71 @@ object CdcPipeline {
         case None =>
           // buffered is newest-first; cap drops the oldest
           st = st.copy(buffered =
-            ((c.eventTimeMs, c.payload) :: st.buffered).take(maxBuffered))
+            ((nowMs, c.eventTimeMs, c.payload) :: st.buffered).take(maxBuffered))
       }
     }
     (st, out.toList)
   }
 
-  def enrichLatest(changes: Dataset[Change],
-                   maxBuffered: Int = 1000): Dataset[Enriched] = {
+  /** Latest-value enrichment join over two keyed change streams.
+    * Stream rows that arrive before their enrichment are buffered in
+    * state and flushed when it lands (ref EnrichmentJoin.java:64-95).
+    *
+    * State is per-key and BOUNDED: `maxBuffered` caps the early-row
+    * buffer (oldest dropped first) so a key whose enrichment never
+    * arrives cannot grow state without limit — at 100 TB the state
+    * store shards by key across executors and per-key state must stay
+    * O(1). The reference's ListState has no such bound; this is the
+    * production-hardened form.
+    *
+    * Three optional processing-time lifetimes bound state by rate ×
+    * lifetime instead of keyspace. A part past its lifetime reads as
+    * absent: it never joins, and a key with nothing left is removed.
+    *  - `ttl`: the image and each buffered row live this long after
+    *    they are written.
+    *  - `tombstoneTtl`: the delete tombstone's lifetime. Without it the
+    *    tombstone (16 B/key) is kept forever, so the resurrection guard
+    *    holds unconditionally. Set it MUCH longer than `ttl` (≥ 3×):
+    *    inside the window the guard is unchanged, but an enrichment row
+    *    staler than the window could resurrect a deleted key.
+    *  - `bufferTimeout`: a stream row that waits this long for its image
+    *    leaves the buffer.
+    * An expired buffered row (by `ttl` or `bufferTimeout`) is emitted
+    * as a DEAD LETTER with `enrichPayload = null` — the downstream
+    * splits on `enrichPayload IS NULL` (results vs DLQ), the routing
+    * contract of [[decodeEnvelopeWithDeadLetter]] — and a late image
+    * does not re-emit it.
+    *
+    * With no lifetime set the operator runs `GroupStateTimeout.NoTimeout`
+    * and ordinary data-driven batches. With any set it runs
+    * `ProcessingTimeTimeout`, each key armed at its earliest deadline;
+    * the engine then keeps scheduling no-data batches to fire timeouts,
+    * so `processAllAvailable()` never quiesces — poll the sink.
+    *
+    * CHECKPOINT COMPATIBILITY: the state schema is [[EnrichState]]. A
+    * checkpoint written before its write-time fields existed cannot
+    * restart this operator (Spark's state schema check rejects it);
+    * start such a query from a fresh checkpoint directory. */
+  def enrichLatest(changes: Dataset[Change], maxBuffered: Int = 1000,
+                   ttl: Option[Duration] = None, tombstoneTtl: Option[Duration] = None,
+                   bufferTimeout: Option[Duration] = None): Dataset[Enriched] = {
     import changes.sparkSession.implicits._
+    val life = Lifetimes(ttl.map(_.toMillis), tombstoneTtl.map(_.toMillis),
+      bufferTimeout.map(_.toMillis))
     changes
       .groupByKey(_.key)
-      .flatMapGroupsWithState[EnrichState, Enriched](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+      .flatMapGroupsWithState[EnrichState, Enriched](OutputMode.Append,
+        if (life.any) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout) {
         (key: Long, rows: Iterator[Change], state: GroupState[EnrichState]) =>
-          val (st, out) = foldChanges(key, rows,
-            state.getOption.getOrElse(EnrichState(None, Nil)), maxBuffered)
-          state.update(st)
-          out.iterator
+          val now = state.getCurrentProcessingTimeMs()
+          val (live, dead) = life.expire(key, state.getOption.getOrElse(EnrichState()), now)
+          val (st, out) = foldChanges(key, rows, live, maxBuffered, now)
+          if (st.isEmpty) state.remove()
+          else {
+            state.update(st)
+            life.deadline(st).foreach(d => state.setTimeoutDuration(d - now))
+          }
+          dead.iterator ++ out.iterator
       }
   }
 

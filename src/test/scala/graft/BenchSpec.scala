@@ -1,9 +1,8 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
-/** The bench's host-load sentinel verdict — pure logic, no Spark. */
-class BenchSpec extends AnyFunSuite {
+/** The bench's host-load sentinel verdict — pure logic; the shared
+  * session stays unstarted. */
+class BenchSpec extends SparkTestBase {
 
   test("sentinel verdict: quiet / loaded / noisy / unknown boundaries") {
     val v = Bench.sentinelVerdict _
@@ -156,58 +155,62 @@ class BenchSpec extends AnyFunSuite {
   test("nonClobbering: an existing round-versioned artifact is never " +
        "overwritten — reruns land at _rerunK and stay OUT of the " +
        "qv_vs_prev baseline scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bench_nc").toFile
-    def touch(name: String): java.io.File = {
-      val f = new java.io.File(dir, name)
-      java.nio.file.Files.write(f.toPath, "{}".getBytes("UTF-8")); f
+    withTempDir { path =>
+      val dir = new java.io.File(path)
+      def touch(name: String): java.io.File = {
+        val f = new java.io.File(dir, name)
+        java.nio.file.Files.write(f.toPath, "{}".getBytes("UTF-8")); f
+      }
+      val target = new java.io.File(dir, "BENCH_FULL_r15.json").getPath
+      // free path → used as-is
+      assert(Bench.nonClobbering(target) == target)
+      // taken → first rerun slot
+      touch("BENCH_FULL_r15.json")
+      assert(Bench.nonClobbering(target)
+        == new java.io.File(dir, "BENCH_FULL_r15_rerun1.json").getPath)
+      touch("BENCH_FULL_r15_rerun1.json")
+      assert(Bench.nonClobbering(target)
+        == new java.io.File(dir, "BENCH_FULL_r15_rerun2.json").getPath)
+      // rerun artifacts must NOT be picked up as a round baseline: the
+      // throttled r15 bench leg is exactly what qv_vs_prev must not
+      // compare against
+      touch("BENCH_FULL_r15_rerun2.json")
+      val out = new java.io.File(dir, "BENCH_FULL.json").getPath
+      java.nio.file.Files.write(new java.io.File(dir, "BENCH_FULL_r15.json").toPath,
+        """{"metric":"total","value":2.0,"unit":"sec","queries":{"q1_agg":1.5},"sf":"x"}"""
+          .getBytes("UTF-8"))
+      assert(Bench.previousRoundMedians(out)
+        .contains(("r15", Map("q1_agg" -> 1.5))))
     }
-    val target = new java.io.File(dir, "BENCH_FULL_r15.json").getPath
-    // free path → used as-is
-    assert(Bench.nonClobbering(target) == target)
-    // taken → first rerun slot
-    touch("BENCH_FULL_r15.json")
-    assert(Bench.nonClobbering(target)
-      == new java.io.File(dir, "BENCH_FULL_r15_rerun1.json").getPath)
-    touch("BENCH_FULL_r15_rerun1.json")
-    assert(Bench.nonClobbering(target)
-      == new java.io.File(dir, "BENCH_FULL_r15_rerun2.json").getPath)
-    // rerun artifacts must NOT be picked up as a round baseline: the
-    // throttled r15 driver leg is exactly what qv_vs_prev must not
-    // compare against
-    touch("BENCH_FULL_r15_rerun2.json")
-    val out = new java.io.File(dir, "BENCH_FULL.json").getPath
-    java.nio.file.Files.write(new java.io.File(dir, "BENCH_FULL_r15.json").toPath,
-      """{"metric":"total","value":2.0,"unit":"sec","queries":{"q1_agg":1.5},"sf":"x"}"""
-        .getBytes("UTF-8"))
-    assert(Bench.previousRoundMedians(out)
-      .contains(("r15", Map("q1_agg" -> 1.5))))
   }
 
   test("previousRoundMedians reads the highest committed round's queries table") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bench").toFile
-    def write(name: String, body: String): Unit =
-      java.nio.file.Files.write(new java.io.File(dir, name).toPath,
-        body.getBytes("UTF-8"))
-    val out = new java.io.File(dir, "BENCH_FULL.json").getPath
-    // no prior artifact → None (round 1)
-    assert(Bench.previousRoundMedians(out).isEmpty)
-    write("BENCH_FULL_r05.json",
-      """{"metric":"total","value":2.0,"unit":"sec","queries":{"q1_agg":1.5,"zz":0.25},"sf":"x"}""")
-    write("BENCH_FULL_r04.json",
-      """{"metric":"total","value":9.0,"unit":"sec","queries":{"q1_agg":9.0},"sf":"x"}""")
-    val got = Bench.previousRoundMedians(out)
-    assert(got.contains(("r05", Map("q1_agg" -> 1.5, "zz" -> 0.25))))
-    // a qv_vs_prev block BEFORE the queries table must not confuse the
-    // parse (the shape this round's own artifact will have next round)
-    write("BENCH_FULL_r06.json",
-      """{"metric":"total","value":2.0,"unit":"sec","qv_vs_prev":{"vs":"r05","ratios":{"q1_agg":1.333}},"queries":{"q1_agg":2.0},"sf":"x"}""")
-    assert(Bench.previousRoundMedians(out)
-      .contains(("r06", Map("q1_agg" -> 2.0))))
-    // the r16 sentinel_timeline block (key:value pairs BEFORE the
-    // queries table) must not confuse the flat parse either
-    write("BENCH_FULL_r07.json",
-      """{"metric":"total","value":2.0,"unit":"sec","sentinel_timeline":{"ab_lift":0.151,"dedup_exact":0.162},"queries":{"q1_agg":3.0},"sf":"x"}""")
-    assert(Bench.previousRoundMedians(out)
-      .contains(("r07", Map("q1_agg" -> 3.0))))
+    withTempDir { path =>
+      val dir = new java.io.File(path)
+      def write(name: String, body: String): Unit =
+        java.nio.file.Files.write(new java.io.File(dir, name).toPath,
+          body.getBytes("UTF-8"))
+      val out = new java.io.File(dir, "BENCH_FULL.json").getPath
+      // no prior artifact → None (round 1)
+      assert(Bench.previousRoundMedians(out).isEmpty)
+      write("BENCH_FULL_r05.json",
+        """{"metric":"total","value":2.0,"unit":"sec","queries":{"q1_agg":1.5,"zz":0.25},"sf":"x"}""")
+      write("BENCH_FULL_r04.json",
+        """{"metric":"total","value":9.0,"unit":"sec","queries":{"q1_agg":9.0},"sf":"x"}""")
+      val got = Bench.previousRoundMedians(out)
+      assert(got.contains(("r05", Map("q1_agg" -> 1.5, "zz" -> 0.25))))
+      // a qv_vs_prev block BEFORE the queries table must not confuse the
+      // parse (the shape this round's own artifact will have next round)
+      write("BENCH_FULL_r06.json",
+        """{"metric":"total","value":2.0,"unit":"sec","qv_vs_prev":{"vs":"r05","ratios":{"q1_agg":1.333}},"queries":{"q1_agg":2.0},"sf":"x"}""")
+      assert(Bench.previousRoundMedians(out)
+        .contains(("r06", Map("q1_agg" -> 2.0))))
+      // the r16 sentinel_timeline block (key:value pairs BEFORE the
+      // queries table) must not confuse the flat parse either
+      write("BENCH_FULL_r07.json",
+        """{"metric":"total","value":2.0,"unit":"sec","sentinel_timeline":{"ab_lift":0.151,"dedup_exact":0.162},"queries":{"q1_agg":3.0},"sf":"x"}""")
+      assert(Bench.previousRoundMedians(out)
+        .contains(("r07", Map("q1_agg" -> 3.0))))
+    }
   }
 }

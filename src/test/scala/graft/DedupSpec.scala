@@ -54,16 +54,17 @@ class DedupSpec extends SparkTestBase {
   test("minhashLsh from a PERSISTED signature table equals the direct path") {
     // the ingest-time shape: signatures written once (range-clustered),
     // dedup reruns start from the parquet — text never re-shingled
-    val dir = java.nio.file.Files.createTempDirectory("graft_sigs").toString
-    sources.Sinks.writeClustered(
-      Dedup.withMinHashSignatures(corpus(), "text", "doc_id"), dir, "id", numRanges = 2)
-    val fromSigs = Dedup.minhashLshFromSignatures(
-        spark.read.parquet(dir), minBp = 8000)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val direct = Dedup.minhashLsh(corpus(), "text", "doc_id", minBp = 8000)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(fromSigs == direct)
-    assert(fromSigs.nonEmpty)
+    withTempDir { dir =>
+      sources.Sinks.writeClustered(
+        Dedup.withMinHashSignatures(corpus(), "text", "doc_id"), dir, "id", numRanges = 2)
+      val fromSigs = Dedup.minhashLshFromSignatures(
+          spark.read.parquet(dir), minBp = 8000)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val direct = Dedup.minhashLsh(corpus(), "text", "doc_id", minBp = 8000)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(fromSigs == direct)
+      assert(fromSigs.nonEmpty)
+    }
   }
 
   test("adaptive collapse: plain and collapsed paths emit identical pairs; " +
@@ -116,14 +117,15 @@ class DedupSpec extends SparkTestBase {
     val nSigs = Dedup.withMinHashSignatures(inc, "text", "doc_id")
     val want = pairSet(Dedup.minhashLshIncremental(nSigs, cSigs, minBp = 8000))
     // persist the collapsed store the way ingest would
-    val dir = java.nio.file.Files.createTempDirectory("graft_grp_store").toString
-    Dedup.contentGroups(cSigs).write.parquet(s"$dir/groups")
-    Dedup.contentMembers(cSigs).write.parquet(s"$dir/members")
-    val got = pairSet(Dedup.minhashLshIncrementalGrouped(nSigs,
-      spark.read.parquet(s"$dir/groups"), spark.read.parquet(s"$dir/members"),
-      minBp = 8000))
-    assert(got == want)
-    assert(got.nonEmpty)
+    withTempDir { dir =>
+      Dedup.contentGroups(cSigs).write.parquet(s"$dir/groups")
+      Dedup.contentMembers(cSigs).write.parquet(s"$dir/members")
+      val got = pairSet(Dedup.minhashLshIncrementalGrouped(nSigs,
+        spark.read.parquet(s"$dir/groups"), spark.read.parquet(s"$dir/members"),
+        minBp = 8000))
+      assert(got == want)
+      assert(got.nonEmpty)
+    }
   }
 
   test("fuzzy_decontaminate store-backed form equals self-contained crossNearDupPairs") {

@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Structural pins over src/main, pure file parse — no SparkSession.
+/** Structural pins over src/, pure file parse — no SparkSession.
   *
   * The set of runnable entry points: the driver contract (Verify,
   * Bench, StreamBench), the targeted bench and plan tools
@@ -12,7 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `tools/oracle10x.py` reads (TenX). A new one-shot measurement main
   * has to replace one of these or live outside the tree; its committed
   * artifact is the record. Also the one-copy shapes: a single
-  * exact-Jaccard verify, and `Ckpt` as the only eager checkpoint.
+  * exact-Jaccard verify, `Ckpt` as the only eager checkpoint, one
+  * latest-value enrichment engine, and one spec temp-dir helper.
+  * Needles that name code are spelled in halves so that this file does
+  * not match itself.
   */
 class EntryPointSpec extends AnyFunSuite {
 
@@ -21,9 +24,9 @@ class EntryPointSpec extends AnyFunSuite {
   private val AppRe = s"^${Mods}object (\\w+)\\b.*\\bextends App\\b".r.unanchored
   private val DefRe = """\bdef (\w+)""".r.unanchored
 
-  /** (file, lines) for every .scala file under src/main/scala. */
-  private lazy val sources: Seq[(String, Vector[String])] = {
-    val root = java.nio.file.Paths.get("src/main/scala")
+  /** (file, lines) for every .scala file under `dir`. */
+  private def scalaFiles(dir: String): Seq[(String, Vector[String])] = {
+    val root = java.nio.file.Paths.get(dir)
     require(java.nio.file.Files.isDirectory(root), s"$root not found")
     val files = {
       val s = java.nio.file.Files.walk(root)
@@ -35,6 +38,9 @@ class EntryPointSpec extends AnyFunSuite {
       try f -> src.getLines().toVector finally src.close()
     }
   }
+
+  private lazy val sources = scalaFiles("src/main/scala")
+  private lazy val testSources = scalaFiles("src/test/scala")
 
   /** (file, object) for every top-level object declaring `def main`
     * or extending `App` under src/main/scala. */
@@ -49,13 +55,16 @@ class EntryPointSpec extends AnyFunSuite {
       }
     }
 
-  /** (file name, enclosing `def`) of every line containing `needle`. */
-  private def sites(needle: String): Seq[(String, Option[String])] =
-    sources.flatMap { case (f, lines) =>
+  /** (file name, enclosing `def`) of every line of `in` containing
+    * `needle`; with `code`, comment lines do not count. */
+  private def sites(needle: String, in: Seq[(String, Vector[String])] = sources,
+                    code: Boolean = false): Seq[(String, Option[String])] =
+    in.flatMap { case (f, lines) =>
       var current: Option[String] = None
       lines.flatMap { l =>
         l match { case DefRe(name) => current = Some(name); case _ => }
-        if (l.contains(needle))
+        val comment = Seq("//", "*", "/*").exists(l.trim.startsWith)
+        if (l.contains(needle) && !(code && comment))
           Some(java.nio.file.Paths.get(f).getFileName.toString -> current)
         else None
       }
@@ -79,5 +88,21 @@ class EntryPointSpec extends AnyFunSuite {
   test("every eager local checkpoint goes through Ckpt (bench harness aside)") {
     val files = sites(".localCheckpoint()").map(_._1).toSet
     assert(files == Set("Ckpt.scala", "StreamBench.scala"), files)
+  }
+
+  test("one latest-value enrichment engine: the transformWithState twin is gone") {
+    val gone = Seq("Tws" + "Enrichment", "enrichLatest" + "Tws", "Latest" + "Enrich")
+    val hits = gone.flatMap(n => sites(n, sources ++ testSources).map(n -> _))
+    assert(hits.isEmpty, hits)
+  }
+
+  test("CdcPipeline.enrichLatest is the only group-state operator") {
+    val got = sites("flatMapGroups" + "WithState", sources ++ testSources, code = true)
+    assert(got == Seq("CdcPipeline.scala" -> Some("enrichLatest")), got)
+  }
+
+  test("specs make temp dirs only through SparkTestBase") {
+    val files = sites("createTemp" + "Directory", testSources).map(_._1).toSet
+    assert(files == Set("SparkTestBase.scala"), files)
   }
 }

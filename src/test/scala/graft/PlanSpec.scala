@@ -903,28 +903,29 @@ class PlanSpec extends SparkTestBase {
       docs.filter(col("doc_id") % 7 === 0)
         .select((col("doc_id") + 900000L).as("doc_id"), col("text")),
       "text", "doc_id")
-    val dir = java.nio.file.Files.createTempDirectory("graft_plan_grp").toString
-    graft.operators.Dedup.contentGroups(sigs).write.parquet(s"$dir/g")
-    graft.operators.Dedup.contentMembers(sigs).write.parquet(s"$dir/m")
-    val df = graft.operators.Dedup.minhashLshIncrementalGrouped(probe,
-      spark.read.parquet(s"$dir/g"), spark.read.parquet(s"$dir/m"),
-      minBp = 8000)
-    // un-checkpointed frames repeat their subplan per reference, so a
-    // raw count over the plan text counts re-references; the robust
-    // pin is COMPARATIVE — same inputs through the raw-store collapsed
-    // path must show strictly more sk-groupings (the corpus side's)
-    // than the grouped-store path, which carries only the probe's.
-    def skGroups(p: String): Int =
-      "keys=\\[sk#\\d+L?\\], functions=\\[(partial_)?min\\("
-        .r.findAllIn(p).size
-    val grouped = skGroups(planOf(df))
-    val raw = skGroups(planOf(
-      graft.operators.Dedup.minhashLshIncrementalCollapsed(probe, sigs,
-        16, 8000, 64, graft.operators.Dedup.DefaultMaxBucket)))
-    assert(grouped < raw,
-      s"grouped-store probe must drop the corpus-side re-grouping " +
-        s"(grouped=$grouped raw=$raw)")
-    assert(!planOf(df).contains("CartesianProduct"))
+    withTempDir { dir =>
+      graft.operators.Dedup.contentGroups(sigs).write.parquet(s"$dir/g")
+      graft.operators.Dedup.contentMembers(sigs).write.parquet(s"$dir/m")
+      val df = graft.operators.Dedup.minhashLshIncrementalGrouped(probe,
+        spark.read.parquet(s"$dir/g"), spark.read.parquet(s"$dir/m"),
+        minBp = 8000)
+      // un-checkpointed frames repeat their subplan per reference, so a
+      // raw count over the plan text counts re-references; the robust
+      // pin is COMPARATIVE — same inputs through the raw-store collapsed
+      // path must show strictly more sk-groupings (the corpus side's)
+      // than the grouped-store path, which carries only the probe's.
+      def skGroups(p: String): Int =
+        "keys=\\[sk#\\d+L?\\], functions=\\[(partial_)?min\\("
+          .r.findAllIn(p).size
+      val grouped = skGroups(planOf(df))
+      val raw = skGroups(planOf(
+        graft.operators.Dedup.minhashLshIncrementalCollapsed(probe, sigs,
+          16, 8000, 64, graft.operators.Dedup.DefaultMaxBucket)))
+      assert(grouped < raw,
+        s"grouped-store probe must drop the corpus-side re-grouping " +
+          s"(grouped=$grouped raw=$raw)")
+      assert(!planOf(df).contains("CartesianProduct"))
+    }
   }
 
   test("salted_join: the salt basis must not widen the orders scan — " +
@@ -981,59 +982,59 @@ class PlanSpec extends SparkTestBase {
     "verdict item 2)") {
     import spark.implicits._
     val Tws = graft.streaming.TwsDedup
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sigstore").toString
-    val sigs = graft.operators.Dedup.withMinHashSignatures(
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text")),
-      "text", "doc_id")
-    // id-sorted store: repartitionByRange gives files disjoint id
-    // ranges, so footer min/max stats answer id predicates
-    Tws.writeSignatureStore(sigs, dir, numFiles = 4)
-    val store = spark.read.parquet(dir)
-    val ids = store.select("id").orderBy("id").limit(4).as[Long].collect()
-    val cands = Seq((ids(0), ids(1)), (ids(2), ids(3)))
-      .toDF("doc_a", "doc_b")
-    val out = Tws.verifiedPairsBatch(cands, store)
-    val plan = planOf(out)
-    // the batch's ids reach the store scan as a pushed filter (<=10
-    // ids push as the exact OR-set; larger lists as a min/max range)
-    assert(plan.contains("In(id"), s"no pushed id probe in:\n$plan")
-    // pruned slice broadcasts; no store-wide shuffle join survives
-    assert(plan.contains("BroadcastHashJoin"), plan)
-    assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
-      s"store shuffled by the probe:\n$plan")
-    // correctness parity with the stream-static form on the same input
-    val want = Tws.verifiedPairs(cands.as[Tws.CandPair], store, minBp = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val got = Tws.verifiedPairsBatch(cands, store, minBp = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got == want && got.size == 2, s"$got != $want")
-    // the over-cap fallback degrades to broadcast-batch over a
-    // RANGE-pruned scan (r19: the candidate id span [lo, hi] pushes
-    // into the sorted store's footer stats — the unpruned full scan
-    // is gone), still no store shuffle
-    val fb = Tws.verifiedPairsBatch(cands, store, minBp = 0, maxProbeIds = 1)
-    val fplan = planOf(fb)
-    assert(fplan.contains("BroadcastHashJoin") &&
-      !fplan.contains("SortMergeJoin") && !fplan.contains("ShuffledHashJoin"),
-      s"fallback shuffled the store:\n$fplan")
-    assert(fplan.contains("GreaterThanOrEqual(id") &&
-      fplan.contains("LessThanOrEqual(id"),
-      s"fallback scan not range-pruned by the candidate id span:\n$fplan")
-    assert(fb.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .toSet == want)
-    // r18 ADVICE: an EMPTY candidate batch (routine under
-    // ProcessingTime triggers) must short-circuit — same output
-    // schema, zero rows, and NO store scan in the plan (the old code
-    // routed empty batches to the unpruned full-scan fallback)
-    val empty = Tws.verifiedPairsBatch(cands.limit(0), store)
-    assert(empty.schema.fieldNames.toSeq ==
-      Seq("doc_a", "doc_b", "jaccard_bp"))
-    assert(empty.count() == 0)
-    val eplan = planOf(empty)
-    assert(!eplan.contains("Scan parquet") && !eplan.contains("FileScan"),
-      s"empty batch still scans the store:\n$eplan")
+    withTempDir { dir =>
+      val sigs = graft.operators.Dedup.withMinHashSignatures(
+        spark.read.parquet(s"$sfDir/documents.parquet")
+          .select(col("doc_id"), col("text")),
+        "text", "doc_id")
+      // id-sorted store: repartitionByRange gives files disjoint id
+      // ranges, so footer min/max stats answer id predicates
+      Tws.writeSignatureStore(sigs, dir, numFiles = 4)
+      val store = spark.read.parquet(dir)
+      val ids = store.select("id").orderBy("id").limit(4).as[Long].collect()
+      val cands = Seq((ids(0), ids(1)), (ids(2), ids(3)))
+        .toDF("doc_a", "doc_b")
+      val out = Tws.verifiedPairsBatch(cands, store)
+      val plan = planOf(out)
+      // the batch's ids reach the store scan as a pushed filter (<=10
+      // ids push as the exact OR-set; larger lists as a min/max range)
+      assert(plan.contains("In(id"), s"no pushed id probe in:\n$plan")
+      // pruned slice broadcasts; no store-wide shuffle join survives
+      assert(plan.contains("BroadcastHashJoin"), plan)
+      assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
+        s"store shuffled by the probe:\n$plan")
+      // correctness parity with the stream-static form on the same input
+      val want = Tws.verifiedPairs(cands.as[Tws.CandPair], store, minBp = 0)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val got = Tws.verifiedPairsBatch(cands, store, minBp = 0)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got == want && got.size == 2, s"$got != $want")
+      // the over-cap fallback degrades to broadcast-batch over a
+      // RANGE-pruned scan (r19: the candidate id span [lo, hi] pushes
+      // into the sorted store's footer stats — the unpruned full scan
+      // is gone), still no store shuffle
+      val fb = Tws.verifiedPairsBatch(cands, store, minBp = 0, maxProbeIds = 1)
+      val fplan = planOf(fb)
+      assert(fplan.contains("BroadcastHashJoin") &&
+        !fplan.contains("SortMergeJoin") && !fplan.contains("ShuffledHashJoin"),
+        s"fallback shuffled the store:\n$fplan")
+      assert(fplan.contains("GreaterThanOrEqual(id") &&
+        fplan.contains("LessThanOrEqual(id"),
+        s"fallback scan not range-pruned by the candidate id span:\n$fplan")
+      assert(fb.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .toSet == want)
+      // r18 ADVICE: an EMPTY candidate batch (routine under
+      // ProcessingTime triggers) must short-circuit — same output
+      // schema, zero rows, and NO store scan in the plan (the old code
+      // routed empty batches to the unpruned full-scan fallback)
+      val empty = Tws.verifiedPairsBatch(cands.limit(0), store)
+      assert(empty.schema.fieldNames.toSeq ==
+        Seq("doc_a", "doc_b", "jaccard_bp"))
+      assert(empty.count() == 0)
+      val eplan = planOf(empty)
+      assert(!eplan.contains("Scan parquet") && !eplan.contains("FileScan"),
+        s"empty batch still scans the store:\n$eplan")
+    }
   }
 
   test("modularity_score composition: propagation and scoring share ONE " +

@@ -221,39 +221,40 @@ class SimilaritySpec extends SparkTestBase {
     val emb = sources.Tables.embeddings(spark, sfDir)
     val queries = emb.filter(col("vec_id") < 2)
     // ingest: bucket + write partitioned by bucket (the 100 TB layout)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_buckets").toString
-    graft.operators.Similarity.withLshBucket(emb, "embedding", numPlanes = 4)
-      .write.mode("overwrite").partitionBy("bucket").parquet(dir)
-    val bucketed = spark.read.parquet(dir)
-    val probe = graft.operators.Similarity.lshTopKBucketed(
-      bucketed, queries, "vec_id", "embedding", k = 10,
-      numPlanes = 4, multiprobe = 1)
-    val got = probe.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    val direct = graft.operators.Similarity.lshTopK(
-        emb, queries, "vec_id", "embedding", k = 10,
+    withTempDir { dir =>
+      graft.operators.Similarity.withLshBucket(emb, "embedding", numPlanes = 4)
+        .write.mode("overwrite").partitionBy("bucket").parquet(dir)
+      val bucketed = spark.read.parquet(dir)
+      val probe = graft.operators.Similarity.lshTopKBucketed(
+        bucketed, queries, "vec_id", "embedding", k = 10,
         numPlanes = 4, multiprobe = 1)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    assert(got == direct && got.nonEmpty)
-    // the probe must READ only the probed bucket partitions of the
-    // store: 2 query buckets × (identity + 4 single flips) ≤ 10 of the
-    // 16 dirs. Dataset.inputFiles ignores pruning (it lists the whole
-    // relation), so assert on the physical scan's selected partitions.
-    val probedDirs = graft.operators.Similarity.withLshBucket(
-        queries, "embedding", numPlanes = 4)
-      .select("bucket").distinct().collect().map(_.getLong(0)).toSet
-      .flatMap((b: Long) => (0 until 4).map(p => b ^ (1L << p)).toSet + b)
-    val filtered = bucketed.filter(col("bucket").isin(probedDirs.toSeq: _*))
-    val scan = filtered.queryExecution.executedPlan.collectFirst {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-    }.getOrElse(fail("no file scan in plan"))
-    val selected = scan.selectedPartitions.toPartitionArray
-      .map(_.urlEncodedPath).toSet
-    assert(selected.nonEmpty &&
-      selected.forall(f => probedDirs.exists(b => f.contains(s"bucket=$b/"))),
-      s"read $selected, probed $probedDirs")
-    val allParts = spark.read.parquet(dir).select("bucket").distinct().count()
-    assert(scan.selectedPartitions.partitionCount < allParts,
-      "no partition pruning happened")
+      val got = probe.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
+      val direct = graft.operators.Similarity.lshTopK(
+          emb, queries, "vec_id", "embedding", k = 10,
+          numPlanes = 4, multiprobe = 1)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
+      assert(got == direct && got.nonEmpty)
+      // the probe must READ only the probed bucket partitions of the
+      // store: 2 query buckets × (identity + 4 single flips) ≤ 10 of the
+      // 16 dirs. Dataset.inputFiles ignores pruning (it lists the whole
+      // relation), so assert on the physical scan's selected partitions.
+      val probedDirs = graft.operators.Similarity.withLshBucket(
+          queries, "embedding", numPlanes = 4)
+        .select("bucket").distinct().collect().map(_.getLong(0)).toSet
+        .flatMap((b: Long) => (0 until 4).map(p => b ^ (1L << p)).toSet + b)
+      val filtered = bucketed.filter(col("bucket").isin(probedDirs.toSeq: _*))
+      val scan = filtered.queryExecution.executedPlan.collectFirst {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }.getOrElse(fail("no file scan in plan"))
+      val selected = scan.selectedPartitions.toPartitionArray
+        .map(_.urlEncodedPath).toSet
+      assert(selected.nonEmpty &&
+        selected.forall(f => probedDirs.exists(b => f.contains(s"bucket=$b/"))),
+        s"read $selected, probed $probedDirs")
+      val allParts = spark.read.parquet(dir).select("bucket").distinct().count()
+      assert(scan.selectedPartitions.partitionCount < allParts,
+        "no partition pruning happened")
+    }
   }
 
   test("embedCosinePairs: exact precision, planted near-dups recovered") {
@@ -376,34 +377,35 @@ class SimilaritySpec extends SparkTestBase {
     val queries = emb.filter(col("vec_id") < 2)
     val cents = graft.operators.Similarity
       .ivfCentroids(emb, "vec_id", "embedding", 8).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_lists").toString
-    graft.operators.Similarity.withIvfLists(emb, "embedding", cents)
-      .write.mode("overwrite").partitionBy("list_id").parquet(dir)
-    val assigned = spark.read.parquet(dir)
-    val got = graft.operators.Similarity.ivfTopKBucketed(
-        assigned, queries, "vec_id", "embedding", k = 10, cents, nProbe = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    val direct = graft.operators.Similarity.ivfTopK(
-        emb, queries, "vec_id", "embedding", k = 10, nCentroids = 8, nProbe = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    assert(got == direct && got.nonEmpty)
-    // ≤ 2 queries × 2 probed lists of the 8 — the scan must prune
-    val probed = queries
-      .select(graft.operators.Similarity
-        .ivfProbeLists(col("embedding"), cents, 2).as("ls"))
-      .selectExpr("explode(ls) AS l").distinct().collect().map(_.getLong(0)).toSet
-    val filtered = assigned.filter(col("list_id").isin(probed.toSeq: _*))
-    val scan = filtered.queryExecution.executedPlan.collectFirst {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-    }.getOrElse(fail("no file scan in plan"))
-    val selected = scan.selectedPartitions.toPartitionArray
-      .map(_.urlEncodedPath).toSet
-    assert(selected.nonEmpty &&
-      selected.forall(f => probed.exists(l => f.contains(s"list_id=$l/"))),
-      s"read $selected, probed $probed")
-    val allParts = spark.read.parquet(dir).select("list_id").distinct().count()
-    assert(scan.selectedPartitions.partitionCount < allParts,
-      "no partition pruning happened")
+    withTempDir { dir =>
+      graft.operators.Similarity.withIvfLists(emb, "embedding", cents)
+        .write.mode("overwrite").partitionBy("list_id").parquet(dir)
+      val assigned = spark.read.parquet(dir)
+      val got = graft.operators.Similarity.ivfTopKBucketed(
+          assigned, queries, "vec_id", "embedding", k = 10, cents, nProbe = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
+      val direct = graft.operators.Similarity.ivfTopK(
+          emb, queries, "vec_id", "embedding", k = 10, nCentroids = 8, nProbe = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
+      assert(got == direct && got.nonEmpty)
+      // ≤ 2 queries × 2 probed lists of the 8 — the scan must prune
+      val probed = queries
+        .select(graft.operators.Similarity
+          .ivfProbeLists(col("embedding"), cents, 2).as("ls"))
+        .selectExpr("explode(ls) AS l").distinct().collect().map(_.getLong(0)).toSet
+      val filtered = assigned.filter(col("list_id").isin(probed.toSeq: _*))
+      val scan = filtered.queryExecution.executedPlan.collectFirst {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }.getOrElse(fail("no file scan in plan"))
+      val selected = scan.selectedPartitions.toPartitionArray
+        .map(_.urlEncodedPath).toSet
+      assert(selected.nonEmpty &&
+        selected.forall(f => probed.exists(l => f.contains(s"list_id=$l/"))),
+        s"read $selected, probed $probed")
+      val allParts = spark.read.parquet(dir).select("list_id").distinct().count()
+      assert(scan.selectedPartitions.partitionCount < allParts,
+        "no partition pruning happened")
+    }
   }
 
   test("labelStats centroids match Scala aggregation") {

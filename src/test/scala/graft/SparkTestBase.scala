@@ -9,14 +9,38 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   def sfDir = "/root/testdata/sf0.001"
 
+  /** Runs `body` with a fresh temp dir (passed to `body`), then deletes
+    * the dir, so no spec leaves one behind. */
+  def withTempDir[T](body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_test")
+    try body(dir.toString)
+    finally deleteDir(dir.toFile)
+  }
+
+  // a stopped stream's state-store maintenance can still write into its
+  // checkpoint dir for a moment, so a delete that races it is retried
+  private def deleteDir(dir: java.io.File, tries: Int = 50): Unit =
+    try org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    catch {
+      case _: java.io.IOException if tries > 1 =>
+        Thread.sleep(100)
+        deleteDir(dir, tries - 1)
+    }
+
+  /** Polls `cond` every 200 ms for up to `ms`; its final value. For
+    * streams that never quiesce (processing-time timeouts), where
+    * `processAllAvailable()` cannot be used. */
+  def waitUntil(cond: => Boolean, ms: Long = 30000): Boolean = {
+    val t0 = System.currentTimeMillis()
+    while (!cond && System.currentTimeMillis() - t0 < ms) Thread.sleep(200)
+    cond
+  }
+
   /** Runs `body` with the shared session's checkpoint dir pointed at a
     * fresh temp dir (passed to `body`), then restores the previous
     * setting and deletes the temp dir, so no spec leaks either. */
-  def withCheckpointDir[T](body: String => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
-    try swapCheckpointDir(dir.toString)(body(dir.toString))
-    finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-  }
+  def withCheckpointDir[T](body: String => T): T =
+    withTempDir(dir => swapCheckpointDir(dir)(body(dir)))
 
   /** Runs `body` with `graft.reliableCheckpoint` on, then unsets it. */
   def reliableConf[T](body: => T): T = {
@@ -36,23 +60,21 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     * one RocksDB instance per shuffle partition checkpoints every
     * micro-batch, so 2 partitions keep local-FS churn small while
     * exercising the same semantics. */
-  def withRocksDb[T](body: String => T): T = {
+  def withRocksDb[T](body: String => T): T = withTempDir { dir =>
     val provider = "spark.sql.streaming.stateStore.providerClass"
     val shuffle = "spark.sql.shuffle.partitions"
     val prevProvider = spark.conf.getOption(provider)
     val prevShuffle = spark.conf.get(shuffle)
-    val dir = java.nio.file.Files.createTempDirectory("graft_rocksdb")
     spark.conf.set(provider,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     spark.conf.set(shuffle, "2")
-    try body(dir.toString)
+    try body(dir)
     finally {
       prevProvider match {
         case Some(v) => spark.conf.set(provider, v)
         case None => spark.conf.unset(provider)
       }
       spark.conf.set(shuffle, prevShuffle)
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
   }
 

@@ -141,6 +141,18 @@ class StreamingSpec extends SparkTestBase {
       assert(spark.table("tiebreak").as[Enriched].collect()
         .map(e => (e.payload, e.enrichPayload)).toSet
         == Set(("order-a", "dim-v2"), ("order-c", "dim-x")))
+      // an image tying the delete on (op_ts, seq) applies after it, and
+      // the transaction's seq-2 image supersedes both
+      input.addData(
+        Change(4L, t(2), "dim-a", isEnrichment = true, seq = 1),
+        Change(4L, t(2), "kill", isEnrichment = true, manip = "D", seq = 1),
+        Change(4L, t(2), "dim-b", isEnrichment = true, seq = 2))
+      q.processAllAvailable()
+      input.addData(Change(4L, t(3), "order-d", isEnrichment = false))
+      q.processAllAvailable()
+      assert(spark.table("tiebreak").as[Enriched].collect()
+        .map(e => (e.payload, e.enrichPayload)).toSet
+        == Set(("order-a", "dim-v2"), ("order-c", "dim-x"), ("order-d", "dim-b")))
     } finally q.stop()
   }
 
@@ -177,6 +189,51 @@ class StreamingSpec extends SparkTestBase {
         .map(e => (e.payload, e.enrichPayload)).toSet
         == Set(("order-a", "dim-new")))
     } finally q.stop()
+  }
+
+  test("enrichLatest equals the batch EnrichmentJoin over the sf0.001 CDC changelogs") {
+    // the independent reference: every customer image (inserts, updates,
+    // delete tombstones) lands before the order rows, so the stream's
+    // as-of join equals the batch latest-image join
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val cust = sources.CdcEnvelope.customerChangelog(spark, sfDir)
+      .select(col("c_custkey").as("key"), col("c_mktsegment").as("enrichPayload"),
+        col("op_ts"), col("seq"), col("manip"))
+    val orders = sources.CdcEnvelope.ordersChangelog(spark, sfDir)
+      .select(col("o_custkey").as("key"),
+        unix_millis(col("op_ts").cast("timestamp")).as("eventTimeMs"),
+        concat_ws(":", col("o_orderkey"), col("seq")).as("payload"),
+        lit(false).as("isEnrichment"), col("manip"), col("seq"))
+    val want = graft.operators.EnrichmentJoin.enrichLatest(orders, cust, "key")
+      .select("payload", "enrichPayload").as[(String, String)].collect().sorted.toSeq
+    val images = cust.select(col("key"),
+        unix_millis(col("op_ts").cast("timestamp")).as("eventTimeMs"),
+        col("enrichPayload").as("payload"), lit(true).as("isEnrichment"),
+        col("manip"), col("seq"))
+      .as[Change].collect().sortBy(c => (c.eventTimeMs, c.seq)).toSeq
+    val rows = orders.as[Change].collect().toSeq
+    assert(images.exists(_.manip == "D") && want.nonEmpty && want.size < rows.size)
+    def split(cs: Seq[Change], n: Int) = cs.grouped((cs.size + n - 1) / n).toSeq
+    // each side in one micro-batch; then images newest first over 3
+    // batches (older images meet newer state, deletes before their
+    // inserts) and the rows over 4
+    val layouts = Seq(Seq(images, rows), split(images.reverse, 3) ++ split(rows, 4))
+    for ((batches, i) <- layouts.zipWithIndex) {
+      val input = MemoryStream[Change]
+      val q = CdcPipeline.enrichLatest(input.toDS())
+        .writeStream.format("memory").queryName(s"ref_layout$i")
+        .outputMode(OutputMode.Append).start()
+      try {
+        batches.foreach { b => input.addData(b); q.processAllAvailable() }
+        val got = spark.table(s"ref_layout$i").as[Enriched].collect()
+          .map(e => (e.payload, e.enrichPayload)).sorted.toSeq
+        val (extra, missing) = (got.diff(want), want.diff(got))
+        assert(extra.isEmpty && missing.isEmpty,
+          s"layout $i: extra ${extra.take(5)}, missing ${missing.take(5)}")
+      } finally q.stop()
+    }
   }
 
   test("KafkaCdc: record projection + envelope decode round-trips the wire shape") {
@@ -310,37 +367,38 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.spark.sql.types._
     import spark.implicits._
     // write a batch of envelope JSON files (the Kafka-topic stand-in)
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdc_stream").toString
-    val chg = sources.CdcEnvelope.ordersChangelog(spark, sfDir).limit(200)
-    val env = sources.CdcEnvelope.envelope(chg, "SALES.ORDERS", "o_orderkey", Seq(
-      "SalesOrderId" -> col("o_orderkey"),
-      "TotalDue" -> col("o_totalprice")))
-    sources.CdcEnvelope.toEnvelopeJson(env).coalesce(1)
-      .write.mode("overwrite").text(s"$dir/in")
-    val afterImage = StructType(Seq(
-      StructField("SalesOrderId", LongType), StructField("TotalDue", DoubleType)))
-    val raw = spark.readStream.schema(StructType(Seq(StructField("value", StringType))))
-      .text(s"$dir/in")
-    val decoded = CdcPipeline.decodeEnvelope(raw, afterImage)
-      .select(col("after_image.SalesOrderId").as("key"),
-        unix_millis(col("op_ts")).as("eventTimeMs"),
-        col("after_image.TotalDue").cast("string").as("payload"),
-        (col("manip") === "X").as("isEnrichment"), // all stream-side here
-        col("manip"), coalesce(col("seq"), lit(0)).as("seq"))
-      .as[Change]
-    val q = CdcPipeline.windowedTotals(
-        decoded.map(c => Enriched(c.key, c.eventTimeMs, c.payload, "ALL")),
-        watermarkDelay = "10 minutes", width = "1 day")
-      .writeStream.format("memory").queryName("cdc_e2e")
-      .outputMode(OutputMode.Append).start()
-    try {
-      q.processAllAvailable()
-      // append-mode windows only emit once the watermark passes them;
-      // with a finite file batch the open tail windows stay pending —
-      // assert the closed ones carry the decoded rows
-      val emitted = spark.table("cdc_e2e").agg(sum("n_rows")).collect()(0).getLong(0)
-      assert(emitted > 0 && emitted <= 200)
-    } finally q.stop()
+    withTempDir { dir =>
+      val chg = sources.CdcEnvelope.ordersChangelog(spark, sfDir).limit(200)
+      val env = sources.CdcEnvelope.envelope(chg, "SALES.ORDERS", "o_orderkey", Seq(
+        "SalesOrderId" -> col("o_orderkey"),
+        "TotalDue" -> col("o_totalprice")))
+      sources.CdcEnvelope.toEnvelopeJson(env).coalesce(1)
+        .write.mode("overwrite").text(s"$dir/in")
+      val afterImage = StructType(Seq(
+        StructField("SalesOrderId", LongType), StructField("TotalDue", DoubleType)))
+      val raw = spark.readStream.schema(StructType(Seq(StructField("value", StringType))))
+        .text(s"$dir/in")
+      val decoded = CdcPipeline.decodeEnvelope(raw, afterImage)
+        .select(col("after_image.SalesOrderId").as("key"),
+          unix_millis(col("op_ts")).as("eventTimeMs"),
+          col("after_image.TotalDue").cast("string").as("payload"),
+          (col("manip") === "X").as("isEnrichment"), // all stream-side here
+          col("manip"), coalesce(col("seq"), lit(0)).as("seq"))
+        .as[Change]
+      val q = CdcPipeline.windowedTotals(
+          decoded.map(c => Enriched(c.key, c.eventTimeMs, c.payload, "ALL")),
+          watermarkDelay = "10 minutes", width = "1 day")
+        .writeStream.format("memory").queryName("cdc_e2e")
+        .outputMode(OutputMode.Append).start()
+      try {
+        q.processAllAvailable()
+        // append-mode windows only emit once the watermark passes them;
+        // with a finite file batch the open tail windows stay pending —
+        // assert the closed ones carry the decoded rows
+        val emitted = spark.table("cdc_e2e").agg(sum("n_rows")).collect()(0).getLong(0)
+        assert(emitted > 0 && emitted <= 200)
+      } finally q.stop()
+    }
   }
 
   test("two-level enrichment chain like the reference topology") {
@@ -564,103 +622,81 @@ class StreamingSpec extends SparkTestBase {
   test("checkpoint recovery: state survives a query restart") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val input = MemoryStream[Change]
-    // the memory sink can't recover from a checkpoint — a file sink can
-    def start() = CdcPipeline.enrichLatest(input.toDS()).toDF()
-      .writeStream.format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ckpt")
-      .outputMode(OutputMode.Append).start()
-    var q = start()
-    try {
-      // enrichment lands before shutdown — only state, no output yet
-      input.addData(Change(1L, t(0), "dim-v1", isEnrichment = true))
-      q.processAllAvailable()
-      q.stop()
-      q = start() // restart from checkpoint
-      // stream row arrives after recovery: joins the RESTORED state
-      input.addData(Change(1L, t(5), "order-a", isEnrichment = false))
-      q.processAllAvailable()
-      val got = spark.read.parquet(s"$base/out").as[Enriched].collect()
-        .map(e => (e.payload, e.enrichPayload)).toSet
-      assert(got == Set(("order-a", "dim-v1")), got.toString)
-    } finally q.stop()
-  }
-
-  test("TWS checkpoint recovery: typed state variables survive a restart") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    withRocksDb { base =>
-    val input = MemoryStream[Change]
-    def start() = graft.streaming.TwsEnrichment.enrichLatestTws(input.toDS()).toDF()
-      .writeStream.format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ckpt")
-      .outputMode(OutputMode.Append).start()
-    var q = start()
-    try {
-      // image + an early (buffered) row for another key, then restart
-      input.addData(
-        Change(1L, t(0), "dim-v1", isEnrichment = true),
-        Change(2L, t(1), "order-early", isEnrichment = false))
-      q.processAllAvailable()
-      q.stop()
-      q = start()
-      // after recovery: key 1's RESTORED image joins; key 2's RESTORED
-      // buffer flushes when its enrichment finally lands
-      input.addData(
-        Change(1L, t(5), "order-a", isEnrichment = false),
-        Change(2L, t(6), "dim-v2", isEnrichment = true))
-      q.processAllAvailable()
-      val got = spark.read.parquet(s"$base/out").as[Enriched].collect()
-        .map(e => (e.payload, e.enrichPayload)).toSet
-      assert(got == Set(("order-a", "dim-v1"), ("order-early", "dim-v2")),
-        got.toString)
-    } finally q.stop()
+    def run(base: String): Unit = {
+      val input = MemoryStream[Change]
+      // the memory sink can't recover from a checkpoint — a file sink can
+      def start() = CdcPipeline.enrichLatest(input.toDS()).toDF()
+        .writeStream.format("parquet")
+        .option("path", s"$base/out")
+        .option("checkpointLocation", s"$base/ckpt")
+        .outputMode(OutputMode.Append).start()
+      var q = start()
+      try {
+        // key 1's image and key 2's early (buffered) row land before
+        // shutdown — only state, no output yet
+        input.addData(
+          Change(1L, t(0), "dim-v1", isEnrichment = true),
+          Change(2L, t(1), "order-early", isEnrichment = false))
+        q.processAllAvailable()
+        q.stop()
+        q = start() // restart from checkpoint
+        // after recovery: key 1's RESTORED image joins; key 2's RESTORED
+        // buffer flushes when its enrichment finally lands
+        input.addData(
+          Change(1L, t(5), "order-a", isEnrichment = false),
+          Change(2L, t(6), "dim-v2", isEnrichment = true))
+        q.processAllAvailable()
+        val got = spark.read.parquet(s"$base/out").as[Enriched].collect()
+          .map(e => (e.payload, e.enrichPayload)).toSet
+        assert(got == Set(("order-a", "dim-v1"), ("order-early", "dim-v2")),
+          got.toString)
+      } finally q.stop()
     }
+    withTempDir(run) // the default (HDFS-backed) state store
+    withRocksDb(run)
   }
 
   test("foreachBatch sink: per-batch latest-image upsert to parquet") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    val input = MemoryStream[Change]
-    // the Kafka-sink stand-in: each micro-batch folds into a keyed
-    // parquet materialization via latest-image semantics
-    val q = input.toDS().toDF()
-      .writeStream.foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        val prev = try spark.read.parquet(s"$dir/state")
-          catch { case _: Throwable => spark.emptyDataFrame }
-        // the upsert assigns its own manip/seq below; drop the wire
-        // columns so the schema matches the persisted state
-        val b = batch.drop("manip", "seq")
-        val merged =
-          if (prev.isEmpty) b
-          else prev.unionByName(b)
-        operators.Cdc.latestImage(
-            merged.withColumn("op_ts", timestamp_millis(col("eventTimeMs")))
-              .withColumn("seq", lit(0)).withColumn("manip", lit("U")),
-            "key")
-          .drop("op_ts", "seq", "manip")
-          .write.mode("overwrite").parquet(s"$dir/next")
-        // atomic-ish swap for the test; a real deployment writes Delta/Iceberg
-        val fs = new java.io.File(s"$dir/state")
-        if (fs.exists()) { scala.reflect.io.Directory(fs).deleteRecursively() }
-        new java.io.File(s"$dir/next").renameTo(fs)
-        ()
-      }.start()
-    try {
-      input.addData(Change(1L, t(0), "v1", false), Change(2L, t(0), "w1", false))
-      q.processAllAvailable()
-      input.addData(Change(1L, t(5), "v2", false))
-      q.processAllAvailable()
-      val state = spark.read.parquet(s"$dir/state")
-        .select("key", "payload").collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(state == Map(1L -> "v2", 2L -> "w1"))
-    } finally q.stop()
+    withTempDir { dir =>
+      val input = MemoryStream[Change]
+      // the Kafka-sink stand-in: each micro-batch folds into a keyed
+      // parquet materialization via latest-image semantics
+      val q = input.toDS().toDF()
+        .writeStream.foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+          val prev = try spark.read.parquet(s"$dir/state")
+            catch { case _: Throwable => spark.emptyDataFrame }
+          // the upsert assigns its own manip/seq below; drop the wire
+          // columns so the schema matches the persisted state
+          val b = batch.drop("manip", "seq")
+          val merged =
+            if (prev.isEmpty) b
+            else prev.unionByName(b)
+          operators.Cdc.latestImage(
+              merged.withColumn("op_ts", timestamp_millis(col("eventTimeMs")))
+                .withColumn("seq", lit(0)).withColumn("manip", lit("U")),
+              "key")
+            .drop("op_ts", "seq", "manip")
+            .write.mode("overwrite").parquet(s"$dir/next")
+          // atomic-ish swap for the test; a real deployment writes Delta/Iceberg
+          val fs = new java.io.File(s"$dir/state")
+          if (fs.exists()) { scala.reflect.io.Directory(fs).deleteRecursively() }
+          new java.io.File(s"$dir/next").renameTo(fs)
+          ()
+        }.start()
+      try {
+        input.addData(Change(1L, t(0), "v1", false), Change(2L, t(0), "w1", false))
+        q.processAllAvailable()
+        input.addData(Change(1L, t(5), "v2", false))
+        q.processAllAvailable()
+        val state = spark.read.parquet(s"$dir/state")
+          .select("key", "payload").collect()
+          .map(r => r.getLong(0) -> r.getString(1)).toMap
+        assert(state == Map(1L -> "v2", 2L -> "w1"))
+      } finally q.stop()
+    }
   }
 
   test("pipeline operators compose onto streams: quality filter on a doc stream") {
@@ -800,78 +836,31 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("transformWithState enrichment matches the flatMapGroupsWithState twin") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // transformWithState requires the RocksDB state store provider
-    withRocksDb { ckpt =>
-    val input = MemoryStream[Change]
-    val q = graft.streaming.TwsEnrichment.enrichLatestTws(input.toDS())
-      .writeStream.format("memory").queryName("tws_enriched")
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Append).start()
-    try {
-      // the same battery the flat twin's specs run: early-row
-      // buffering, latest-wins, delete+reinsert seq tiebreak
-      input.addData(Change(1L, t(0), "order-a", isEnrichment = false))
-      q.processAllAvailable()
-      assert(spark.table("tws_enriched").count() == 0)
-      input.addData(
-        Change(1L, t(1), "dim-v1", isEnrichment = true),
-        Change(1L, t(2), "dim-v2", isEnrichment = true))
-      q.processAllAvailable()
-      input.addData(Change(1L, t(3), "order-b", isEnrichment = false))
-      q.processAllAvailable()
-      input.addData(
-        Change(2L, t(2), "dim-a", isEnrichment = true, seq = 1),
-        Change(2L, t(2), "kill", isEnrichment = true, manip = "D", seq = 1),
-        Change(2L, t(2), "dim-b", isEnrichment = true, seq = 2))
-      q.processAllAvailable()
-      input.addData(Change(2L, t(3), "order-c", isEnrichment = false))
-      q.processAllAvailable()
-      // a tombstone in a LATER batch kills key 2; an out-of-order image
-      // older than the delete must NOT resurrect it
-      input.addData(
-        Change(2L, t(5), "kill2", isEnrichment = true, manip = "D"))
-      q.processAllAvailable()
-      input.addData(Change(2L, t(4), "stale-dim", isEnrichment = true))
-      q.processAllAvailable()
-      input.addData(Change(2L, t(6), "order-d", isEnrichment = false))
-      q.processAllAvailable()
-      val got = spark.table("tws_enriched").as[Enriched].collect()
-        .map(e => (e.payload, e.enrichPayload)).toSet
-      assert(got == Set(
-        ("order-a", "dim-v1"), ("order-b", "dim-v2"), ("order-c", "dim-b")))
-    } finally q.stop()
-    }
-  }
-
   test("TWS native TTL: an expired enrichment image no longer joins") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     withRocksDb { ckpt =>
     val input = MemoryStream[Change]
-    // ProcessingTime mode (required for TTL) schedules continuous
-    // batches — poll the sink instead of processAllAvailable
-    val q = graft.streaming.TwsEnrichment.enrichLatestTws(input.toDS(),
+    // a lifetime switches on the processing-time timeout, which
+    // schedules continuous batches — poll the sink instead of
+    // processAllAvailable
+    val q = CdcPipeline.enrichLatest(input.toDS(),
         ttl = Some(java.time.Duration.ofSeconds(5)))
       .writeStream.format("memory").queryName("tws_ttl")
       .option("checkpointLocation", ckpt)
       .outputMode(OutputMode.Append).start()
-    def waitUntil(cond: => Boolean, ms: Long = 30000): Boolean = {
-      val t0 = System.currentTimeMillis()
-      while (!cond && System.currentTimeMillis() - t0 < ms) Thread.sleep(200)
-      cond
-    }
     try {
       // enrichment lands, then a stream row WITHIN the TTL → joins
       input.addData(Change(1L, t(0), "dim-v1", isEnrichment = true))
       input.addData(Change(1L, t(1), "order-a", isEnrichment = false))
       assert(waitUntil(spark.table("tws_ttl").count() == 1),
         "in-TTL row failed to join")
-      // let the image EXPIRE (TTL is checked at state read), then a
-      // stream row → buffers instead of joining the dead image
+      // let the image EXPIRE (an expired image reads as absent, and a
+      // key with nothing left is removed), then a stream row → buffers
+      // instead of joining the dead image
       Thread.sleep(7000)
+      assert(q.lastProgress.stateOperators.head.numRowsTotal == 0,
+        "expired key still held in state")
       input.addData(Change(1L, t(2), "order-b", isEnrichment = false))
       Thread.sleep(3000) // several batches; output must NOT grow
       assert(spark.table("tws_ttl").count() == 1,
@@ -1094,16 +1083,11 @@ class StreamingSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     withRocksDb { ckpt =>
     val input = MemoryStream[Change]
-    val q = graft.streaming.TwsEnrichment.enrichLatestTwsWithTimeout(input.toDS(),
-        bufferTimeout = java.time.Duration.ofSeconds(3))
+    val q = CdcPipeline.enrichLatest(input.toDS(),
+        bufferTimeout = Some(java.time.Duration.ofSeconds(3)))
       .writeStream.format("memory").queryName("tws_timer")
       .option("checkpointLocation", ckpt)
       .outputMode(OutputMode.Append).start()
-    def waitUntil(cond: => Boolean, ms: Long = 30000): Boolean = {
-      val t0 = System.currentTimeMillis()
-      while (!cond && System.currentTimeMillis() - t0 < ms) Thread.sleep(200)
-      cond
-    }
     def rows() = spark.table("tws_timer").as[Enriched].collect()
       .map(e => (e.payload, Option(e.enrichPayload))).toSet
     try {
@@ -1114,7 +1098,7 @@ class StreamingSpec extends SparkTestBase {
       input.addData(Change(2L, t(1), "dim-b", isEnrichment = true))
       assert(waitUntil(rows().contains(("covered-order", Some("dim-b")))),
         "promptly-covered row failed to join")
-      // the orphan must emit UNENRICHED on timer fire (~3 s), not wait
+      // the orphan must emit UNENRICHED on timeout (~3 s), not wait
       // forever; the covered row must not dead-letter alongside it
       assert(waitUntil(rows().contains(("orphan-order", None))),
         "orphan buffered row never dead-lettered")
@@ -1141,17 +1125,12 @@ class StreamingSpec extends SparkTestBase {
     withRocksDb { ckpt =>
     val input = MemoryStream[Change]
     // the recommended configuration: tombstone window = 3× image TTL
-    val q = graft.streaming.TwsEnrichment.enrichLatestTws(input.toDS(),
+    val q = CdcPipeline.enrichLatest(input.toDS(),
         ttl = Some(java.time.Duration.ofSeconds(5)),
         tombstoneTtl = Some(java.time.Duration.ofSeconds(15)))
       .writeStream.format("memory").queryName("tws_tomb")
       .option("checkpointLocation", ckpt)
       .outputMode(OutputMode.Append).start()
-    def waitUntil(cond: => Boolean, ms: Long = 30000): Boolean = {
-      val t0 = System.currentTimeMillis()
-      while (!cond && System.currentTimeMillis() - t0 < ms) Thread.sleep(200)
-      cond
-    }
     try {
       // live image joins normally
       input.addData(Change(1L, t(0), "dim-v1", isEnrichment = true))
@@ -2182,37 +2161,37 @@ class StreamingSpec extends SparkTestBase {
     val batchIvf = Sim.ivfTopKBucketed(ivfStore, allQueries, "vec_id",
         "embedding", k = 10, cents, nProbe = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    // stream the same queries in 3 micro-batches through each probe
-    val lshIn = MemoryStream[(Long, Array[Float])]
-    val lshAcc = scala.collection.mutable.Set.empty[(Long, Long, Int)]
-    val lshQ = graft.streaming.TwsAnnProbe.lshProbeWriter(
-        lshIn.toDS().toDF("vec_id", "embedding"), lshStore, "vec_id",
-        "embedding", k = 10, numPlanes = 4, multiprobe = 1) { (res, _) =>
-      lshAcc ++= res.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
-    }.option("checkpointLocation",
-      java.nio.file.Files.createTempDirectory("graft_lsh_probe").toString).start()
-    try {
-      qRows.grouped((qRows.length + 2) / 3).foreach { g =>
-        lshIn.addData(g.toSeq); lshQ.processAllAvailable()
-      }
-    } finally lshQ.stop()
-    assert(lshAcc.toSet == batchLsh && batchLsh.nonEmpty,
-      s"LSH stream/batch diverged: ${(lshAcc.toSet -- batchLsh) ++ (batchLsh -- lshAcc)}")
-    val ivfIn = MemoryStream[(Long, Array[Float])]
-    val ivfAcc = scala.collection.mutable.Set.empty[(Long, Long, Int)]
-    val ivfQ = graft.streaming.TwsAnnProbe.ivfProbeWriter(
-        ivfIn.toDS().toDF("vec_id", "embedding"), ivfStore, "vec_id",
-        "embedding", k = 10, cents, nProbe = 4) { (res, _) =>
-      ivfAcc ++= res.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
-    }.option("checkpointLocation",
-      java.nio.file.Files.createTempDirectory("graft_ivf_probe").toString).start()
-    try {
-      qRows.grouped((qRows.length + 2) / 3).foreach { g =>
-        ivfIn.addData(g.toSeq); ivfQ.processAllAvailable()
-      }
-    } finally ivfQ.stop()
-    assert(ivfAcc.toSet == batchIvf && batchIvf.nonEmpty,
-      s"IVF stream/batch diverged: ${(ivfAcc.toSet -- batchIvf) ++ (batchIvf -- ivfAcc)}")
+    withTempDir { dir =>
+      // stream the same queries in 3 micro-batches through each probe
+      val lshIn = MemoryStream[(Long, Array[Float])]
+      val lshAcc = scala.collection.mutable.Set.empty[(Long, Long, Int)]
+      val lshQ = graft.streaming.TwsAnnProbe.lshProbeWriter(
+          lshIn.toDS().toDF("vec_id", "embedding"), lshStore, "vec_id",
+          "embedding", k = 10, numPlanes = 4, multiprobe = 1) { (res, _) =>
+        lshAcc ++= res.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
+      }.option("checkpointLocation", s"$dir/lsh").start()
+      try {
+        qRows.grouped((qRows.length + 2) / 3).foreach { g =>
+          lshIn.addData(g.toSeq); lshQ.processAllAvailable()
+        }
+      } finally lshQ.stop()
+      assert(lshAcc.toSet == batchLsh && batchLsh.nonEmpty,
+        s"LSH stream/batch diverged: ${(lshAcc.toSet -- batchLsh) ++ (batchLsh -- lshAcc)}")
+      val ivfIn = MemoryStream[(Long, Array[Float])]
+      val ivfAcc = scala.collection.mutable.Set.empty[(Long, Long, Int)]
+      val ivfQ = graft.streaming.TwsAnnProbe.ivfProbeWriter(
+          ivfIn.toDS().toDF("vec_id", "embedding"), ivfStore, "vec_id",
+          "embedding", k = 10, cents, nProbe = 4) { (res, _) =>
+        ivfAcc ++= res.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
+      }.option("checkpointLocation", s"$dir/ivf").start()
+      try {
+        qRows.grouped((qRows.length + 2) / 3).foreach { g =>
+          ivfIn.addData(g.toSeq); ivfQ.processAllAvailable()
+        }
+      } finally ivfQ.stop()
+      assert(ivfAcc.toSet == batchIvf && batchIvf.nonEmpty,
+        s"IVF stream/batch diverged: ${(ivfAcc.toSet -- batchIvf) ++ (batchIvf -- ivfAcc)}")
+    }
   }
 
   test("TwsBurstiness checkpoint recovery: the per-second MapState " +
@@ -2386,11 +2365,6 @@ class StreamingSpec extends SparkTestBase {
       .outputMode(OutputMode.Append).start()
     def pairs(): Set[(Long, Long)] = spark.table("tws_ttlc").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    def waitUntil(cond: => Boolean, ms: Long = 30000): Boolean = {
-      val t0 = System.currentTimeMillis()
-      while (!cond && System.currentTimeMillis() - t0 < ms) Thread.sleep(200)
-      cond
-    }
     try {
       input.addData(1L -> tDog, 2L -> tCat)
       assert(waitUntil(pairs() == Set((1L, 2L))), s"seed pair: ${pairs()}")
