@@ -10,6 +10,9 @@ import org.apache.spark.sql.SparkSession
   *     splitting, dynamic broadcast conversion.
   *   - shuffle.partitions sized to cores, not the 200 default.
   *   - UTC session TZ so results are oracle-comparable.
+  *   - `file:` is [[LocalFs]]: Hadoop's local filesystem without its
+  *     chmod and readlink process forks, which otherwise dominate a
+  *     stream's per-micro-batch checkpoint commits.
   */
 object GraftSession {
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
@@ -41,6 +44,9 @@ object GraftSession {
       // TIMESTAMP(NANOS) events data is detected and handled inside
       // Tables.events, scoped to the rejection path only.
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFs.ForFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[LocalFs.ForFileContext].getName)
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = builder(s"local[$cores]", cores).getOrCreate()

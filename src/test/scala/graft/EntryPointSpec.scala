@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * has to replace one of these or live outside the tree; its committed
   * artifact is the record. Also the one-copy shapes: a single
   * exact-Jaccard verify, `Ckpt` as the only eager checkpoint, one
-  * latest-value enrichment engine, and one spec temp-dir helper.
+  * latest-value enrichment engine, one spec temp-dir helper, and one
+  * session builder (so every session gets graft's `file:` filesystem).
   * Needles that name code are spelled in halves so that this file does
   * not match itself.
   */
@@ -104,5 +105,11 @@ class EntryPointSpec extends AnyFunSuite {
   test("specs make temp dirs only through SparkTestBase") {
     val files = sites("createTemp" + "Directory", testSources).map(_._1).toSet
     assert(files == Set("SparkTestBase.scala"), files)
+  }
+
+  test("every session, the benchmark's included, is built by GraftSession.builder") {
+    val all = sources ++ testSources ++ scalaFiles("perfbench/src/main/scala")
+    val got = sites("SparkSession" + ".builder", all, code = true)
+    assert(got == Seq("GraftSession.scala" -> Some("builder")), got)
   }
 }

@@ -487,7 +487,7 @@ class SimilaritySpec extends SparkTestBase {
   test("IVF-PQ: candidates confined to probed lists, coded-store and " +
       "broadcast-regime equality, compounded recall measured (r13 C99)") {
     val emb = sources.Tables.embeddings(spark, sfDir)
-    val cents = Similarity.ivfCentroids(emb, "vec_id", "embedding", 16)
+    val cents = Similarity.ivfCentroids(emb, "vec_id", "embedding", 16).toIndexedSeq
     val books = Similarity.pqCodebooks(emb, "vec_id", "embedding", 4, 16, 64)
     val queries = emb.filter(col("vec_id") < 8)
     val direct = Similarity.ivfPqTopK(emb, queries, "vec_id", "embedding",
