@@ -108,7 +108,7 @@ object StreamBench {
     // SPARK_GRAFT_SB_ONLY=prefix1,prefix2 is set, only rows whose
     // name starts with a listed prefix run — lets a single row pair
     // be re-measured in a fresh JVM without re-running the family.
-    // Applied to EVERY row including TwsAnnProbe (r18 ADVICE: the old
+    // Applied to EVERY row including AnnProbe (r18 ADVICE: the old
     // form skipped that block outright whenever the env was set, so it
     // could never be targeted), and a prefix list that matches zero
     // rows fails loudly at the end instead of writing an empty
@@ -395,13 +395,13 @@ object StreamBench {
         delay = "10 minutes").toDF()
     }
 
-    // 12) TwsAnnProbe: stateless foreachBatch LSH probe of the vector
+    // 12) AnnProbe: stateless foreachBatch LSH probe of the vector
     //     stream against the pre-bucketed static store — the posture
     //     here is probe throughput + source-position recovery (there
     //     is no state operator; stateRows columns read -1 by design).
-    if (selected("TwsAnnProbe")) {
+    if (selected("AnnProbe")) {
       rowsRun += 1
-      val name = "TwsAnnProbe"
+      val name = "AnnProbe"
       val src = s"$dataDir/embeddings.parquet"
       val schema = spark.read.parquet(src).schema
       val store = graft.operators.Similarity
@@ -427,9 +427,10 @@ object StreamBench {
         val stream = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", 4).parquet(inDir.toString)
           .select(col("vec_id"), col("embedding"))
-        graft.streaming.TwsAnnProbe.lshProbeWriter(stream, store,
-            "vec_id", "embedding", k = 10, numPlanes = 8, multiprobe = 1) {
-          (res, _) => probed.addAndGet(res.count())
+        stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+          probed.addAndGet(graft.operators.Similarity.lshTopKBucketed(store, batch,
+            "vec_id", "embedding", k = 10, numPlanes = 8, multiprobe = 1).count())
+          ()
         }.option("checkpointLocation", ckpt).start()
       }
       val t0 = System.nanoTime()

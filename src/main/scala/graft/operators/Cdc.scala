@@ -105,9 +105,9 @@ object Cdc {
       .drop("__rn")
     val untouched = snapshot.join(
       deltaLatest.select(col(key)), Seq(key), "left_anti")
+    val cols = snapshot.columns.toIndexedSeq
     untouched.unionByName(
-      deltaLatest.filter(col(manip) =!= "D").select(snapshot.columns.head,
-        snapshot.columns.tail: _*))
+      deltaLatest.filter(col(manip) =!= "D").select(cols.head, cols.tail: _*))
   }
 
   /** Snapshot DIFF: what changed between two materialized images of

@@ -16,6 +16,20 @@ import org.apache.spark.sql.functions._
   * corpus is written partitioned-by-bucket so repeated query batches
   * prune to matching buckets), probes only matching buckets, and
   * reranks exactly.
+  *
+  * One probe kernel serves every top-k form. Each form builds its
+  * query side (the exploded LSH probe buckets, the IVF probe lists,
+  * the PQ lookup tables), joins it to its corpus side, and hands the
+  * pairs to [[rankTopK]]: drop self-pairs, score, rank per query,
+  * keep k. The store forms [[lshTopKBucketed]], [[ivfTopKBucketed]]
+  * and [[ivfPqTopKCoded]] (so [[ivfPqTopK]] too) first prune the store
+  * to the probed keys with [[pruneStore]]: one bounded collect, pushed
+  * as an `isin` partition filter. The self-contained [[lshTopK]] and
+  * [[ivfTopK]] join the whole corpus and launch no collect, and
+  * [[pqTopKCoded]] scans every code (PQ bounds bytes per candidate,
+  * not candidate count). Streaming search over a static store is the
+  * batch probe per micro-batch:
+  * `queries.writeStream.foreachBatch { (b, _) => lshTopKBucketed(store, b, ...) }`.
   */
 object Similarity {
 
@@ -51,6 +65,48 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
+  /** The query side every form starts from: (query_id, qv, qn) and
+    * then `extra`. */
+  private def querySide(queries: DataFrame, idCol: String, vecCol: String,
+                        extra: Column*): DataFrame =
+    queries.select(Seq(col(idCol).as("query_id"), col(vecCol).as("qv"),
+      norm(col(vecCol)).as("qn")) ++ extra: _*)
+
+  /** The corpus side of the exact-rerank forms: (neighbor_id, cv, cn)
+    * and then `extra`. */
+  private def corpusSide(corpus: DataFrame, idCol: String, vecCol: String,
+                         extra: Column*): DataFrame =
+    corpus.select(Seq(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
+      norm(col(vecCol)).as("cn")) ++ extra: _*)
+
+  /** Exact cosine of a joined (query, neighbor) pair from the
+    * per-side norms: one dot product per pair. */
+  private def pairCos: Column = dot(col("qv"), col("cv")) / (col("qn") * col("cn"))
+
+  /** The top-k rank step of every ANN form: over the joined
+    * (query_id, neighbor_id, ...) pairs, drop self-pairs, score each
+    * pair as `name`, and keep each query's k best by (score desc,
+    * neighbor_id asc). Output: (query_id, neighbor_id, `name`, rn). */
+  private def rankTopK(pairs: DataFrame, k: Int, name: String, score: Column): DataFrame = {
+    val byScore = Window.partitionBy(col("query_id"))
+      .orderBy(col(name).desc, col("neighbor_id").asc)
+    pairs.filter(col("neighbor_id") =!= col("query_id"))
+      .withColumn(name, score)
+      .withColumn("rn", row_number().over(byScore))
+      .filter(col("rn") <= k)
+      .select(col("query_id"), col("neighbor_id"), col(name), col("rn"))
+  }
+
+  /** Store pruning for the pre-built forms: the distinct `key` values
+    * of the query side (bounded by contract — it is broadcast) are
+    * collected and pushed as an `isin` filter, so a store partitioned
+    * by `key` scans only the probed directories. The collect is the
+    * partition-pruning predicate, not data motion. */
+  private def pruneStore(store: DataFrame, q: DataFrame, key: String): DataFrame = {
+    val probed = q.select(key).distinct().collect().map(_.getLong(0)).toIndexedSeq
+    store.filter(col(key).isin(probed: _*))
+  }
+
   /** Exact top-k neighbors of each query vector (brute force).
     *
     * @param corpus  (idCol, vecCol)
@@ -62,18 +118,9 @@ object Similarity {
     // pair then costs one dot product instead of three (the division
     // tree is unchanged, so the doubles — and the oracle — are
     // bit-identical)
-    val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      norm(col(vecCol)).as("qn")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      norm(col(vecCol)).as("cn"))
-    val byScore = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    c.crossJoin(q)
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rn", row_number().over(byScore))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rn"))
+    val q = broadcast(querySide(queries, idCol, vecCol))
+    val c = corpusSide(corpus, idCol, vecCol)
+    rankTopK(c.crossJoin(q), k, "cos", pairCos)
   }
 
   /** k-NN majority-vote classification: each query vector takes the
@@ -120,10 +167,8 @@ object Similarity {
     * ([[lshTopK]]/[[ivfTopK]]) and fusion's cost does not change. */
   def rrfFusion(corpus: DataFrame, queries: DataFrame, idCol: String,
                 vecCol: String, k: Int, rrfK: Int = 60, topN: Int = 10): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      norm(col(vecCol)).as("qn")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      norm(col(vecCol)).as("cn"))
+    val q = broadcast(querySide(queries, idCol, vecCol))
+    val c = corpusSide(corpus, idCol, vecCol)
     val byQuery = Window.partitionBy(col("query_id"))
     val scored = c.crossJoin(q)
       .filter(col("neighbor_id") =!= col("query_id"))
@@ -233,6 +278,26 @@ object Similarity {
       when(dot(vec, planeLit) > 0, lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ + _)
 
+  /** Every bucket within `radius` sign flips (hamming distance over
+    * the `numPlanes` bucket bits) of `bucket`, exploded one row per
+    * bucket. The masks are distinct XORs, so a pair of buckets meets
+    * on exactly one of them. */
+  private def hammingBall(bucket: Column, numPlanes: Int, radius: Int): Column = {
+    val masks = (0 to radius).flatMap(nFlips =>
+      (0 until numPlanes).combinations(nFlips)
+        .map(_.foldLeft(0L)((m, p) => m | (1L << p))))
+    explode(array(masks.map(m => bucket.bitwiseXOR(lit(m))): _*))
+  }
+
+  /** LSH query side: (query_id, qv, qn, bucket), exploded over every
+    * bucket within `multiprobe` flips of the query's own. */
+  private def lshQueries(queries: DataFrame, idCol: String, vecCol: String,
+                         numPlanes: Int, dim: Int, multiprobe: Int): DataFrame =
+    querySide(queries, idCol, vecCol,
+      lshBucket(col(vecCol), hyperplanes(numPlanes, dim)).as("bucket0"))
+      .withColumn("bucket", hammingBall(col("bucket0"), numPlanes, multiprobe))
+      .drop("bucket0")
+
   /** LSH-bucketed ANN: bucket corpus and queries by hyperplane signs,
     * compare only within matching buckets, rerank by exact cosine.
     * Recall < 1 by construction (that's the trade); verified against
@@ -253,27 +318,10 @@ object Similarity {
               numPlanes: Int = 8, dim: Int = 64, multiprobe: Int = 0): DataFrame = {
     require(multiprobe >= 0 && multiprobe <= numPlanes,
       s"multiprobe ($multiprobe) must be in [0, numPlanes=$numPlanes]")
-    val planes = hyperplanes(numPlanes, dim)
-    val probeMasks: Seq[Long] = (0 to multiprobe).flatMap(nFlips =>
-      (0 until numPlanes).combinations(nFlips)
-        .map(_.foldLeft(0L)((m, p) => m | (1L << p))).toSeq)
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      norm(col(vecCol)).as("cn"),
-      lshBucket(col(vecCol), planes).as("bucket"))
-    val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      norm(col(vecCol)).as("qn"),
-      lshBucket(col(vecCol), planes).as("bucket0"))
-      .withColumn("bucket", explode(array(probeMasks.map(m =>
-        col("bucket0").bitwiseXOR(lit(m))): _*)))
-      .drop("bucket0"))
-    val byScore = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    c.join(q, "bucket")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rn", row_number().over(byScore))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rn"))
+    val c = corpusSide(corpus, idCol, vecCol,
+      lshBucket(col(vecCol), hyperplanes(numPlanes, dim)).as("bucket"))
+    val q = lshQueries(queries, idCol, vecCol, numPlanes, dim, multiprobe)
+    rankTopK(c.join(broadcast(q), "bucket"), k, "cos", pairCos)
   }
 
   /** Ingest-time bucket assignment: persist the corpus
@@ -297,30 +345,9 @@ object Similarity {
                       idCol: String, vecCol: String, k: Int,
                       numPlanes: Int = 8, dim: Int = 64,
                       multiprobe: Int = 0): DataFrame = {
-    val planes = hyperplanes(numPlanes, dim)
-    val probeMasks: Seq[Long] = (0 to multiprobe).flatMap(nFlips =>
-      (0 until numPlanes).combinations(nFlips)
-        .map(_.foldLeft(0L)((m, p) => m | (1L << p))).toSeq)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      norm(col(vecCol)).as("qn"),
-      lshBucket(col(vecCol), planes).as("bucket0"))
-      .withColumn("bucket", explode(array(probeMasks.map(m =>
-        col("bucket0").bitwiseXOR(lit(m))): _*)))
-      .drop("bucket0")
-    // the query batch is small by contract; its bucket set is smaller —
-    // this collect is the partition-pruning predicate, not data motion
-    val probed = q.select("bucket").distinct().collect().map(_.getLong(0))
-    val c = bucketed.filter(col("bucket").isin(probed: _*))
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-        norm(col(vecCol)).as("cn"), col("bucket"))
-    val byScore = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    c.join(broadcast(q), "bucket")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rn", row_number().over(byScore))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rn"))
+    val q = lshQueries(queries, idCol, vecCol, numPlanes, dim, multiprobe)
+    val c = corpusSide(pruneStore(bucketed, q, "bucket"), idCol, vecCol, col("bucket"))
+    rankTopK(c.join(broadcast(q), "bucket"), k, "cos", pairCos)
   }
 
   /** Deterministic IVF seed centroids: the `nCentroids` corpus vectors
@@ -385,6 +412,16 @@ object Similarity {
       .toDF("cid", "ccv", "ccn")
   }
 
+  /** `df` × broadcast(centroids) with each pair's (score, -cid)
+    * struct as `sc`: the broadcast twin of [[centScored]], whose
+    * `max` is the [[ivfListId]] argmax and whose descending sort is
+    * the [[ivfProbeLists]] order. */
+  private def centScoredBroadcast(df: DataFrame, vec: Column,
+                                  cents: Seq[(Long, Array[Float])]): DataFrame =
+    df.crossJoin(broadcast(centroidsDf(df.sparkSession, cents)))
+      .withColumn("sc", struct((dot(vec, col("ccv")) / col("ccn")).as("s"),
+        (-col("cid")).as("nc")))
+
   /** Broadcast-join inverted-list ASSIGNMENT: corpus ×
     * broadcast(centroids), per-row argmax of (score, -cid) via a
     * map-side-combined `max(struct)` — the expanded rows for a corpus
@@ -395,42 +432,34 @@ object Similarity {
     * form bloats every task's expression tree at that size). Output:
     * (neighbor_id, cv, cn, list_id). */
   private def ivfAssignBroadcast(corpus: DataFrame, idCol: String, vecCol: String,
-                                 cents: Seq[(Long, Array[Float])]): DataFrame = {
-    val cdf = broadcast(centroidsDf(corpus.sparkSession, cents))
-    corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-        norm(col(vecCol)).as("cn"))
-      .crossJoin(cdf)
-      .withColumn("sc", struct((dot(col("cv"), col("ccv")) / col("ccn")).as("s"),
-        (-col("cid")).as("nc")))
+                                 cents: Seq[(Long, Array[Float])]): DataFrame =
+    centScoredBroadcast(corpusSide(corpus, idCol, vecCol), col("cv"), cents)
       .groupBy(col("neighbor_id"))
       .agg(first(col("cv")).as("cv"), first(col("cn")).as("cn"),
         max(col("sc")).as("best"))
       .withColumn("list_id", -col("best").getField("nc"))
       .drop("best")
-  }
 
-  /** Broadcast-join PROBE-LIST computation for the (small, by
-    * contract) query side: queries × broadcast(centroids), top-nProbe
-    * lists per query via sort_array over the collected (score, -cid)
-    * structs — the same (s desc, cid asc) order [[ivfProbeLists]]
-    * produces. Output: (query_id, qv, qn, list_id) — already exploded
-    * ×nProbe. */
-  private def ivfProbeBroadcast(queries: DataFrame, idCol: String, vecCol: String,
-                                cents: Seq[(Long, Array[Float])],
-                                nProbe: Int): DataFrame = {
-    val cdf = broadcast(centroidsDf(queries.sparkSession, cents))
-    queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        norm(col(vecCol)).as("qn"))
-      .crossJoin(cdf)
-      .withColumn("sc", struct((dot(col("qv"), col("ccv")) / col("ccn")).as("s"),
-        (-col("cid")).as("nc")))
-      .groupBy(col("query_id"))
-      .agg(first(col("qv")).as("qv"), first(col("qn")).as("qn"),
-        sort_array(collect_list(col("sc")), asc = false).as("scored"))
-      .withColumn("list_id",
-        explode(transform(slice(col("scored"), 1, nProbe), x => -x.getField("nc"))))
-      .drop("scored")
-  }
+  /** IVF query side: (query_id, qv, qn, list_id), exploded ×nProbe
+    * over each query's nProbe nearest lists in (score desc, cid asc)
+    * order. At ≤ `centroidLiteralMax` centroids the lists are a
+    * literal projection ([[ivfProbeLists]]); above it the (small, by
+    * contract) queries cross a broadcast centroid table and
+    * sort_array orders the collected structs. */
+  private def ivfQueries(queries: DataFrame, idCol: String, vecCol: String,
+                         cents: Seq[(Long, Array[Float])], nProbe: Int,
+                         centroidLiteralMax: Int): DataFrame =
+    if (cents.size <= centroidLiteralMax)
+      querySide(queries, idCol, vecCol,
+        explode(ivfProbeLists(col(vecCol), cents, nProbe)).as("list_id"))
+    else
+      centScoredBroadcast(querySide(queries, idCol, vecCol), col("qv"), cents)
+        .groupBy(col("query_id"))
+        .agg(first(col("qv")).as("qv"), first(col("qn")).as("qn"),
+          sort_array(collect_list(col("sc")), asc = false).as("scored"))
+        .withColumn("list_id",
+          explode(transform(slice(col("scored"), 1, nProbe), x => -x.getField("nc"))))
+        .drop("scored")
 
   /** Above this many centroids, [[ivfTopK]] / [[ivfTopKBucketed]]
     * switch from embedding the centroid table as expression literals
@@ -467,7 +496,7 @@ object Similarity {
     require(nProbe >= 1 && nProbe <= nCentroids,
       s"nProbe ($nProbe) must be in [1, nCentroids=$nCentroids]")
     val cents = ivfCentroids(corpus, idCol, vecCol, nCentroids).toSeq
-    val (c, q) =
+    val c =
       if (cents.size <= centroidLiteralMax) {
         // LAZY checkpoint as a projection-collapse barrier: without
         // it the optimizer folds this projection into the probe
@@ -478,25 +507,11 @@ object Similarity {
         // persists the assignment ([[withIvfLists]] →
         // [[ivfTopKBucketed]]), where list_id is a stored column and
         // no barrier is needed.
-        (corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-          norm(col(vecCol)).as("cn"),
-          ivfListId(col(vecCol), cents).as("list_id"))
-          .localCheckpoint(false),
-        queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-          norm(col(vecCol)).as("qn"),
-          explode(ivfProbeLists(col(vecCol), cents, nProbe)).as("list_id")))
-      } else {
-        (ivfAssignBroadcast(corpus, idCol, vecCol, cents),
-         ivfProbeBroadcast(queries, idCol, vecCol, cents, nProbe))
-      }
-    val byScore = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    c.join(broadcast(q), "list_id")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rn", row_number().over(byScore))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rn"))
+        corpusSide(corpus, idCol, vecCol, ivfListId(col(vecCol), cents).as("list_id"))
+          .localCheckpoint(false)
+      } else ivfAssignBroadcast(corpus, idCol, vecCol, cents)
+    val q = ivfQueries(queries, idCol, vecCol, cents, nProbe, centroidLiteralMax)
+    rankTopK(c.join(broadcast(q), "list_id"), k, "cos", pairCos)
   }
 
   /** Ingest-time inverted-list assignment: persist the corpus
@@ -512,15 +527,11 @@ object Similarity {
     if (cents.size <= centroidLiteralMax)
       df.withColumn("list_id", ivfListId(col(vecCol), cents))
     else {
-      val cdf = broadcast(centroidsDf(df.sparkSession, cents))
-      val cols = df.columns
-      df.withColumn("__rid", monotonically_increasing_id())
-        .crossJoin(cdf)
-        .withColumn("sc", struct((dot(col(vecCol), col("ccv")) / col("ccn")).as("s"),
-          (-col("cid")).as("nc")))
+      val firsts = df.columns.toIndexedSeq.map(c => first(col(c)).as(c))
+      centScoredBroadcast(df.withColumn("__rid", monotonically_increasing_id()),
+          col(vecCol), cents)
         .groupBy(col("__rid"))
-        .agg(cols.map(c => first(col(c)).as(c)).head,
-          cols.map(c => first(col(c)).as(c)).tail :+ max(col("sc")).as("best"): _*)
+        .agg(firsts.head, firsts.tail :+ max(col("sc")).as("best"): _*)
         .withColumn("list_id", -col("best").getField("nc"))
         .drop("best", "__rid")
     }
@@ -536,24 +547,9 @@ object Similarity {
                       idCol: String, vecCol: String, k: Int,
                       cents: Seq[(Long, Array[Float])], nProbe: Int = 2,
                       centroidLiteralMax: Int = CentroidLiteralMax): DataFrame = {
-    val q =
-      if (cents.size <= centroidLiteralMax)
-        queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-          norm(col(vecCol)).as("qn"),
-          explode(ivfProbeLists(col(vecCol), cents, nProbe)).as("list_id"))
-      else ivfProbeBroadcast(queries, idCol, vecCol, cents, nProbe)
-    val probed = q.select("list_id").distinct().collect().map(_.getLong(0))
-    val c = assigned.filter(col("list_id").isin(probed: _*))
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-        norm(col(vecCol)).as("cn"), col("list_id"))
-    val byScore = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    c.join(broadcast(q), "list_id")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rn", row_number().over(byScore))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rn"))
+    val q = ivfQueries(queries, idCol, vecCol, cents, nProbe, centroidLiteralMax)
+    val c = corpusSide(pruneStore(assigned, q, "list_id"), idCol, vecCol, col("list_id"))
+    rankTopK(c.join(broadcast(q), "list_id"), k, "cos", pairCos)
   }
 
   // ──────────────────── Product quantization (PQ) ────────────────────
@@ -635,6 +631,36 @@ object Similarity {
     }
   }
 
+  /** The `pq_code_*` columns of an `nSub`-subspace code store. */
+  private def codeCols(nSub: Int): Seq[Column] = (0 until nSub).map(s => col(s"pq_code_$s"))
+
+  /** ADC query side: per subspace s, `lut_s` = the dots of the query's
+    * subvector with each codeword of book s, computed once per query;
+    * the raw `qv` is dropped. */
+  private def withLuts(q: DataFrame, books: Seq[Seq[(Long, Array[Float])]],
+                       dim: Int): DataFrame = {
+    val sd = dim / books.size
+    books.zipWithIndex.foldLeft(q) { case (d, (cents, s)) =>
+      d.withColumn(s"lut_$s", array(cents.map { case (_, cv) =>
+        dot(slice(col("qv"), s * sd + 1, sd),
+          array(cv.toSeq.map(lit(_)): _*)) }: _*))
+    }.drop("qv")
+  }
+
+  /** ADC score of a (LUT query, coded neighbor) pair:
+    * Σ_s lut_s[code_s] / (qn · √(Σ_s |codeword_s|²)), both sums
+    * left-assoc in subspace order. */
+  private def adcScore(books: Seq[Seq[(Long, Array[Float])]]): Column = {
+    val num = books.indices.map(s =>
+      element_at(col(s"lut_$s"), col(s"pq_code_$s").cast("int")))
+      .reduceLeft(_ + _)
+    val nsqSum = books.zipWithIndex.map { case (cents, s) =>
+      element_at(typedlit(cents.map(c => pqNormSq(c._2)).toArray),
+        col(s"pq_code_$s").cast("int"))
+    }.reduceLeft(_ + _)
+    num / (col("qn") * sqrt(nsqSum))
+  }
+
   /** ADC (asymmetric distance computation) top-k over a PQ-coded
     * corpus: the query stays EXACT, the corpus is its codes — score =
     * approx cosine = (Σ_s dot(q_s, codeword_s)) / (|q| ·
@@ -655,7 +681,6 @@ object Similarity {
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
              vecCol: String, k: Int, books: Seq[Seq[(Long, Array[Float])]],
              dim: Int = 64): DataFrame = {
-    val nSub = books.size
     // LAZY checkpoint as a projection-collapse barrier: without it the
     // optimizer folds the encode projection INTO the scoring join's
     // output, re-evaluating the per-row argmax once per (row, query)
@@ -664,7 +689,7 @@ object Similarity {
     // PQ representation itself), materialized once per run; the
     // production path persists it instead ([[pqTopKCoded]]).
     val coded = withPqCodes(corpus, vecCol, books, dim)
-      .select(col(idCol) +: (0 until nSub).map(s => col(s"pq_code_$s")): _*)
+      .select(col(idCol) +: codeCols(books.size): _*)
       .localCheckpoint(false)
     pqTopKCoded(coded, queries, idCol, vecCol, k, books, dim)
   }
@@ -678,33 +703,9 @@ object Similarity {
                   vecCol: String, k: Int,
                   books: Seq[Seq[(Long, Array[Float])]],
                   dim: Int = 64): DataFrame = {
-    val nSub = books.size
-    val sd = dim / nSub
-    val coded = codedStore.select(
-      col(idCol).as("neighbor_id") +:
-        (0 until nSub).map(s => col(s"pq_code_$s")): _*)
-    val q0 = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      norm(col(vecCol)).as("qn"))
-    val q = books.zipWithIndex.foldLeft(q0) { case (d, (cents, s)) =>
-      d.withColumn(s"lut_$s", array(cents.map { case (_, cv) =>
-        dot(slice(col("qv"), s * sd + 1, sd),
-          array(cv.toSeq.map(lit(_)): _*)) }: _*))
-    }.drop("qv")
-    val num = (0 until nSub).map(s =>
-      element_at(col(s"lut_$s"), col(s"pq_code_$s").cast("int")))
-      .reduceLeft(_ + _)
-    val nsqSum = books.zipWithIndex.map { case (cents, s) =>
-      element_at(typedlit(cents.map(c => pqNormSq(c._2)).toArray),
-        col(s"pq_code_$s").cast("int"))
-    }.reduceLeft(_ + _)
-    val byScore = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("neighbor_id").asc)
-    coded.crossJoin(broadcast(q))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("adc", num / (col("qn") * sqrt(nsqSum)))
-      .withColumn("rn", row_number().over(byScore))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("adc"), col("rn"))
+    val coded = codedStore.select(col(idCol).as("neighbor_id") +: codeCols(books.size): _*)
+    val q = withLuts(querySide(queries, idCol, vecCol), books, dim)
+    rankTopK(coded.crossJoin(broadcast(q)), k, "adc", adcScore(books))
   }
 
   /** IVF-PQ composed ANN — the production 100 TB index shape (Jégou
@@ -728,7 +729,6 @@ object Similarity {
                 books: Seq[Seq[(Long, Array[Float])]], nProbe: Int = 2,
                 dim: Int = 64,
                 centroidLiteralMax: Int = CentroidLiteralMax): DataFrame = {
-    val nSub = books.size
     // same projection-collapse barrier as [[pqTopK]]: the store is
     // (id, list_id, codes) — the IVF-PQ representation itself — built
     // in ONE corpus scan (assignment + encode are both projections),
@@ -737,8 +737,7 @@ object Similarity {
     val store = withPqCodes(
         withIvfLists(corpus, vecCol, cents, centroidLiteralMax),
         vecCol, books, dim)
-      .select(col(idCol) +: col("list_id") +:
-        (0 until nSub).map(s => col(s"pq_code_$s")): _*)
+      .select(col(idCol) +: col("list_id") +: codeCols(books.size): _*)
       .localCheckpoint(false)
     ivfPqTopKCoded(store, queries, idCol, vecCol, k, cents, books,
       nProbe, dim, centroidLiteralMax)
@@ -756,44 +755,11 @@ object Similarity {
                      books: Seq[Seq[(Long, Array[Float])]], nProbe: Int = 2,
                      dim: Int = 64,
                      centroidLiteralMax: Int = CentroidLiteralMax): DataFrame = {
-    val nSub = books.size
-    val sd = dim / nSub
-    // probe lists per query — literal or broadcast regime, the
-    // [[ivfTopKBucketed]] switch; both output (query_id, qv, qn,
-    // list_id) exploded ×nProbe, qv retained for the LUT fold
-    val q0 =
-      if (cents.size <= centroidLiteralMax)
-        queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-          norm(col(vecCol)).as("qn"),
-          explode(ivfProbeLists(col(vecCol), cents, nProbe)).as("list_id"))
-      else ivfProbeBroadcast(queries, idCol, vecCol, cents, nProbe)
-    val q = books.zipWithIndex.foldLeft(q0) { case (d, (bk, s)) =>
-      d.withColumn(s"lut_$s", array(bk.map { case (_, cv) =>
-        dot(slice(col("qv"), s * sd + 1, sd),
-          array(cv.toSeq.map(lit(_)): _*)) }: _*))
-    }.drop("qv")
-    // bounded driver-side probe set (nQueries × nProbe ids) → isin
-    // partition filter on the store, the same control-plane collect
-    // contract as [[ivfTopKBucketed]]
-    val probed = q.select("list_id").distinct().collect().map(_.getLong(0))
-    val c = codedStore.filter(col("list_id").isin(probed: _*)).select(
-      col(idCol).as("neighbor_id") +: col("list_id") +:
-        (0 until nSub).map(s => col(s"pq_code_$s")): _*)
-    val num = (0 until nSub).map(s =>
-      element_at(col(s"lut_$s"), col(s"pq_code_$s").cast("int")))
-      .reduceLeft(_ + _)
-    val nsqSum = books.zipWithIndex.map { case (bk, s) =>
-      element_at(typedlit(bk.map(cv => pqNormSq(cv._2)).toArray),
-        col(s"pq_code_$s").cast("int"))
-    }.reduceLeft(_ + _)
-    val byScore = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("neighbor_id").asc)
-    c.join(broadcast(q), "list_id")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("adc", num / (col("qn") * sqrt(nsqSum)))
-      .withColumn("rn", row_number().over(byScore))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("adc"), col("rn"))
+    val q = withLuts(ivfQueries(queries, idCol, vecCol, cents, nProbe, centroidLiteralMax),
+      books, dim)
+    val c = pruneStore(codedStore, q, "list_id")
+      .select(col(idCol).as("neighbor_id") +: col("list_id") +: codeCols(books.size): _*)
+    rankTopK(c.join(broadcast(q), "list_id"), k, "adc", adcScore(books))
   }
 
   /** Sentinel for [[mutualNearest]]'s plane count: derive from the
@@ -881,14 +847,9 @@ object Similarity {
   def embedCosinePairs(emb: DataFrame, idCol: String, vecCol: String,
                        minCos: Double, numPlanes: Int = 8, dim: Int = 64,
                        maxFlips: Int = 2): DataFrame = {
-    val planes = hyperplanes(numPlanes, dim)
-    val masks: Seq[Long] = (0 to maxFlips).flatMap(nFlips =>
-      (0 until numPlanes).combinations(nFlips)
-        .map(_.foldLeft(0L)((m, p) => m | (1L << p))).toSeq)
-    val b = emb.select(col(idCol).as("id"), col(vecCol).as("v"),
-      norm(col(vecCol)).as("n"), lshBucket(col(vecCol), planes).as("bucket"))
-    val exploded = b.withColumn("jb", explode(array(masks.map(m =>
-      col("bucket").bitwiseXOR(lit(m))): _*)))
+    val b = emb.select(col(idCol).as("id"), col(vecCol).as("v"), norm(col(vecCol)).as("n"),
+      lshBucket(col(vecCol), hyperplanes(numPlanes, dim)).as("bucket"))
+    val exploded = b.withColumn("jb", hammingBall(col("bucket"), numPlanes, maxFlips))
     exploded.as("x").join(b.as("y"),
         col("x.jb") === col("y.bucket") && col("x.id") < col("y.id"))
       .select(col("x.id").as("vec_a"), col("y.id").as("vec_b"),

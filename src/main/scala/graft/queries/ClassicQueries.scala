@@ -30,10 +30,7 @@ import graft.sources.Tables
   */
 object ClassicQueries {
 
-  import QueryMath.{dec2, sumDbl2}
-  private def one = lit(1).cast(DecimalType(3, 2))
-  private def revenue =
-    dec2(col("l_extendedprice")) * (one - dec2(col("l_discount")))
+  import QueryMath.{Rev, dec2, revenue, sumDbl2}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // B38 — TPC-H Q8-style market share: NATION_1's share of
@@ -390,9 +387,6 @@ object ClassicQueries {
           col("n_regionkey") === col("r_regionkey"))
         .select(col("s_suppkey"), col("s_name"), col("n_name").as("nation"))
     })
-
-  private val Rev =
-    "CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(18,2)))"
 
   val oracles: Map[String, String] = Map(
     "q8_market_share" -> s"""

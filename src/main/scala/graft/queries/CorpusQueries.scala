@@ -15,6 +15,8 @@ import graft.sources.Tables
   */
 object CorpusQueries {
 
+  import PipelineQueries.{CorpusCte, corpus}
+
   /** Training-shuffle shard count. The parallelism/file-size knob: at
     * 100 TB this is "output files" (millions, each ~1 GB), so every
     * shard-local rank window sorts one file's worth of rows — here 16
@@ -293,26 +295,6 @@ object CorpusQueries {
         .withColumn("pos", row_number().over(w).cast("long"))
         .select(col("doc_id"), col("shard"), col("pos"))
     })
-
-  /** Near-dup corpus: mirrors [[PipelineQueries]]'s corpus exactly
-    * (bounded id slice ∪ truncated copies at +1e6) so C39's measured
-    * duplication has known ground truth. */
-  private def corpus(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.documents(s, d).filter(col("doc_id") < 200)
-      .select(col("doc_id"), col("text"))
-    val pert = base.filter(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"),
-        expr("substring(text, 1, greatest(char_length(text) - 7, 0))").as("text"))
-    base.unionByName(pert)
-  }
-
-  private val CorpusCte =
-    """WITH corpus AS (
-      |  SELECT doc_id, text FROM documents WHERE doc_id < 200
-      |  UNION ALL
-      |  SELECT doc_id + 1000000, substr(text, 1, greatest(length(text) - 7, 0))
-      |  FROM documents WHERE doc_id < 200 AND doc_id % 10 = 0
-      |)""".stripMargin
 
   /** The C64/C65 planted-leak corpus: the %97 probe slice is the
     * benchmark suite; every doc_id % 7 == 3 corpus doc gets the first

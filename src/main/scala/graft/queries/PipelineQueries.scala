@@ -16,10 +16,13 @@ import graft.sources.Tables
   */
 object PipelineQueries {
 
+  import QueryMath.{cosSql, dotSql}
+
   /** Near-dup test corpus: a bounded id range plus perturbed copies
     * (last 7 chars dropped, id offset by 1e6) so near-duplicate pairs
-    * provably exist. Mirrored exactly by [[CorpusCte]]. */
-  private def corpus(s: SparkSession, d: String): DataFrame = {
+    * provably exist. Mirrored exactly by [[CorpusCte]]; shared with
+    * [[CorpusQueries]]. */
+  private[queries] def corpus(s: SparkSession, d: String): DataFrame = {
     val base = Tables.documents(s, d).filter(col("doc_id") < 200)
       .select(col("doc_id"), col("text"))
     val pert = base.filter(col("doc_id") % 10 === 0)
@@ -50,7 +53,7 @@ object PipelineQueries {
       |  SELECT doc_id + 1000000, substr(text, 1, greatest(length(text) - 7, 0))
       |  FROM documents WHERE doc_id < 200 AND doc_id % 10 = 0
       |)""".stripMargin
-  private val CorpusCte = "WITH " + CorpusBody
+  private[queries] val CorpusCte = "WITH " + CorpusBody
 
   /** CTE body: exact character-5-gram Jaccard pairs >= 8000 bp over
     * `corpus` — the ground truth the sketched dedup paths (MinHash-LSH,
@@ -92,19 +95,6 @@ object PipelineQueries {
   private def toSigned64(h: String): String =
     s"""CAST(CASE WHEN $h >= 9223372036854775808::HUGEINT
        |     THEN $h - 18446744073709551616::HUGEINT ELSE $h END AS BIGINT)""".stripMargin
-
-  /** DuckDB SQL replicating [[Similarity.dot]] bit-exactly: per-element
-    * FLOAT multiply (list elements stay REAL), then a sequential left
-    * fold into a DOUBLE accumulator — the same order and precision as
-    * Spark's `aggregate(zip_with(a, b, (x, y) -> x*y), 0.0D, acc + v)`,
-    * so the resulting doubles are bit-identical. */
-  private def dotSql(a: String, b: String): String =
-    s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-      s"list_transform(range(1, len($a)+1), i -> CAST($a[CAST(i AS INT)] * $b[CAST(i AS INT)] AS DOUBLE))), " +
-      s"(acc, v) -> acc + v)"
-
-  private def cosSql(a: String, b: String): String =
-    s"${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)}))"
 
   /** C98/C99 shared PQ oracle CTEs — cent0..3 (subspace-salted seed
     * books, cid = salted hash rank, the `Similarity.pqCodebooks`

@@ -29,4 +29,28 @@ object QueryMath {
   /** Deterministic average: exact-decimal sum ÷ count (a plain
     * avg(double) is partition-order-dependent). */
   def avgDec2(c: Column): Column = sum(dec2(c)).cast("double") / count(lit(1))
+
+  private[queries] def one: Column = lit(1).cast(DecimalType(3, 2))
+
+  /** revenue := extprice * (1 - discount), exact decimal. */
+  private[queries] def revenue: Column =
+    dec2(col("l_extendedprice")) * (one - dec2(col("l_discount")))
+
+  /** The oracle SQL twin of [[revenue]]. */
+  private[queries] val Rev =
+    "CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(18,2)))"
+
+  /** DuckDB SQL replicating [[graft.operators.Similarity.dot]]
+    * bit-exactly: per-element FLOAT multiply (list elements stay REAL),
+    * then a sequential left fold into a DOUBLE accumulator — the same
+    * order and precision as the VecDot fold, so the resulting doubles
+    * are bit-identical. */
+  private[queries] def dotSql(a: String, b: String): String =
+    s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
+      s"list_transform(range(1, len($a)+1), i -> CAST($a[CAST(i AS INT)] * $b[CAST(i AS INT)] AS DOUBLE))), " +
+      s"(acc, v) -> acc + v)"
+
+  /** DuckDB twin of [[graft.operators.Similarity.cosine]]. */
+  private[queries] def cosSql(a: String, b: String): String =
+    s"${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)}))"
 }

@@ -15,12 +15,7 @@ import graft.sources.Tables
   */
 object RelationalQueries {
 
-  import QueryMath.{avgDec2, dec2, sumDbl2, sumDbl6}
-  private def one = lit(1).cast(DecimalType(3, 2))
-
-  /** revenue := extprice * (1 - discount), exact decimal. */
-  private def revenue =
-    dec2(col("l_extendedprice")) * (one - dec2(col("l_discount")))
+  import QueryMath.{Rev, avgDec2, dec2, one, revenue, sumDbl2, sumDbl6}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // B1 — scan + filter + hash-agg, partial aggregation before the
@@ -499,9 +494,6 @@ object RelationalQueries {
         (col("le95") * 10000 >= col("n_events") * 9000 &&
           col("le95") * 10000 <= col("n_events") * 9800).as("p95_within_bound"))
     })
-
-  private val Rev =
-    "CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(18,2)))"
 
   val oracles: Map[String, String] = Map(
     // B61: the O(n²) dominance definition — deliberately NOT the

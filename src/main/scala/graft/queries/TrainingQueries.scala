@@ -15,6 +15,8 @@ import graft.sources.Tables
   */
 object TrainingQueries {
 
+  import QueryMath.{cosSql, dotSql}
+
   /** Tokens per packed training chunk (a context-window stand-in). */
   private val PackCapacity = 2048.0
 
@@ -349,17 +351,6 @@ object TrainingQueries {
       s"(CAST($v[CAST(i AS INT)] AS DOUBLE) - $c[CAST(i AS INT)]) * " +
       s"(CAST($v[CAST(i AS INT)] AS DOUBLE) - $c[CAST(i AS INT)]))), " +
       s"(acc, x) -> acc + x)"
-
-  /** DuckDB twin of [[graft.operators.Similarity.dot]] /
-    * [[graft.operators.Similarity.cosine]] (same text as
-    * PipelineQueries.dotSql — the shared float-fold convention). */
-  private def dotSql(a: String, b: String): String =
-    s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-      s"list_transform(range(1, len($a)+1), i -> CAST($a[CAST(i AS INT)] * $b[CAST(i AS INT)] AS DOUBLE))), " +
-      s"(acc, v) -> acc + v)"
-
-  private def cosSql(a: String, b: String): String =
-    s"${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)}))"
 
   /** One k-means assignment pass as SQL: nearest `cents` centroid per
     * vector, ties to the lowest cluster id. */

@@ -83,7 +83,7 @@ object TwsCep {
 
     override def handleExpiredTimer(key: Long, tv: TimerValues,
                                     info: ExpiredTimerInfo): Iterator[Episode] = {
-      val expiry = info.getExpiryTimeInMs
+      val expiry = info.getExpiryTimeInMs()
       val allOpen = if (open.exists()) open.get().toArray else Array.empty[(Long, Long)]
       val (due, stillOpen) = allOpen.partition(_._2 + windowMs + 1 <= expiry)
       val events = (if (buf.exists()) buf.get().toArray

@@ -13,8 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * has to replace one of these or live outside the tree; its committed
   * artifact is the record. Also the one-copy shapes: a single
   * exact-Jaccard verify, `Ckpt` as the only eager checkpoint, one
-  * latest-value enrichment engine, one spec temp-dir helper, and one
-  * session builder (so every session gets graft's `file:` filesystem).
+  * latest-value enrichment engine, one spec temp-dir helper, one
+  * session builder (so every session gets graft's `file:` filesystem),
+  * one ANN top-k rank step with no streaming wrapper around it, and
+  * one copy of each shared oracle SQL helper.
   * Needles that name code are spelled in halves so that this file does
   * not match itself.
   */
@@ -111,5 +113,27 @@ class EntryPointSpec extends AnyFunSuite {
     val all = sources ++ testSources ++ scalaFiles("perfbench/src/main/scala")
     val got = sites("SparkSession" + ".builder", all, code = true)
     assert(got == Seq("GraftSession.scala" -> Some("builder")), got)
+  }
+
+  test("streaming ANN search calls the batch probe from foreachBatch: no wrapper object") {
+    val gone = Seq("TwsAnn" + "Probe", "lshProbe" + "Writer", "ivfProbe" + "Writer",
+      "pqProbe" + "Writer")
+    val hits = gone.flatMap(n => sites(n).map(n -> _))
+    assert(hits.isEmpty, hits)
+  }
+
+  test("Similarity ranks top-k once: rankTopK beside the vote, fusion, MMR and mutual-NN ranks") {
+    val sim = sources.filter(_._1.endsWith("Similarity.scala"))
+    val got = sites("row_" + "number()", sim, code = true).flatMap(_._2)
+    assert(got == Seq("rankTopK", "knnClassify", "rrfFusion", "rrfFusion", "rrfFusion",
+      "mmrTopK", "mutualNearest", "mutualNearest"), got)
+  }
+
+  test("each shared oracle SQL helper and the near-dup corpus are defined once") {
+    val queries = sources.filter(_._1.contains("/graft/queries/"))
+    val defs = Seq("def dot" + "Sql(", "def cos" + "Sql(", "val Corpus" + "Cte ",
+      "def cor" + "pus(", "def reve" + "nue", "val Rev" + " =")
+    val counts = defs.map(d => d -> sites(d, queries, code = true).size)
+    assert(counts.forall(_._2 == 1), counts)
   }
 }

@@ -2139,6 +2139,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("TwsAnnProbe: stream-accumulated LSH and IVF probes equal the one-shot " +
       "batch probe over the union of micro-batches (r12 verdict item 9)") {
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -2165,11 +2166,15 @@ class StreamingSpec extends SparkTestBase {
       // stream the same queries in 3 micro-batches through each probe
       val lshIn = MemoryStream[(Long, Array[Float])]
       val lshAcc = scala.collection.mutable.Set.empty[(Long, Long, Int)]
-      val lshQ = graft.streaming.TwsAnnProbe.lshProbeWriter(
-          lshIn.toDS().toDF("vec_id", "embedding"), lshStore, "vec_id",
-          "embedding", k = 10, numPlanes = 4, multiprobe = 1) { (res, _) =>
-        lshAcc ++= res.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
-      }.option("checkpointLocation", s"$dir/lsh").start()
+      // streaming search over a static store is the batch probe per
+      // micro-batch, called straight from foreachBatch
+      val lshQ = lshIn.toDS().toDF("vec_id", "embedding").writeStream
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          lshAcc ++= Sim.lshTopKBucketed(lshStore, b, "vec_id", "embedding",
+              k = 10, numPlanes = 4, multiprobe = 1)
+            .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
+          ()
+        }.option("checkpointLocation", s"$dir/lsh").start()
       try {
         qRows.grouped((qRows.length + 2) / 3).foreach { g =>
           lshIn.addData(g.toSeq); lshQ.processAllAvailable()
@@ -2179,11 +2184,13 @@ class StreamingSpec extends SparkTestBase {
         s"LSH stream/batch diverged: ${(lshAcc.toSet -- batchLsh) ++ (batchLsh -- lshAcc)}")
       val ivfIn = MemoryStream[(Long, Array[Float])]
       val ivfAcc = scala.collection.mutable.Set.empty[(Long, Long, Int)]
-      val ivfQ = graft.streaming.TwsAnnProbe.ivfProbeWriter(
-          ivfIn.toDS().toDF("vec_id", "embedding"), ivfStore, "vec_id",
-          "embedding", k = 10, cents, nProbe = 4) { (res, _) =>
-        ivfAcc ++= res.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
-      }.option("checkpointLocation", s"$dir/ivf").start()
+      val ivfQ = ivfIn.toDS().toDF("vec_id", "embedding").writeStream
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          ivfAcc ++= Sim.ivfTopKBucketed(ivfStore, b, "vec_id", "embedding",
+              k = 10, cents, nProbe = 4)
+            .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
+          ()
+        }.option("checkpointLocation", s"$dir/ivf").start()
       try {
         qRows.grouped((qRows.length + 2) / 3).foreach { g =>
           ivfIn.addData(g.toSeq); ivfQ.processAllAvailable()
