@@ -6,9 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.streaming.{CdcPipeline, TwsActiveUsers, TwsBurstiness, TwsCep,
-  TwsDedup, TwsDomainCap, TwsMeanShift, TwsScd2, TwsSeqGap,
-  TwsSessionize, TwsTrending}
+import graft.operators.{Similarity, Windows}
+import graft.streaming.{CdcPipeline, TwsActiveUsers, TwsCep, TwsDedup,
+  TwsDomainCap, TwsMeanShift, TwsScd2, TwsSeqGap, TwsTrending}
 
 /** Streaming performance posture (r15 item 5, extended r16 to the FULL
   * Tws family): throughput, state-store footprint, and recovery time
@@ -295,11 +295,12 @@ object StreamBench {
         .toDF()
     }
 
-    // 2) TwsSessionize: watermark-final sessions over events — state =
-    //    open sessions per user; 30-min gap, 10-min lateness (the
-    //    reference topology's out-of-orderness allowance).
-    bench("TwsSessionize", "events", filesPerTrigger = 4) { ev =>
-      TwsSessionize.sessions(ev, gapSecs = 1800L, delay = "10 minutes").toDF()
+    // 2) Sessions: watermark-final sessions over events (Spark's
+    //    session_window) — state = open sessions per user; 30-min gap,
+    //    10-min lateness (the reference topology's out-of-orderness
+    //    allowance).
+    bench("Sessions", "events", filesPerTrigger = 4) { ev =>
+      Windows.sessions(ev, gapSecs = 1800L, delay = "10 minutes")
     }
 
     // 3) CdcEnrichment: latest-image enrichment — events replayed as a
@@ -388,11 +389,11 @@ object StreamBench {
         delay = "10 minutes").toDF()
     }
 
-    // 11) TwsBurstiness: per-(type, day) inter-arrival gap moments —
-    //     state = per-second arrival map per open (type, day).
-    bench("TwsBurstiness", "events", filesPerTrigger = 4) { ev =>
-      TwsBurstiness.moments(ev, settleSecs = 600L,
-        delay = "10 minutes").toDF()
+    // 11) DayGapMoments: per-(type, day) inter-arrival gap moments on a
+    //     1-day tumble — state = the distinct seconds per open (type,
+    //     day).
+    bench("DayGapMoments", "events", filesPerTrigger = 4) { ev =>
+      Windows.dayGapMoments(ev, delay = "10 minutes")
     }
 
     // 12) AnnProbe: stateless foreachBatch LSH probe of the vector
@@ -400,58 +401,20 @@ object StreamBench {
     //     here is probe throughput + source-position recovery (there
     //     is no state operator; stateRows columns read -1 by design).
     if (selected("AnnProbe")) {
-      rowsRun += 1
-      val name = "AnnProbe"
-      val src = s"$dataDir/embeddings.parquet"
-      val schema = spark.read.parquet(src).schema
-      val store = graft.operators.Similarity
-        .withLshBucket(spark.read.parquet(src), "embedding", numPlanes = 8)
+      val store = Similarity.withLshBucket(
+          spark.read.parquet(s"$dataDir/embeddings.parquet"), "embedding",
+          numPlanes = 8)
         .localCheckpoint()
-      val parts = {
-        val s = Files.list(Paths.get(src))
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.filter { p =>
-            val n = p.getFileName.toString
-            n.startsWith("part-") && n.endsWith(".parquet")
-          }.toSeq.sortBy(_.getFileName.toString)
-        } finally s.close()
-      }
-      val holdBack = math.max(1, parts.size / 10)
-      val (head, tail) = parts.splitAt(parts.size - holdBack)
-      val inDir = work.resolve(s"$name-in")
-      val ckpt = work.resolve(s"$name-ckpt").toString
-      copyParts(src, inDir, head)
       val probed = new java.util.concurrent.atomic.AtomicLong
-      def start(): StreamingQuery = {
-        val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 4).parquet(inDir.toString)
-          .select(col("vec_id"), col("embedding"))
-        stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-          probed.addAndGet(graft.operators.Similarity.lshTopKBucketed(store, batch,
-            "vec_id", "embedding", k = 10, numPlanes = 8, multiprobe = 1).count())
-          ()
-        }.option("checkpointLocation", ckpt).start()
+      bench("AnnProbe", "embeddings", filesPerTrigger = 4,
+          sink = Some { (batch: DataFrame, _: Long) =>
+            probed.addAndGet(Similarity.lshTopKBucketed(store, batch,
+              "vec_id", "embedding", k = 10, numPlanes = 8, multiprobe = 1)
+              .count()): Unit
+          }) { emb =>
+        emb.select(col("vec_id"), col("embedding"))
       }
-      val t0 = System.nanoTime()
-      val q = start()
-      q.processAllAvailable()
-      val ingestSec = (System.nanoTime() - t0) / 1e9
-      val rows = q.recentProgress.map(_.numInputRows).sum
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      safeStop(q)
-      copyParts(src, inDir, tail)
-      val r0 = System.nanoTime()
-      val q2 = start()
-      q2.processAllAvailable()
-      val recoverSec = (System.nanoTime() - r0) / 1e9
-      val rRows = q2.recentProgress.map(_.numInputRows).sum
-      safeStop(q2)
-      log(f"STREAMBENCH $name%-14s rows=$rows%9d batches=$batches%3d " +
-        f"ingest=$ingestSec%7.2fs thpt=${rows / math.max(ingestSec, 1e-9)}%9.0f rows/s " +
-        f"stateRows=${-1}%9d stateMemMB=${-0.0}%8.1f " +
-        f"sstMB=${-0.0}%8.1f ckptStateMB=${du(Paths.get(ckpt, "state")) / 1e6}%8.1f " +
-        f"recovery=$recoverSec%6.2fs (+$rRows rows) probePairs=${probed.get()}")
+      log(s"# AnnProbe probePairs=${probed.get()}")
     }
 
     // 13) optional (arg flag "dedup100x"): TwsDedup at 10× its r15

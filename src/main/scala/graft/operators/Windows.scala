@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
   * (`output.sql`) plus the hop/session variants every stream engine
   * pairs with it. The same `window()`/`session_window()` calls run
   * unchanged under Structured Streaming with a watermark
-  * (see `graft.streaming.CdcPipeline`).
+  * (see `graft.streaming.CdcPipeline`, [[sessions]] and
+  * [[dayGapMoments]]): window finality is the engine's watermark, not
+  * per-operator timer code.
   *
   * Scale: tumble/hop are pure projections before a hash aggregate —
   * partial (map-side) aggregation happens before the shuffle, so bytes
@@ -41,6 +43,56 @@ object Windows {
       .agg(aggs.head, aggs.tail: _*)
       .withColumn("session_start", col("session_window.start"))
       .drop("session_window")
+
+  /** Gap-island sessions per user (B32 `sessionize`) on an events frame
+    * (`user_id, ts`): `(user_id, start_ms, end_ms, n_events)`, where
+    * `end_ms` is the session's last event. Events chain while the next
+    * one is at most `gapSecs` later: `diff == gap` joins, `diff == gap +
+    * 1 ms` splits — the batch rule `diff > gap`, which [[session]] at
+    * `gap` keeps because Spark merges a session that starts exactly at
+    * the previous one's end (last event + gap).
+    *
+    * `delay` is the watermark lateness allowance and has no effect on a
+    * batch frame. On a stream, out-of-order fragments merge in Spark's
+    * session state, and a session emits once (append mode) when the
+    * watermark passes its last event + gap. */
+  def sessions(events: DataFrame, gapSecs: Long, delay: String): DataFrame =
+    session(
+      events.select(col("user_id").cast("long").as("user_id"),
+        col("ts").cast("timestamp").as("ts")).withWatermark("ts", delay),
+      "ts", s"$gapSecs seconds", Seq(col("user_id")),
+      Seq(max(col("ts")).as("last"), count(lit(1)).as("n_events")))
+      .select(col("user_id"), unix_millis(col("session_start")).as("start_ms"),
+        unix_millis(col("last")).as("end_ms"), col("n_events"))
+
+  /** Integer inter-arrival gap moments per (event_type, UTC day) on the
+    * seconds grid — the inputs of the B119 burstiness index
+    * B = (√D − S)/(√D + S), D = n_gaps·Σg² − S²:
+    * `(event_type, day, n_events, n_gaps, sum_gap_s, sum_gap2_s)` for
+    * every (type, day) with at least two events. Same-second events
+    * add zero-length gaps (they still count in `n_gaps`), so Σgap
+    * telescopes to last − first and only steps between occupied
+    * seconds carry squared mass; the aggregate keeps the day's
+    * distinct seconds, so state is ≤ 86 400 entries per (type, day)
+    * whatever the day's volume.
+    *
+    * `delay` is the watermark lateness allowance and has no effect on a
+    * batch frame. On a stream, a day emits once (append mode) when the
+    * watermark reaches its exclusive end. */
+  def dayGapMoments(events: DataFrame, delay: String): DataFrame =
+    tumble(
+      events.select(col("event_type").cast("string").as("event_type"),
+        col("ts").cast("timestamp").as("ts")).withWatermark("ts", delay),
+      "ts", "1 day", Seq(col("event_type")),
+      Seq(count(lit(1)).as("n_events"),
+        array_sort(collect_set(col("ts").cast("long"))).as("secs")))
+      .filter(col("n_events") >= 2)
+      .select(col("event_type"),
+        (unix_seconds(col("window_start")) / 86400L).cast("long").as("day"),
+        col("n_events"), (col("n_events") - 1L).as("n_gaps"),
+        (element_at(col("secs"), -1) - element_at(col("secs"), 1)).as("sum_gap_s"),
+        expr("aggregate(transform(slice(secs, 2, size(secs) - 1), " +
+          "(s, i) -> s - secs[i]), 0L, (acc, g) -> acc + g * g)").as("sum_gap2_s"))
 
   /** Dense hourly gap fill per key: an hourly spine between each key's
     * first and last event, left-joined back and zero-filled.

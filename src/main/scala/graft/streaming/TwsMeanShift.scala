@@ -21,9 +21,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode,
   * the spec feeds exactly that slicing and pins equality with the
   * batch frames.
   *
-  * MECHANICS (the [[TwsSessionize]] conventions): events buffer in
-  * per-key list state; each micro-batch registers ONE event-time
-  * timer at its max event time + 1. A firing timer sorts the buffer,
+  * MECHANICS: events buffer in per-key list state; each micro-batch
+  * registers ONE event-time timer at its max event time + 1. A firing timer sorts the buffer,
   * walks points past the emission cursor whose win-th follower is
   * final (`follower.ts + 1 <= expiry` — finality is monotone along
   * the sort, so the walk breaks at the first non-final point), emits

@@ -15,9 +15,9 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
   * arrive: each micro-batch that touches a block advances the block's
   * max event time and registers a timer at `maxTs + settle + 1`; a
   * firing timer finalizes ONLY if it is the newest one (expiry covers
-  * the stored maxTs — an older timer fires and defers, exactly the
-  * [[TwsSessionize]] closed-prefix rule). On finalization the block
-  * emits `(block_id, n_present, n_missing = blockSize − n_present)`
+  * the stored maxTs — an older timer fires and defers). On
+  * finalization the block emits
+  * `(block_id, n_present, n_missing = blockSize − n_present)`
   * and clears its count state; a FINALIZED TOMBSTONE (one long: the
   * finalization time) survives for `tombstoneTtlSecs` so stragglers
   * can't silently replay a full audit. Event time is NOT monotone in

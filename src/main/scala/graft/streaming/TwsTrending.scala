@@ -40,8 +40,17 @@ object TwsTrending {
   case class Trend(group: String, window_start: Long, term: String,
                    cnt: Long, rank: Long)
 
-  class MisraGriesTopK(k: Int, capacity: Int, windowMs: Long)
-      extends StatefulProcessor[(String, Long), Tok, Trend] {
+  /** The Misra-Gries body of both forms: fold a micro-batch's terms into
+    * the `summary` counters, decrement back to `capacity`, arm one timer
+    * at the window end, and when it fires hand the `k` heaviest
+    * (term, count) pairs, heaviest first, to `emit` and clear the
+    * state. `term` and `windowStart` read a row and a key. */
+  abstract class MisraGries[K, I, O](k: Int, capacity: Int, windowMs: Long)
+      extends StatefulProcessor[K, I, O] {
+
+    protected def term(row: I): String
+    protected def windowStart(key: K): Long
+    protected def emit(key: K, top: Array[(String, Long)]): Iterator[O]
 
     @transient private var summary: ListState[(String, Long)] = _
 
@@ -49,12 +58,15 @@ object TwsTrending {
       summary = getHandle.getListState("summary",
         Encoders.product[(String, Long)], TTLConfig.NONE)
 
-    override def handleInputRows(key: (String, Long), rows: Iterator[Tok],
-                                 tv: TimerValues): Iterator[Trend] = {
+    override def handleInputRows(key: K, rows: Iterator[I],
+                                 tv: TimerValues): Iterator[O] = {
       val counts = scala.collection.mutable.Map.empty[String, Long]
       if (summary.exists())
         summary.get().foreach { case (t, c) => counts(t) = c }
-      rows.foreach(r => counts(r.term) = counts.getOrElse(r.term, 0L) + 1L)
+      rows.foreach { r =>
+        val t = term(r)
+        counts(t) = counts.getOrElse(t, 0L) + 1L
+      }
       if (counts.size > capacity) {
         // subtract the (size-capacity)-th smallest count from all —
         // one decrement step restores the bound, error mass <= m·gap
@@ -63,22 +75,44 @@ object TwsTrending {
         counts.clear(); counts ++= dec
       }
       summary.put(counts.toArray)
-      val winEnd = key._2 + windowMs
+      val winEnd = windowStart(key) + windowMs
       if (!getHandle.listTimers().contains(winEnd))
         getHandle.registerTimer(winEnd)
       Iterator.empty
     }
 
-    override def handleExpiredTimer(key: (String, Long), tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[Trend] = {
+    override def handleExpiredTimer(key: K, tv: TimerValues,
+                                    info: ExpiredTimerInfo): Iterator[O] = {
       val entries = if (summary.exists()) summary.get().toArray else Array.empty[(String, Long)]
       summary.clear()
-      entries.sortBy { case (t, c) => (-c, t) }.take(k)
-        .zipWithIndex
-        .map { case ((t, c), i) => Trend(key._1, key._2, t, c, i + 1L) }
-        .iterator
+      emit(key, entries.sortBy { case (t, c) => (-c, t) }.take(k))
     }
   }
+
+  class MisraGriesTopK(k: Int, capacity: Int, windowMs: Long)
+      extends MisraGries[(String, Long), Tok, Trend](k, capacity, windowMs) {
+    protected def term(row: Tok): String = row.term
+    protected def windowStart(key: (String, Long)): Long = key._2
+    protected def emit(key: (String, Long),
+                       top: Array[(String, Long)]): Iterator[Trend] =
+      top.iterator.zipWithIndex.map { case ((t, c), i) =>
+        Trend(key._1, key._2, t, c, i + 1L) }
+  }
+
+  /** (group, ts, term) rows of the watermarked docs stream, one per
+    * non-empty space-separated term. */
+  private def tokens(docs: DataFrame, groupCol: String, tsCol: String,
+                     textCol: String, delay: String): DataFrame =
+    docs
+      .select(col(groupCol).cast("string").as("group"),
+        col(tsCol).cast("timestamp").as("ts"), col(textCol).as("text"))
+      .withWatermark("ts", delay)
+      .select(col("group"), col("ts"),
+        explode(split(col("text"), " ")).as("term"))
+      .filter(length(col("term")) > 0)
+
+  private def windowOf(ts: java.sql.Timestamp, windowMs: Long): Long =
+    ts.getTime - Math.floorMod(ts.getTime, windowMs)
 
   /** Streaming (group, ts, text) → closed-window trending top-k.
     * `delay` is the watermark (how long a window stays open for late
@@ -90,16 +124,9 @@ object TwsTrending {
     require(k >= 1 && capacity >= k,
       s"need capacity ($capacity) >= k ($k) >= 1")
     val windowMs = parseWindowMs(windowDur)
-    docs
-      .select(col(groupCol).cast("string").as("group"),
-        col(tsCol).cast("timestamp").as("ts"), col(textCol).as("text"))
-      .withWatermark("ts", delay)
-      .select(col("group"), col("ts"),
-        explode(split(col("text"), " ")).as("term"))
-      .filter(length(col("term")) > 0)
+    tokens(docs, groupCol, tsCol, textCol, delay)
       .as[Tok]
-      .groupByKey(t => (t.group,
-        t.ts.getTime - Math.floorMod(t.ts.getTime, windowMs)))
+      .groupByKey(t => (t.group, windowOf(t.ts, windowMs)))
       .transformWithState(new MisraGriesTopK(k, capacity, windowMs),
         TimeMode.EventTime(), OutputMode.Append())
   }
@@ -120,44 +147,16 @@ object TwsTrending {
   /** A per-shard top-k candidate — rank is assigned after the merge. */
   case class Cand(group: String, window_start: Long, term: String, cnt: Long)
 
-  /** Per-shard Misra-Gries summary: same fold/decrement/timer logic as
-    * [[MisraGriesTopK]], but keyed (group, window, term-shard) and
-    * emitting its k heaviest counters as UNranked candidates. */
+  /** Per-shard Misra-Gries summary: the [[MisraGries]] body keyed
+    * (group, window, term-shard), emitting its k heaviest counters as
+    * UNranked candidates. */
   class MisraGriesShard(k: Int, capacity: Int, windowMs: Long)
-      extends StatefulProcessor[(String, Long, Int), ShardTok, Cand] {
-
-    @transient private var summary: ListState[(String, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      summary = getHandle.getListState("summary",
-        Encoders.product[(String, Long)], TTLConfig.NONE)
-
-    override def handleInputRows(key: (String, Long, Int), rows: Iterator[ShardTok],
-                                 tv: TimerValues): Iterator[Cand] = {
-      val counts = scala.collection.mutable.Map.empty[String, Long]
-      if (summary.exists())
-        summary.get().foreach { case (t, c) => counts(t) = c }
-      rows.foreach(r => counts(r.term) = counts.getOrElse(r.term, 0L) + 1L)
-      if (counts.size > capacity) {
-        val m = counts.values.toArray.sorted.apply(counts.size - capacity - 1)
-        val dec = counts.collect { case (t, c) if c > m => (t, c - m) }
-        counts.clear(); counts ++= dec
-      }
-      summary.put(counts.toArray)
-      val winEnd = key._2 + windowMs
-      if (!getHandle.listTimers().contains(winEnd))
-        getHandle.registerTimer(winEnd)
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: (String, Long, Int), tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[Cand] = {
-      val entries = if (summary.exists()) summary.get().toArray else Array.empty[(String, Long)]
-      summary.clear()
-      entries.sortBy { case (t, c) => (-c, t) }.take(k)
-        .map { case (t, c) => Cand(key._1, key._2, t, c) }
-        .iterator
-    }
+      extends MisraGries[(String, Long, Int), ShardTok, Cand](k, capacity, windowMs) {
+    protected def term(row: ShardTok): String = row.term
+    protected def windowStart(key: (String, Long, Int)): Long = key._2
+    protected def emit(key: (String, Long, Int),
+                       top: Array[(String, Long)]): Iterator[Cand] =
+      top.iterator.map { case (t, c) => Cand(key._1, key._2, t, c) }
   }
 
   /** The FAN-OUT form of [[trending]] for hot groups: tokens key by
@@ -184,17 +183,10 @@ object TwsTrending {
     require(k >= 1 && capacity >= k && shards >= 1,
       s"need capacity ($capacity) >= k ($k) >= 1 and shards ($shards) >= 1")
     val windowMs = parseWindowMs(windowDur)
-    docs
-      .select(col(groupCol).cast("string").as("group"),
-        col(tsCol).cast("timestamp").as("ts"), col(textCol).as("text"))
-      .withWatermark("ts", delay)
-      .select(col("group"), col("ts"),
-        explode(split(col("text"), " ")).as("term"))
-      .filter(length(col("term")) > 0)
+    tokens(docs, groupCol, tsCol, textCol, delay)
       .withColumn("shard", pmod(xxhash64(col("term")), lit(shards)).cast("int"))
       .as[ShardTok]
-      .groupByKey(t => (t.group,
-        t.ts.getTime - Math.floorMod(t.ts.getTime, windowMs), t.shard))
+      .groupByKey(t => (t.group, windowOf(t.ts, windowMs), t.shard))
       .transformWithState(new MisraGriesShard(k, capacity, windowMs),
         TimeMode.EventTime(), OutputMode.Append())
   }

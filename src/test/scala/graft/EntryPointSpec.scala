@@ -15,8 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * exact-Jaccard verify, `Ckpt` as the only eager checkpoint, one
   * latest-value enrichment engine, one spec temp-dir helper, one
   * session builder (so every session gets graft's `file:` filesystem),
-  * one ANN top-k rank step with no streaming wrapper around it, and
-  * one copy of each shared oracle SQL helper.
+  * one ANN top-k rank step with no streaming wrapper around it, one
+  * copy of each shared oracle SQL helper, streaming sessions and day
+  * gap moments on the batch window operators, and one Misra-Gries
+  * processor body.
   * Needles that name code are spelled in halves so that this file does
   * not match itself.
   */
@@ -135,5 +137,21 @@ class EntryPointSpec extends AnyFunSuite {
       "def cor" + "pus(", "def reve" + "nue", "val Rev" + " =")
     val counts = defs.map(d => d -> sites(d, queries, code = true).size)
     assert(counts.forall(_._2 == 1), counts)
+  }
+
+  test("streaming sessions and day gap moments are the batch window operators") {
+    val gone = Seq("TwsSess" + "ionize", "TwsBurst" + "iness")
+    val hits = gone.flatMap(n => sites(n).map(n -> _))
+    assert(hits.isEmpty, hits)
+    val sessionWindows = sites("session_" + "window(", code = true)
+    assert(sessionWindows == Seq("Windows.scala" -> Some("session")), sessionWindows)
+    val defs = Seq("def sess" + "ions(", "def dayGap" + "Moments(").map(d =>
+      d -> sites(d, code = true).map(_._1))
+    assert(defs.forall(_._2 == Seq("Windows.scala")), defs)
+  }
+
+  test("at most 11 transformWithState processor bodies") {
+    val got = sites("extends Stateful" + "Processor", code = true)
+    assert(got.size <= 11, got)
   }
 }

@@ -383,6 +383,44 @@ class OperatorSpec extends SparkTestBase {
     assert(capped.filter(col("user_id") === 1L).count() == 2) // 00,01 only
   }
 
+  test("Windows.sessions and dayGapMoments on a batch frame equal the " +
+    "brute-force gap-island and seconds-grid rules at ms resolution") {
+    import spark.implicits._
+    val B = 1704067200000L // 2024-01-01 UTC, ms
+    val rnd = new scala.util.Random(7)
+    // user 1 pins the boundary: diff == gap (1 s) joins, gap + 1 ms splits;
+    // users 2-4 put random diffs around the gap
+    val evs: Seq[(Long, Long, String)] =
+      Seq((1L, 0L), (1L, 1000L), (1L, 2001L)).map { case (u, t) => (u, B + t, "a") } ++
+        (2L to 4L).flatMap { u =>
+          Seq.fill(40)(rnd.nextInt(1100).toLong).scanLeft(B)(_ + _)
+            .map(t => (u, t, if (rnd.nextBoolean()) "a" else "b"))
+        } ++ Seq.tabulate(30)(i =>
+          (9L, B + 86400000L - 40000L + i * rnd.nextInt(4000).toLong, "c"))
+    val df = evs.toDF("user_id", "ms", "event_type")
+      .withColumn("ts", timestamp_millis(col("ms")))
+    val sessions = graft.operators.Windows.sessions(df, gapSecs = 1L, delay = "1 minute")
+      .as[(Long, Long, Long, Long)].collect().toSet
+    val sessionTruth = evs.groupBy(_._1).toSeq.flatMap { case (u, xs) =>
+      val t = xs.map(_._2).sorted
+      val cuts = 0 +: t.indices.tail.filter(i => t(i) - t(i - 1) > 1000L) :+ t.size
+      cuts.zip(cuts.tail).map { case (a, b) => (u, t(a), t(b - 1), (b - a).toLong) }
+    }.toSet
+    assert(sessions.filter(_._1 == 1L) ==
+      Set((1L, B, B + 1000L, 2L), (1L, B + 2001L, B + 2001L, 1L)))
+    assert(sessions == sessionTruth)
+    val moments = graft.operators.Windows.dayGapMoments(df, delay = "1 minute")
+      .as[(String, Long, Long, Long, Long, Long)].collect().toSet
+    val momentTruth = evs.groupBy(e => (e._3, e._2 / 86400000L)).collect {
+      case ((ty, d), xs) if xs.size >= 2 =>
+        val occ = xs.map(_._2 / 1000L).distinct.sorted
+        val gaps = occ.zip(occ.tail).map { case (x, y) => y - x }
+        (ty, d, xs.size.toLong, xs.size - 1L, gaps.sum, gaps.map(g => g * g).sum)
+    }.toSet
+    assert(momentTruth.map(_._2).size == 2, "the frame must span a day boundary")
+    assert(moments == momentTruth)
+  }
+
   test("repetition: duplicate n-gram share in basis points") {
     import spark.implicits._
     val docs = Seq(

@@ -18,6 +18,20 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
+  test("PlanDump text is comparable: one key dumped after two different " +
+    "predecessors reads identically") {
+    // each predecessor advances the session's expression-id, plan-id
+    // and RDD-id counters by a different amount
+    def after(pred: String): String = {
+      PlanDump.dump(spark, sfDir, pred, "pred")
+      PlanDump.dump(spark, sfDir, "q5_supplier_volume", "x")
+    }
+    val a = after("q1_pricing")
+    val b = after("tumble_agg")
+    assert(a.contains("plan_id=1]") && a.contains("#1"), a)
+    assert(a == b, s"dumps differ:\n$a\n---\n$b")
+  }
+
   test("q1_pricing: filter pushed to parquet scan, pruned read schema") {
     val df = SparkEntry.queries("q1_pricing")(spark, sfDir)
     val plan = formatted(df)

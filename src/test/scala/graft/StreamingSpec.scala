@@ -1398,7 +1398,7 @@ class StreamingSpec extends SparkTestBase {
         (col("e") * 1000).as("end_ms"), col("n"))
       .as[(Long, Long, Long, Long)].collect().toSet
     val input = MemoryStream[(Long, Long, Long)]
-    val q = graft.streaming.TwsSessionize.sessions(
+    val q = graft.operators.Windows.sessions(
         input.toDS().toDF("event_id", "user_id", "ms")
           .withColumn("ts", timestamp_millis(col("ms"))),
         gapSecs = Gap, delay = "100 seconds")
@@ -2210,11 +2210,10 @@ class StreamingSpec extends SparkTestBase {
     val Day0 = 19723L
     def sec(s: Long) = Day0 * 86400L + s
     val input = MemoryStream[(String, Long)]
-    def start() = graft.streaming.TwsBurstiness.moments(
+    def start() = graft.operators.Windows.dayGapMoments(
         input.toDS().toDF("event_type", "s")
           .withColumn("ts", timestamp_seconds(col("s"))),
-        settleSecs = 30L, delay = "60 seconds")
-      .toDF()
+        delay = "60 seconds")
       .writeStream.format("parquet")
       .option("path", s"$base/out")
       .option("checkpointLocation", s"$base/ckpt")
@@ -2264,10 +2263,10 @@ class StreamingSpec extends SparkTestBase {
         (t, d, xs.size.toLong, xs.size - 1L, gaps.sum, gaps.map(g => g * g).sum)
     }.toSet
     val input = MemoryStream[(String, Long)] // (event_type, eventTimeSec)
-    val q = graft.streaming.TwsBurstiness.moments(
+    val q = graft.operators.Windows.dayGapMoments(
         input.toDS().toDF("event_type", "s")
           .withColumn("ts", timestamp_seconds(col("s"))),
-        settleSecs = 30L, delay = "60 seconds")
+        delay = "60 seconds")
       .writeStream.format("memory").queryName("burst")
       .option("checkpointLocation", ckpt)
       .outputMode(OutputMode.Append).start()
@@ -2281,7 +2280,7 @@ class StreamingSpec extends SparkTestBase {
       // day-1 rows advance the watermark past day 0's finality
       input.addData(evs.filter(_._2 == 1L).map(e => (e._1, sec(e._2, e._3))))
       q.processAllAvailable()
-      // sentinel past day 1 end + settle + delay: everything final
+      // sentinel past day 1 end + delay: everything final
       input.addData(Seq(("zz", sec(2L, 200L))))
       q.processAllAvailable()
       val got = spark.table("burst")
