@@ -8,10 +8,11 @@ import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expre
 import graft.functions.{Fingerprint64, GramMatrix, MinHashSig, MisraGries, ParseSqdataTs, ReservoirSample, SimHashSig, TopK, VecDistSq, VecDot}
 
 /** Registration + Column-API surface for graft's native Catalyst
-  * expressions. Registration is idempotent; every `SparkEntry.queries`
-  * entry calls [[register]] first so the functions resolve regardless
-  * of how the session was built (the driver's `Verify`/`Bench` build
-  * their own sessions without [[GraftExtensions]]).
+  * expressions. Every session graft builds comes from
+  * `GraftSession.builder`, which installs [[GraftExtensions]];
+  * [[register]] (idempotent) stays for sessions built outside graft,
+  * such as the one a driver hands to `SparkEntry.entry`, so every
+  * `SparkEntry.queries` entry calls it first.
   */
 object GraftFunctions {
 

@@ -9,15 +9,23 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
-  /** Distinct character k-gram shingles of a string column. */
-  def shingles(text: String, k: Int): Column = expr(
-    s"""CASE WHEN char_length($text) < $k THEN array()
-       |ELSE array_distinct(transform(
-       |  sequence(0, char_length($text) - $k),
-       |  i -> substring($text, i + 1, $k))) END""".stripMargin)
+  /** The `n`-token windows of token-array column `toks`, one element
+    * per window: `body` is SQL over the window's 0-based start `i`.
+    * Empty under `n` tokens. Pass a PROJECTED token column — a split()
+    * inside the lambda is not hoisted by Catalyst (O(words²)). */
+  private[graft] def tokenWindows(toks: String, n: Int, body: String): Column = expr(
+    s"""CASE WHEN size($toks) < $n THEN array()
+       |ELSE transform(sequence(0, size($toks) - $n),
+       |  i -> $body) END""".stripMargin)
 
-  /** Whitespace tokens. */
-  def tokens(text: String): Column = split(col(text), " ")
+  /** SQL for the word `n`-gram starting at `i`: the window's tokens
+    * joined by one space (a [[tokenWindows]] body). */
+  private[graft] def gramSql(toks: String, n: Int): String =
+    s"concat_ws(' ', slice($toks, i + 1, $n))"
+
+  /** The word `n`-grams of token-array column `toks`, in order. */
+  private[graft] def wordGrams(toks: String, n: Int): Column =
+    tokenWindows(toks, n, gramSql(toks, n))
 
   /** xxhash64 of each distinct shingle — dedup math downstream moves
     * 8-byte hashes, never document bodies. */

@@ -918,6 +918,25 @@ object Dedup {
       .select(col("id").as(idCol), col("text_clean"), col("n_kept"))
   }
 
+  /** The `fingerprint64` of each word-`n`-gram window of the
+    * projected token column `toks`, in position order. */
+  private def gramFingerprints(toks: String, n: Int): Column =
+    TextFunctions.tokenWindows(toks, n,
+      s"fingerprint64(${TextFunctions.gramSql(toks, n)})")
+
+  /** (id, g) distinct word-`n`-gram fingerprints per doc. */
+  private def gramHashes(df: DataFrame, textCol: String, idCol: String,
+                         n: Int): DataFrame = df
+    .select(col(idCol).as("id"), split(col(textCol), " ").as("toks"))
+    .select(col("id"), explode(array_distinct(gramFingerprints("toks", n))).as("g"))
+
+  /** (g) the probe suite's distinct word-`n`-gram fingerprints — the
+    * bounded side every decontamination path broadcasts, collects or
+    * sketches. */
+  private def probeGramSet(probe: DataFrame, textCol: String, idCol: String,
+                           n: Int): DataFrame =
+    gramHashes(probe, textCol, idCol, n).select("g").distinct()
+
   /** Benchmark decontamination: flag corpus documents sharing any
     * word-`n`-gram with a held-out probe set (eval/benchmark texts),
     * the standard guard against train/test leakage.
@@ -930,25 +949,11 @@ object Dedup {
     * `fingerprint64` hashes, 8 bytes each; a 64-bit collision
     * (~1e-9 at millions of grams) can at worst over-flag one doc —
     * the conservative direction for decontamination. */
-  /** (id, g) distinct word-`n`-gram fingerprints per doc. Tokens are
-    * projected ONCE per doc: a split() inside the transform lambda is
-    * not hoisted by Catalyst (O(words²) otherwise). */
-  private def gramHashes(df: DataFrame, textCol: String, idCol: String,
-                         n: Int): DataFrame = df
-    .select(col(idCol).as("id"), split(col(textCol), " ").as("toks"))
-    .select(col("id"), explode(expr(
-      s"""CASE WHEN size(toks) < $n THEN array()
-         |ELSE array_distinct(transform(sequence(0, size(toks) - $n),
-         |  i -> fingerprint64(concat_ws(' ', slice(toks, i + 1, $n))))) END"""
-        .stripMargin)).as("g"))
-
   def contaminatedDocs(corpus: DataFrame, probe: DataFrame,
                        textCol: String, idCol: String, n: Int = 8): DataFrame = {
     graft.GraftFunctions.register(corpus.sparkSession)
-    val probeGrams = broadcast(
-      gramHashes(probe, textCol, idCol, n).select("g").distinct())
     gramHashes(corpus, textCol, idCol, n)
-      .join(probeGrams, "g")
+      .join(broadcast(probeGramSet(probe, textCol, idCol, n)), "g")
       .groupBy(col("id").as(idCol))
       .agg(count(lit(1)).as("n_hits"))
   }
@@ -1010,8 +1015,7 @@ object Dedup {
                          textCol: String, idCol: String, n: Int = 8): DataFrame = {
     graft.GraftFunctions.register(corpus.sparkSession)
     val probeGrams = broadcast(
-      gramHashes(probe, textCol, idCol, n)
-        .select(col("g").as("pg")).distinct())
+      probeGramSet(probe, textCol, idCol, n).select(col("g").as("pg")))
     gramHashes(corpus, textCol, idCol, n)
       .join(probeGrams, col("g") === col("pg"), "left_outer")
       .groupBy(col("id").as(idCol))
@@ -1083,12 +1087,9 @@ object Dedup {
   private def gramPositions(df: DataFrame, textCol: String, idCol: String,
                             n: Int): DataFrame = df
     .select(col(idCol).as("id"), split(col(textCol), " ").as("toks"))
-    .select(col("id"), explode(expr(
-      s"""CASE WHEN size(toks) < $n THEN array()
-         |ELSE transform(sequence(0, size(toks) - $n),
-         |  i -> struct(CAST(i AS BIGINT) AS pos,
-         |              fingerprint64(concat_ws(' ', slice(toks, i + 1, $n))) AS g)) END"""
-        .stripMargin)).as("pg"))
+    .select(col("id"), explode(TextFunctions.tokenWindows("toks", n,
+      s"struct(CAST(i AS BIGINT) AS pos, " +
+        s"fingerprint64(${TextFunctions.gramSql("toks", n)}) AS g)")).as("pg"))
     .select(col("id"), col("pg.pos").as("pos"), col("pg.g").as("g"))
 
   /** The ACTION half of [[dupGramStats]] (Lee et al. 2022 span
@@ -1116,20 +1117,20 @@ object Dedup {
     val gpos = gramPositions(docs, textCol, idCol, n)
     val freq = gpos.select(col("id"), col("g")).distinct()
       .groupBy(col("g")).agg(count(lit(1)).as("df"))
-    val iv = gpos.join(freq.filter(col("df") >= 2), "g")
-      .select(col("id"), col("pos").as("s"), (col("pos") + lit(n - 1)).as("e"))
-    mergeSpanIntervals(iv, idCol)
+    mergeSpanIntervals(gpos.join(freq.filter(col("df") >= 2), "g"), n, idCol)
   }
 
-  /** Gaps-and-islands union of per-doc (s, e) token intervals into
-    * maximal merged spans — shared by the within-corpus
-    * ([[dupSpanIntervals]]) and cross-corpus
-    * ([[contamSpanIntervals]]) producers. Per-DOC window: sort input
-    * is a doc's own flagged positions, embarrassingly parallel across
-    * docs at any corpus size. */
-  private def mergeSpanIntervals(iv: DataFrame, idCol: String): DataFrame = {
+  /** Gaps-and-islands union of the (id, pos) flagged word-`n`-gram
+    * positions — each covering tokens [pos, pos + n − 1] — into
+    * maximal merged spans, shared by the within-corpus
+    * ([[dupSpanIntervals]]) and cross-corpus ([[probeSpans]])
+    * producers. Per-DOC window: sort input is a doc's own flagged
+    * positions, embarrassingly parallel across docs at any corpus
+    * size. */
+  private def mergeSpanIntervals(hits: DataFrame, n: Int, idCol: String): DataFrame = {
     val w = Window.partitionBy(col("id")).orderBy(col("s"))
-    iv.withColumn("pmax",
+    hits.select(col("id"), col("pos").as("s"), (col("pos") + lit(n - 1)).as("e"))
+      .withColumn("pmax",
         max(col("e")).over(w.rowsBetween(Window.unboundedPreceding, -1)))
       .withColumn("brk",
         when(col("pmax").isNull || col("s") > col("pmax") + 1, 1L).otherwise(0L))
@@ -1159,13 +1160,15 @@ object Dedup {
   def contamSpanIntervals(corpus: DataFrame, probe: DataFrame,
                           textCol: String, idCol: String, n: Int = 8): DataFrame = {
     graft.GraftFunctions.register(corpus.sparkSession)
-    val probeGrams = broadcast(
-      gramHashes(probe, textCol, idCol, n).select(col("g")).distinct())
-    val iv = gramPositions(corpus, textCol, idCol, n)
-      .join(probeGrams, Seq("g"), "left_semi")
-      .select(col("id"), col("pos").as("s"), (col("pos") + lit(n - 1)).as("e"))
-    mergeSpanIntervals(iv, idCol)
+    probeSpans(corpus, probeGramSet(probe, textCol, idCol, n), textCol, idCol, n)
   }
+
+  /** Merged spans of `docs` covered by a gram of `probeGrams` (g):
+    * gram positions left-semi-joined against the broadcast probe set. */
+  private def probeSpans(docs: DataFrame, probeGrams: DataFrame,
+                         textCol: String, idCol: String, n: Int): DataFrame =
+    mergeSpanIntervals(gramPositions(docs, textCol, idCol, n)
+      .join(broadcast(probeGrams), Seq("g"), "left_semi"), n, idCol)
 
   /** [[contamSpanIntervals]] + [[trimSpans]] as ONE PURE PROJECTION
     * against a prebuilt [[buildGramBloom]] artifact: per token, "am I
@@ -1236,11 +1239,9 @@ object Dedup {
       // enters any task's expression tree
       val ss = docs.sparkSession
       import ss.implicits._
-      val probeDf = probeHashes.toSeq.toDF("g")
-      val iv = gramPositions(docs, textCol, idCol, n)
-        .join(broadcast(probeDf), Seq("g"), "left_semi")
-        .select(col("id"), col("pos").as("s"), (col("pos") + lit(n - 1)).as("e"))
-      return trimSpans(docs, mergeSpanIntervals(iv, idCol), textCol, idCol)
+      return trimSpans(docs,
+        probeSpans(docs, probeHashes.toSeq.toDF("g"), textCol, idCol, n),
+        textCol, idCol)
     }
     // bloom-prefiltered exact membership: the common non-hit gram pays
     // O(1) hash probes; only bloom-positives (true hits + the ~1e-2
@@ -1249,9 +1250,7 @@ object Dedup {
     val bf = org.apache.spark.util.sketch.BloomFilter
       .create(math.max(1L, probeHashes.length.toLong), 0.01)
     probeHashes.foreach(bf.putLong)
-    val bos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(bos)
-    val bloomBytes = bos.toByteArray
+    val bloomBytes = serialized(bf)
     trimContamProjectionImpl(docs,
       h => graft.GraftFunctions.bloom_might_contain(bloomBytes, h) &&
         array_contains(lit(probeHashes), h), textCol, idCol, n)
@@ -1264,8 +1263,7 @@ object Dedup {
   def probeGramHashes(probe: DataFrame, textCol: String, idCol: String,
                       n: Int = 8): Array[Long] = {
     graft.GraftFunctions.register(probe.sparkSession)
-    gramHashes(probe, textCol, idCol, n).select(col("g")).distinct()
-      .collect().map(_.getLong(0)).sorted
+    probeGramSet(probe, textCol, idCol, n).collect().map(_.getLong(0)).sorted
   }
 
   private def trimContamProjectionImpl(docs: DataFrame,
@@ -1275,12 +1273,7 @@ object Dedup {
     graft.GraftFunctions.register(docs.sparkSession)
     val withHits = docs
       .withColumn("__toks", split(col(textCol), " "))
-      .withColumn("__hit",
-        when(size(col("__toks")) < n, array().cast("array<boolean>"))
-          .otherwise(transform(
-            sequence(lit(0), size(col("__toks")) - n),
-            i => member(graft.GraftFunctions.fingerprint64(
-              concat_ws(" ", slice(col("__toks"), i + 1, lit(n))))))))
+      .withColumn("__hit", transform(gramFingerprints("__toks", n), member))
     val lastGram = size(col("__toks")) - n // last valid gram start
     val kept = filter(col("__toks"), (_, j) =>
       size(col("__hit")) === 0 ||
@@ -1326,33 +1319,36 @@ object Dedup {
   def buildGramBloom(probe: DataFrame, textCol: String, idCol: String,
                      n: Int = 8, fpp: Double = 0.01): Array[Byte] = {
     graft.GraftFunctions.register(probe.sparkSession)
-    val probeGrams = gramHashes(probe, textCol, idCol, n).select("g").distinct()
+    val probeGrams = probeGramSet(probe, textCol, idCol, n)
     val nGrams = math.max(1L, probeGrams.count())
-    val bf = probeGrams.stat.bloomFilter("g", nGrams, fpp)
+    serialized(probeGrams.stat.bloomFilter("g", nGrams, fpp))
+  }
+
+  /** The wire form [[graft.GraftFunctions.bloom_might_contain]] reads. */
+  private def serialized(bf: org.apache.spark.util.sketch.BloomFilter): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     bf.writeTo(bos)
     bos.toByteArray
   }
 
-  /** Membership-only contamination flag as a PURE PROJECTION: the
-    * doc's distinct n-gram fingerprints tested against a prebuilt
-    * [[buildGramBloom]] filter inside one `exists` HOF — no explode,
-    * no aggregation, so it is legal on a streaming frame and costs
-    * scan speed in batch. Conservative like the bloom count path:
-    * false positives can over-flag, never under-flag. Appends
+  /** Membership-only contamination flag as a per-row projection: the
+    * doc's n-gram fingerprints tested against a prebuilt
+    * [[buildGramBloom]] filter inside one `exists` HOF — one row out
+    * per row in, no aggregation, so it is legal on a streaming frame
+    * and costs scan speed in batch. Conservative like the bloom count
+    * path: false positives can over-flag, never under-flag. Appends
     * `contaminated` to the input's own columns. */
   def contaminationFlagBloom(docs: DataFrame, bloomBytes: Array[Byte],
                              textCol: String, idCol: String,
                              n: Int = 8): DataFrame = {
     graft.GraftFunctions.register(docs.sparkSession)
-    val grams = expr(
-      s"""CASE WHEN size(split($textCol, ' ')) < $n THEN array()
-         |ELSE array_distinct(transform(
-         |  sequence(0, size(split($textCol, ' ')) - $n),
-         |  i -> fingerprint64(concat_ws(' ',
-         |    slice(split($textCol, ' '), i + 1, $n))))) END""".stripMargin)
-    docs.withColumn("contaminated",
-      exists(grams, h => graft.GraftFunctions.bloom_might_contain(bloomBytes, h)))
+    // tokens bound by a one-element explode, not a projected alias:
+    // callers filter on the flag, and pushing that filter below a
+    // projection would inline split() into every window of the lambda
+    docs.select(col("*"), explode(array(split(col(textCol), " "))).as("__toks"))
+      .withColumn("contaminated", exists(gramFingerprints("__toks", n),
+        h => graft.GraftFunctions.bloom_might_contain(bloomBytes, h)))
+      .drop("__toks")
   }
 
   /** Near-dup pairs by SimHash: 16-bit band blocking (any equal band

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -90,14 +91,8 @@ object TextAnalysis {
     * no shuffle — per-row work only), integer-exact output. */
   def repetition(docs: DataFrame, textCol: String, idCol: String,
                  n: Int = 3): DataFrame = {
-    // tokens projected ONCE: a split() inside the transform lambda is
-    // not hoisted by Catalyst, turning per-doc work O(words²)
-    val grams = expr(
-      s"""CASE WHEN size(toks) < $n THEN array()
-         |ELSE transform(sequence(0, size(toks) - $n),
-         |  i -> concat_ws(' ', slice(toks, i + 1, $n))) END""".stripMargin)
     docs.select(col(idCol), split(col(textCol), " ").as("toks"))
-      .select(col(idCol), grams.as("grams"))
+      .select(col(idCol), TextFunctions.wordGrams("toks", n).as("grams"))
       .select(col(idCol),
         size(col("grams")).as("n_grams"),
         size(array_distinct(col("grams"))).as("n_distinct"))
@@ -142,10 +137,6 @@ object TextAnalysis {
                       minWords: Int = 20, maxWords: Int = 1000000,
                       minWordLenBp: Int = 30000, maxWordLenBp: Int = 60000,
                       minStopwordBp: Int = 2000, maxDupBp: Int = 500): DataFrame = {
-    val grams = expr(
-      """CASE WHEN size(__toks) < 3 THEN array()
-        |ELSE transform(sequence(0, size(__toks) - 3),
-        |  i -> concat_ws(' ', slice(__toks, i + 1, 3))) END""".stripMargin)
     val stopSet = Stopwords.map(w => s"'$w'").mkString(", ")
     val reason =
       when(col("n_words") < minWords, lit("too_short"))
@@ -164,7 +155,7 @@ object TextAnalysis {
       .withColumn("stopword_bp",
         floor(lit(10000.0) * expr(s"size(filter(__toks, t -> t IN ($stopSet)))")
           / col("n_words")).cast("long"))
-      .withColumn("__grams", grams)
+      .withColumn("__grams", TextFunctions.wordGrams("__toks", 3))
       .withColumn("dup_bp",
         when(size(col("__grams")) > 0,
           floor(lit(10000.0)
@@ -229,7 +220,6 @@ object TextAnalysis {
     * mean_rank monotone). */
   def rarityScore(docs: DataFrame, textCol: String, idCol: String,
                   minCount: Long = 1L, n: Int = 1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(n >= 1, s"n ($n) must be >= 1")
     // n > 1: the unit is the word n-GRAM (2 ≈ the KenLM-bigram
     // surprisal proxy — sharper than unigram rarity on fluent-but-
@@ -245,11 +235,7 @@ object TextAnalysis {
       else
         docs.select(col(idCol).as("id"),
             expr(s"filter(split($textCol, ' '), t -> length(t) > 0)").as("f"))
-          .select(col("id"), explode(expr(
-            s"""CASE WHEN size(f) < $n THEN array()
-               |ELSE transform(sequence(0, size(f) - $n),
-               |  i -> concat_ws(' ', slice(f, i + 1, $n))) END""".stripMargin))
-            .as("word"))
+          .select(col("id"), explode(TextFunctions.wordGrams("f", n)).as("word"))
     val tf = units.groupBy(col("id"), col("word")).agg(count(lit(1)).as("tf"))
     val vocab = tf.groupBy(col("word")).agg(sum(col("tf")).as("n"))
     // Deliberately unpartitioned rank window: its input is the
@@ -315,7 +301,6 @@ object TextAnalysis {
   def vocabCoverage(docs: DataFrame, textCol: String,
                     covNum: Long, covDen: Long,
                     minCount: Long = 1L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(covNum >= 0 && covDen > 0 && covNum <= covDen,
       s"coverage target $covNum/$covDen must be a fraction in [0, 1]")
     val counts = docs.select(explode(split(col(textCol), " ")).as("word"))
@@ -401,7 +386,6 @@ object TextAnalysis {
     * is a join in the first place). */
   def tfIdfTopK(docs: DataFrame, textCol: String, idCol: String,
                 k: Int = 5, broadcastDf: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val tf = docs.select(col(idCol).as("id"),
         explode(split(col(textCol), " ")).as("term"))
       .filter(length(col("term")) > 0)
@@ -445,7 +429,6 @@ object TextAnalysis {
     * with rank <= k pushed as WindowGroupLimit. */
   def bm25TopK(docs: DataFrame, textCol: String, idCol: String,
                terms: Seq[String], k: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(terms.nonEmpty && k >= 1, "need at least one query term and k >= 1")
     // r19 (guide §2.3 — don't shuffle what a row can count): doc
     // length is a PER-ROW scalar (non-empty tokens in the split
@@ -548,16 +531,13 @@ object TextAnalysis {
     * the shuffled join is the fallback, same knob as tfIdfTopK). */
   def pmiTopK(docs: DataFrame, textCol: String, k: Int = 50,
               minCount: Long = 5L, broadcastUni: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val toks = docs.select(
       expr(s"filter(split($textCol, ' '), t -> length(t) > 0)").as("f"))
     val words = toks.select(explode(col("f")).as("word"))
     val uni = words.groupBy(col("word")).agg(count(lit(1)).as("cnt"))
     val total = uni.agg(sum(col("cnt")).as("n_tokens"))
-    val bi = toks.select(explode(expr(
-        """CASE WHEN size(f) < 2 THEN array()
-          |ELSE transform(sequence(0, size(f) - 2),
-          |  i -> struct(f[i] AS w1, f[i + 1] AS w2)) END""".stripMargin)).as("b"))
+    val bi = toks.select(explode(TextFunctions.tokenWindows("f", 2,
+        "struct(f[i] AS w1, f[i + 1] AS w2)")).as("b"))
       .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cnt_ab"))
       .filter(col("cnt_ab") >= minCount)
@@ -694,7 +674,6 @@ object TextAnalysis {
     * codepoints). Integer-exact throughout. */
   def bpeMergeRank(docs: DataFrame, textCol: String,
                    k: Int = 20, minCount: Long = 1L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val words = docs.select(explode(split(col(textCol), " ")).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
@@ -776,14 +755,9 @@ object TextAnalysis {
   def sparseSimTopK(docs: DataFrame, textCol: String, idCol: String,
                     probeFilter: Column, k: Int = 3,
                     maxDf: Long = 100L, n: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val pre = docs
+    val allToks = docs
       .select(col(idCol).as("id"), split(col(textCol), " ").as("ws"))
-      .filter(size(col("ws")) >= n)
-    val allToks = pre
-      .select(col("id"), explode(expr(
-        s"transform(sequence(1, size(ws) - ${n - 1}), " +
-          s"i -> concat_ws(' ', slice(ws, i, $n)))")).as("t"))
+      .select(col("id"), explode(TextFunctions.wordGrams("ws", n)).as("t"))
       .groupBy(col("id"), col("t")).agg(count(lit(1)).as("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // df counts come from the FULL corpus; read from the postings

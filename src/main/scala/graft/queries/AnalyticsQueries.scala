@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.TextFunctions
 import graft.operators.{AsOfJoin, Ckpt, TextAnalysis, Windows}
 import graft.sources.Tables
 
@@ -2746,10 +2747,8 @@ object AnalyticsQueries {
   private def wordAdjacencyEdges(s: SparkSession, d: String): DataFrame = {
     val toks = Tables.documents(s, d)
       .select(split(col("text"), " ").as("t"))
-    toks.select(explode(expr(
-        """CASE WHEN size(t) < 2 THEN array()
-          |ELSE transform(sequence(0, size(t) - 2),
-          |  i -> struct(t[i] AS src, t[i + 1] AS dst)) END""".stripMargin)).as("e"))
+    toks.select(explode(TextFunctions.tokenWindows("t", 2,
+        "struct(t[i] AS src, t[i + 1] AS dst)")).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .filter(col("src") =!= "" && col("dst") =!= "")
       .distinct()

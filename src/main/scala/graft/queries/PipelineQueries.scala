@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.GraftFunctions
+import graft.functions.TextFunctions
 import graft.operators.{Ckpt, Clustering, Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.sources.Tables
 
@@ -1020,11 +1021,7 @@ object PipelineQueries {
       val docs = Tables.fanOut(Tables.documents(s, d))
       def grams(df: org.apache.spark.sql.DataFrame) = df
         .select(col("source"), split(col("text"), " ").as("t"))
-        .select(col("source"), explode(expr(
-          """CASE WHEN size(t) < 3 THEN array()
-            |ELSE transform(sequence(0, size(t) - 3),
-            |  i -> concat_ws(' ', t[i], t[i + 1], t[i + 2])) END"""
-            .stripMargin)).as("g"))
+        .select(col("source"), explode(TextFunctions.wordGrams("t", 3)).as("g"))
         .filter(length(col("g")) > 2)
       val base = grams(docs.filter(col("doc_id") % 10 =!= 0))
         .select(col("g")).distinct()
@@ -1859,12 +1856,7 @@ object PipelineQueries {
     "ngram_topk" -> { (s, d) =>
       Tables.fanOut(Tables.documents(s, d))
         .select(split(col("text"), " ").as("t"))
-        .select(explode(expr(
-          """CASE WHEN size(t) < 2 THEN array()
-            |ELSE transform(sequence(0, size(t) - 2),
-            |  i -> concat(element_at(t, i + 1), ' ', element_at(t, i + 2))) END"""
-            .stripMargin))
-          .as("bigram"))
+        .select(explode(TextFunctions.wordGrams("t", 2)).as("bigram"))
         .groupBy(col("bigram"))
         .agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("bigram").asc)

@@ -255,6 +255,40 @@ class CorpusQueriesSpec extends SparkTestBase {
     assert(got == expected)
   }
 
+  test("sparseSimTopK matches a naive tf·(1e6 div df) dot-product ranking") {
+    val rnd = new scala.util.Random(23)
+    // a 3-word vocabulary so word-3-grams recur across docs; "" tokens
+    // (double spaces) and docs shorter than n ride along
+    val corpus = Seq.tabulate(40) { i =>
+      (i.toLong, Seq.fill(rnd.nextInt(14))(Seq("a", "b", "c", "")(rnd.nextInt(4))).mkString(" "))
+    }
+    val (n, k, maxDf) = (3, 3, 8L)
+    val tf: Map[(Long, String), Long] = corpus.flatMap { case (id, t) =>
+      t.split(" ", -1).sliding(n).filter(_.length == n).map(w => id -> w.mkString(" "))
+    }.groupBy(identity).map { case (key, occ) => key -> occ.size.toLong }
+    val dfm: Map[String, Long] = tf.keys.toSeq.groupBy(_._2)
+      .map { case (g, ks) => g -> ks.size.toLong }
+      .filter { case (_, d) => d >= 2 && d <= maxDf }
+    val postings = tf.toSeq.collect { case ((id, g), f) if dfm.contains(g) =>
+      (g, id, f * (1000000L / dfm(g)))
+    }.groupBy(_._1).values.toSeq
+    val scores = (for {
+      rows <- postings
+      (_, p, wp) <- rows if p % 3 == 0
+      (_, c, wc) <- rows if c != p
+    } yield (p, c) -> wp * wc).groupBy(_._1).map { case (pc, xs) => pc -> xs.map(_._2).sum }
+    val expected = scores.toSeq.groupBy(_._1._1).flatMap { case (_, rows) =>
+      rows.sortBy { case ((_, c), s) => (-s, c) }.take(k).zipWithIndex
+        .map { case (((p, c), s), i) => (p, c, s, i + 1L) }
+    }.toSet
+
+    val got = TextAnalysis.sparseSimTopK(spark.createDataFrame(corpus).toDF("doc_id", "text"),
+        "text", "doc_id", probeFilter = col("id") % 3 === 0, k = k, maxDf = maxDf, n = n)
+      .select("probe_id", "cand_id", "score", "rank").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    assert(expected.size >= 20 && got == expected)
+  }
+
   test("rarityScore matches the naive mean-frequency-rank computation") {
     val all = collectDocs(docs())
     val tokens = all.flatMap { case (id, t) =>

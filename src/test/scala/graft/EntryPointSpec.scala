@@ -17,8 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * session builder (so every session gets graft's `file:` filesystem),
   * one ANN top-k rank step with no streaming wrapper around it, one
   * copy of each shared oracle SQL helper, streaming sessions and day
-  * gap moments on the batch window operators, and one Misra-Gries
-  * processor body.
+  * gap moments on the batch window operators, one Misra-Gries
+  * processor body, one word-n-gram window builder and one Bloom
+  * serialization in the decontamination family.
   * Needles that name code are spelled in halves so that this file does
   * not match itself.
   */
@@ -148,6 +149,19 @@ class EntryPointSpec extends AnyFunSuite {
     val defs = Seq("def sess" + "ions(", "def dayGap" + "Moments(").map(d =>
       d -> sites(d, code = true).map(_._1))
     assert(defs.forall(_._2 == Seq("Windows.scala")), defs)
+  }
+
+  test("word-n-gram windows are built only by TextFunctions") {
+    val needles = Seq("sequence(0, si" + "ze(", "sequence(1, si" + "ze(",
+      "sequence(lit(0), si" + "ze(")
+    val files = needles.flatMap(n => sites(n, code = true).map(n -> _._1))
+    assert(files.map(_._2).toSet == Set("TextFunctions.scala"), files)
+  }
+
+  test("the decontamination family serializes a Bloom filter once") {
+    val dedup = sources.filter(_._1.endsWith("Dedup.scala"))
+    val got = sites("write" + "To(", dedup, code = true)
+    assert(got.size == 1, got)
   }
 
   test("at most 11 transformWithState processor bodies") {

@@ -176,19 +176,30 @@ class PropertySpec extends SparkTestBase {
   test("repetition equals a brute-force duplicate-gram count on random token lists") {
     import spark.implicits._
     val rnd = new Random(17)
-    val docs = Seq.tabulate(40) { i =>
+    val plain = Seq.tabulate(40) { i =>
       val toks = Seq.fill(rnd.nextInt(12))(s"t${rnd.nextInt(4)}")
       (i.toLong, toks.mkString(" "))
     }
-    val got = operators.TextAnalysis.repetition(docs.toDF("doc_id", "text"), "text", "doc_id")
-      .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getInt(2), r.getLong(3))).toMap
-    for ((id, text) <- docs) {
-      val toks = text.split(" ", -1).toSeq // split keeps "" for empty text like Spark
-      val grams = if (toks.length < 3) Seq.empty
-        else toks.sliding(3).map(_.mkString(" ")).toSeq
-      val n = grams.length; val d = grams.distinct.length
-      val bp = if (n > 0) math.floor(10000.0 * (n - d) / n).toLong else 0L
-      assert(got(id) == ((n, d, bp)), s"doc=$id text='$text'")
+    // "" tokens: double, leading and trailing spaces
+    val spaced = Seq.tabulate(20) { i =>
+      val toks = Seq.fill(rnd.nextInt(12))(if (rnd.nextInt(3) == 0) "" else s"t${rnd.nextInt(3)}")
+      (100L + i, toks.mkString(" "))
+    }
+    val docs = plain ++ spaced
+    val df = docs.toDF("doc_id", "text")
+    // n = 8 leaves most docs shorter than n: they have no grams
+    for (n <- Seq(1, 2, 3, 8)) {
+      val got = operators.TextAnalysis.repetition(df, "text", "doc_id", n)
+        .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getInt(2), r.getLong(3))).toMap
+      for ((id, text) <- docs) {
+        val toks = text.split(" ", -1).toSeq // split keeps "" for empty text like Spark
+        // sliding yields one short window under n tokens: the kernel yields none
+        val grams = if (toks.length < n) Seq.empty
+          else toks.sliding(n).map(_.mkString(" ")).toSeq
+        val c = grams.length; val d = grams.distinct.length
+        val bp = if (c > 0) math.floor(10000.0 * (c - d) / c).toLong else 0L
+        assert(got(id) == ((c, d, bp)), s"n=$n doc=$id text='$text'")
+      }
     }
   }
 
