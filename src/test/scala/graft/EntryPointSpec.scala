@@ -18,8 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * one ANN top-k rank step with no streaming wrapper around it, one
   * copy of each shared oracle SQL helper, streaming sessions and day
   * gap moments on the batch window operators, one Misra-Gries
-  * processor body, one word-n-gram window builder and one Bloom
-  * serialization in the decontamination family.
+  * processor body, one word-n-gram window builder, one Bloom
+  * serialization in the decontamination family, and one parquet
+  * reader for tables and stores, which declares the footer's schema.
   * Needles that name code are spelled in halves so that this file does
   * not match itself.
   */
@@ -162,6 +163,12 @@ class EntryPointSpec extends AnyFunSuite {
     val dedup = sources.filter(_._1.endsWith("Dedup.scala"))
     val got = sites("write" + "To(", dedup, code = true)
     assert(got.size == 1, got)
+  }
+
+  test("table and store reads infer no schema") {
+    val dirs = Seq("queries", "operators", "sources").map(d => s"src/main/scala/graft/$d")
+    val got = sites("read." + "parquet(", dirs.flatMap(scalaFiles), code = true)
+    assert(got.map(_._1).toSet == Set("Tables.scala"), got)
   }
 
   test("at most 11 transformWithState processor bodies") {

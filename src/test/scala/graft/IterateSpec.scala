@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -37,32 +33,6 @@ class IterateSpec extends SparkTestBase {
       case r: LogicalRDD => r.rdd.id
     }).toSet
     sc.getPersistentRDDs.keySet.toSet -- before -- read
-  }
-
-  /** Jobs `body` launches, counted by job group; a marker job started
-    * afterwards flushes the listener bus before the count is read. */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"counted-${java.util.UUID.randomUUID}"
-    val jobs = new AtomicInteger
-    val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(g) if g == s"$group-flush" => flushed.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-flush", "flush")
-      try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
-      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus never flushed")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
   }
 
   test("iterative operators leave registered only the RDDs their result reads") {

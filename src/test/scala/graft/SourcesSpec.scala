@@ -227,6 +227,64 @@ class SourcesSpec extends SparkTestBase {
     }
   }
 
+  /** The same three events rows in every physical `ts` shape the
+    * testdata generator has written, as `$base/{ltz,ntz,nanos}/events.parquet`:
+    * TIMESTAMP(MICROS) with and without isAdjustedToUTC, and
+    * TIMESTAMP(NANOS). */
+  private def writeEventShapes(base: String): Unit = {
+    import spark.implicits._
+    val micros = Seq(
+      (1L, 1700000000000000L, 10L, "view", 1.5, """{"k":1}"""),
+      (2L, 1700000001500000L, 11L, "click", 2.5, """{"k":2}"""),
+      (3L, 1700003600000000L, 10L, "view", 3.0, """{"k":3}"""))
+    val df = micros.toDF("event_id", "us", "user_id", "event_type", "value", "props")
+    val cols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
+
+    // LTZ micros (isAdjustedToUTC=true)
+    val prevOut = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    try {
+      df.withColumn("ts", expr("timestamp_micros(us)"))
+        .select(cols.map(col): _*).coalesce(1).write.parquet(s"$base/ltz/events.parquet")
+      // NTZ micros (isAdjustedToUTC=false) — the current testdata shape
+      df.withColumn("ts", expr("timestamp_micros(us)").cast("timestamp_ntz"))
+        .select(cols.map(col): _*).coalesce(1).write.parquet(s"$base/ntz/events.parquet")
+    } finally prevOut match {
+      case Some(v) => spark.conf.set("spark.sql.parquet.outputTimestampType", v)
+      case None    => spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    }
+
+    // TIMESTAMP(NANOS) — Spark cannot write it; use parquet-java direct
+    locally {
+      import org.apache.hadoop.conf.Configuration
+      import org.apache.hadoop.fs.Path
+      import org.apache.parquet.example.data.simple.SimpleGroupFactory
+      import org.apache.parquet.hadoop.example.ExampleParquetWriter
+      import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+      val msg = Types.buildMessage()
+        .addField(Types.required(INT64).named("event_id"))
+        .addField(Types.required(INT64)
+          .as(LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.NANOS))
+          .named("ts"))
+        .addField(Types.required(INT64).named("user_id"))
+        .addField(Types.required(BINARY).as(LogicalTypeAnnotation.stringType()).named("event_type"))
+        .addField(Types.required(DOUBLE).named("value"))
+        .addField(Types.required(BINARY).as(LogicalTypeAnnotation.stringType()).named("props"))
+        .named("spark_schema")
+      val w = ExampleParquetWriter.builder(new Path(s"$base/nanos/events.parquet"))
+        .withConf(new Configuration()).withType(msg).build()
+      val gf = new SimpleGroupFactory(msg)
+      for ((id, us, uid, et, v, p) <- micros) {
+        val g = gf.newGroup()
+        g.add("event_id", id); g.add("ts", us * 1000L); g.add("user_id", uid)
+        g.add("event_type", et); g.add("value", v); g.add("props", p)
+        w.write(g)
+      }
+      w.close()
+    }
+  }
+
   test("events loader: identical output across NANOS / NTZ / LTZ physical ts shapes") {
     // The r9 bench lost 23/128 queries when the testdata's events.ts
     // switched parquet physical type (TIMESTAMP(NANOS)→µs/NTZ)
@@ -240,56 +298,7 @@ class SourcesSpec extends SparkTestBase {
 
     spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
     withTempDir { base =>
-      val micros = Seq(
-        (1L, 1700000000000000L, 10L, "view", 1.5, """{"k":1}"""),
-        (2L, 1700000001500000L, 11L, "click", 2.5, """{"k":2}"""),
-        (3L, 1700003600000000L, 10L, "view", 3.0, """{"k":3}"""))
-      val df = micros.toDF("event_id", "us", "user_id", "event_type", "value", "props")
-      val cols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
-
-      // LTZ micros (isAdjustedToUTC=true)
-      val prevOut = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
-      spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      try {
-        df.withColumn("ts", expr("timestamp_micros(us)"))
-          .select(cols.map(col): _*).coalesce(1).write.parquet(s"$base/ltz/events.parquet")
-        // NTZ micros (isAdjustedToUTC=false) — the current testdata shape
-        df.withColumn("ts", expr("timestamp_micros(us)").cast("timestamp_ntz"))
-          .select(cols.map(col): _*).coalesce(1).write.parquet(s"$base/ntz/events.parquet")
-      } finally prevOut match {
-        case Some(v) => spark.conf.set("spark.sql.parquet.outputTimestampType", v)
-        case None    => spark.conf.unset("spark.sql.parquet.outputTimestampType")
-      }
-
-      // TIMESTAMP(NANOS) — Spark cannot write it; use parquet-java direct
-      locally {
-        import org.apache.hadoop.conf.Configuration
-        import org.apache.hadoop.fs.Path
-        import org.apache.parquet.example.data.simple.SimpleGroupFactory
-        import org.apache.parquet.hadoop.example.ExampleParquetWriter
-        import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-        import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-        val msg = Types.buildMessage()
-          .addField(Types.required(INT64).named("event_id"))
-          .addField(Types.required(INT64)
-            .as(LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.NANOS))
-            .named("ts"))
-          .addField(Types.required(INT64).named("user_id"))
-          .addField(Types.required(BINARY).as(LogicalTypeAnnotation.stringType()).named("event_type"))
-          .addField(Types.required(DOUBLE).named("value"))
-          .addField(Types.required(BINARY).as(LogicalTypeAnnotation.stringType()).named("props"))
-          .named("spark_schema")
-        val w = ExampleParquetWriter.builder(new Path(s"$base/nanos/events.parquet"))
-          .withConf(new Configuration()).withType(msg).build()
-        val gf = new SimpleGroupFactory(msg)
-        for ((id, us, uid, et, v, p) <- micros) {
-          val g = gf.newGroup()
-          g.add("event_id", id); g.add("ts", us * 1000L); g.add("user_id", uid)
-          g.add("event_type", et); g.add("value", v); g.add("props", p)
-          w.write(g)
-        }
-        w.close()
-      }
+      writeEventShapes(base)
 
       // µs shapes load WITHOUT touching the legacy conf…
       val ltz = Tables.events(spark, s"$base/ltz")
@@ -315,6 +324,46 @@ class SourcesSpec extends SparkTestBase {
           .orderBy("ws").collect().toSeq
       val t = tumble(ltz)
       assert(t.size == 2 && tumble(ntz) == t && tumble(nanos) == t)
+    }
+  }
+
+  test("table loads declare the footer schema: no job, the schema Spark infers") {
+    import org.apache.spark.sql.DataFrame
+    val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+    // the load launches no job and declares the schema inference gives
+    def check(what: String, load: => DataFrame, path: String): Unit = {
+      var df: DataFrame = null
+      assert(jobsOf { df = load } == 0, s"$what: the load launched a job")
+      val inferred = spark.read.parquet(path).schema
+      assert(df.schema == inferred, s"$what:\n${df.schema.treeString}\n${inferred.treeString}")
+    }
+    for (t <- Seq("region", "nation", "customer", "supplier", "part", "orders",
+        "lineitem", "events", "documents", "embeddings"))
+      check(t, Tables.load(spark, sfDir, t), s"$sfDir/$t.parquet")
+
+    val prevNanos = spark.conf.getOption(nanosAsLong)
+    spark.conf.unset(nanosAsLong)
+    try withTempDir { base =>
+      writeEventShapes(base)
+      for (shape <- Seq("ltz", "ntz", "nanos")) {
+        val path = s"$base/$shape/events.parquet"
+        // the NANOS footer sets the conf inference needs to read it
+        assert(jobsOf(Tables.events(spark, s"$base/$shape")) == 0, shape)
+        check(shape, Tables.parquet(spark, path), path)
+      }
+      // a Spark-written directory: several part files, a _SUCCESS
+      // marker and .crc sidecars, and a timestamp_ntz column
+      val dir = s"$base/multi"
+      spark.range(0, 64, 1, 4)
+        .select(col("id"), (col("id") * 1.5).as("x"),
+          expr("timestamp_micros(1700000000000000 + id)").cast("timestamp_ntz").as("t"))
+        .write.parquet(dir)
+      val names = new java.io.File(dir).list().toSet
+      assert(names("_SUCCESS") && names.count(_.endsWith(".parquet")) > 1, names)
+      check("multi-file", Tables.parquet(spark, dir), dir)
+    } finally prevNanos match {
+      case Some(v) => spark.conf.set(nanosAsLong, v)
+      case None => spark.conf.unset(nanosAsLong)
     }
   }
 
