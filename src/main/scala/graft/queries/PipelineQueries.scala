@@ -1,9 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.TimeUnit
-
-import scala.concurrent.duration.FiniteDuration
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -255,20 +251,6 @@ object PipelineQueries {
       copyFree)
   }
 
-  /** The bound on one build's concurrent clustering branches: the
-    * session conf `graft.branchTimeoutMinutes`, default 15. A value
-    * that is not a positive whole number of minutes (at most the
-    * ~292 years a duration holds) fails here, naming the key, before
-    * the build launches any job. */
-  private[graft] def branchTimeout(s: SparkSession): FiniteDuration = {
-    val key = "graft.branchTimeoutMinutes"
-    val raw = s.conf.get(key, "15")
-    raw.trim.toLongOption.filter(m => m > 0 && m <= Long.MaxValue / 60000000000L)
-      .map(FiniteDuration(_, TimeUnit.MINUTES))
-      .getOrElse(throw new IllegalArgumentException(
-        s"$key must be a positive whole number of minutes, got '$raw'"))
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // C1 — exact dedup on content hash.
     "dedup_exact" -> { (s, d) =>
@@ -399,7 +381,6 @@ object PipelineQueries {
     // Dedup.minhashLshSampledPairs estimate instead (C108 contract;
     // bias magnitude recorded in GUARDBIAS_r15).
     "dedup_threshold_sensitivity" -> { (s, d) =>
-      val bound = branchTimeout(s)
       val pairs = Ckpt(Dedup.ngramJaccardPairs(corpus(s, d), "text",
           "doc_id", k = 5, minBp = 7000)
         .select(col("doc_a"), col("doc_b"), col("jaccard_bp")))
@@ -413,6 +394,7 @@ object PipelineQueries {
       // rows — and the union — are bit-identical to the sequential
       // form.
       import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration._
       import scala.concurrent.ExecutionContext.Implicits.global
       val branches = Seq(7000L, 8000L, 9000L).map { t => Future {
         val p = pairs.filter(col("jaccard_bp") >= t)
@@ -429,12 +411,11 @@ object PipelineQueries {
       // Duration.Inf a wedged branch hung the key with no diagnostic,
       // and a branch-1 failure surfaced only after (or while) branches
       // 2-3 kept running detached. Future.sequence fails fast on the
-      // FIRST failure regardless of branch order; the bound
-      // (`graft.branchTimeoutMinutes`, default 15, far past any local
-      // build) converts a deadlocked Spark job into a loud
-      // TimeoutException instead of a silent hang, and a cluster run
-      // whose correct branches take longer raises it.
-      Await.result(Future.sequence(branches), bound)
+      // FIRST failure regardless of branch order; the 15-minute bound
+      // is far past any sane build (the bench's own per-key patience)
+      // yet converts a deadlocked Spark job into a loud TimeoutException
+      // instead of a silent hang.
+      Await.result(Future.sequence(branches), 15.minutes)
         .reduce(_ unionByName _)
     },
 

@@ -719,27 +719,4 @@ class DedupSpec extends SparkTestBase {
       .as[(Long, Long)].collect().toMap
     assert(hist == Map(3L -> 2L, 2L -> 1L), s"got $hist")
   }
-
-  test("dedup_threshold_sensitivity: a bad graft.branchTimeoutMinutes fails fast, " +
-    "naming the key") {
-    import scala.concurrent.duration._
-    import graft.queries.PipelineQueries
-    val key = "graft.branchTimeoutMinutes"
-    assert(PipelineQueries.branchTimeout(spark) == 15.minutes)
-    try {
-      spark.conf.set(key, "90")
-      assert(PipelineQueries.branchTimeout(spark) == 90.minutes)
-      for (bad <- Seq("0", "-5", "ten", "", "1.5", "999999999999")) {
-        spark.conf.set(key, bad)
-        var err: IllegalArgumentException = null
-        // the build fails before its first job
-        assert(jobsOf {
-          err = intercept[IllegalArgumentException](
-            SparkEntry.queries("dedup_threshold_sensitivity")(spark, sfDir))
-        } == 0, bad)
-        assert(err.getMessage.contains(key) && err.getMessage.contains(s"'$bad'"),
-          err.getMessage)
-      }
-    } finally spark.conf.unset(key)
-  }
 }

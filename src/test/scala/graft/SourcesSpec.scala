@@ -291,7 +291,8 @@ class SourcesSpec extends SparkTestBase {
     // underneath the loader. This spec writes the SAME logical rows in
     // all three shapes the driver has ever generated and pins
     // Tables.events to one canonical output — and asserts the legacy
-    // nanosAsLong conf is flipped only on the NANOS rejection path.
+    // nanosAsLong conf is flipped only when the footer's ts is
+    // TIMESTAMP(NANOS).
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.types.TimestampType
     import spark.implicits._
@@ -305,7 +306,7 @@ class SourcesSpec extends SparkTestBase {
       val ntz = Tables.events(spark, s"$base/ntz")
       assert(spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").forall(_ == "false"),
         "loading µs-shaped events must not mutate session conf")
-      // …the NANOS shape is rejected at inference and flips it, scoped
+      // …a footer ts of TIMESTAMP(NANOS) flips it, scoped
       val nanos = Tables.events(spark, s"$base/nanos")
       assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
 
